@@ -94,7 +94,7 @@ object Pipeline {
       if (v == 0) {
         // first cycle creates the table (merge needs a base version);
         // statsCol makes every later merge read key-prunable
-        val tag = f"c$cycleId%05d_${java.util.UUID.randomUUID().toString.take(8)}"
+        val tag = f"c$cycleId%05d_${ST.uniqueTag()}"
         val data = changes.filter(col("op") =!= "d").drop("op")
         val entries = ST.writeDataFiles(data, root, tag)
           .map(ST.footerEntry(root, _, "user_id"))

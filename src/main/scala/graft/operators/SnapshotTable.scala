@@ -29,9 +29,14 @@ import graft.sources.Tables
   *     temp-file rename AFTER the manifest lands; it is a convenience
   *     pointer — the manifest files themselves are the source of truth
   *     (highest version wins if _latest lags a crashed committer);
-  *   - readers resolve version → manifest → `spark.read.parquet(files)`:
-  *     the plan scans an explicit immutable file list, so a concurrent
-  *     commit cannot tear it.
+  *   - readers resolve a version's manifest ONCE and plan every read as
+  *     a file selection over one read core (see [[scan]]): (1) scan the
+  *     chosen files with the version's reader (captured schema,
+  *     mergeSchema or plain), (2) optionally expose each row's (full
+  *     file path, ordinal) coordinate, (3) anti-join the deletion-vector
+  *     sidecars on it, (4) optionally resolve row ids — then map to the
+  *     logical view. The plan scans an explicit immutable file list, so
+  *     a concurrent commit cannot tear it.
   *
   * At 100 TB the manifest grows (one line per file), so the format also
   * carries what real formats (Iceberg manifest lists, Delta checkpoints
@@ -87,6 +92,13 @@ object SnapshotTable {
       * requests on object storage. None on pre-r19 entries (callers
       * fall back to one stat each). */
     def bytes: Option[Long] = extra.collectFirst { case (BytesCol, b, _) => b }
+    /** THE file-pruning test: whether this file's stats for `col`
+      * (see [[statsFor]]) can hold a value in [qlo, qhi]. Sentinel
+      * ranges always can, so pruning is never unsound. */
+    def overlaps(col: String, primaryCol: String, qlo: Long, qhi: Long): Boolean = {
+      val (l, h) = statsFor(col, primaryCol)
+      l <= qhi && h >= qlo
+    }
   }
 
   /** Reserved extra-stats field name carrying the file's byte size
@@ -522,7 +534,7 @@ object SnapshotTable {
     val entryLines =
       if (entries.size <= shardSize) entries.map(_.line)
       else entries.grouped(shardSize).zipWithIndex.map { case (g, i) =>
-        val rel = s"shard_${java.util.UUID.randomUUID().toString.take(8)}_$i.txt"
+        val rel = s"shard_${uniqueTag()}_$i.txt"
         Files.write(manifestDir(root).resolve(rel), g.map(_.line).mkString("\n").getBytes)
         ">" + rel
       }.toSeq
@@ -778,7 +790,7 @@ object SnapshotTable {
     // the CAS loser's cleanup would delete (or its write overwrite) the
     // winner's staged manifest between the winner's claim and its move
     val tmp = manifestDir(root).resolve(
-      f".v$v%05d.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+      f".v$v%05d.${uniqueTag()}.tmp")
     Files.write(tmp, lines.mkString("\n").getBytes)
     try
       // the CAS: createFile claims version v exclusively (fails if any
@@ -799,57 +811,201 @@ object SnapshotTable {
     v
   }
 
-  /** Read a pinned version — time travel, and the isolation guarantee:
-    * the file list is resolved ONCE; later commits add files and new
-    * manifests but never touch these. A version whose metadata carries
-    * a `schema` key holds files of MIXED widths (add-column evolution,
-    * x18): only then is parquet schema merging paid — resolving the
-    * union schema footer-reads every file at planning time, so an
-    * unevolved table (the overwhelmingly common case at 100 TB) keeps
-    * its single-footer planning cost. */
-  def readAt(s: SparkSession, root: String, v: Int): DataFrame =
-    // user-facing reads resolve the column mapping AS OF the snapshot
-    // (rename/drop evolution, see colMap): renamed columns surface
-    // under their logical names, dropped physicals disappear.
-    // An IDENTITY column (engine-assigned, = the row-tracking id)
-    // appends after the data columns — the id read already serves the
-    // whole logical view plus the resolved id, so the identity table's
-    // read IS the id read under the declared name.
-    identityCol(root, v) match {
-      case None => toLogical(readAtPhysical(s, root, v), colMap(root, v))
-      case Some(ic) =>
-        val df = readWithRowIdsAt(s, root, v)
-        require(!df.columns.exists(c => c.equalsIgnoreCase(ic) && c != "_row_id"),
-          s"snapshot read on $root: version $v resurfaces a data column named " +
-            s"$ic, colliding with the identity column — rename one")
-        val start = identityStart(root, v)
-        if (start == 0L) df.withColumnRenamed("_row_id", ic)
-        // declared START WITH: a read-side offset over the 0-based
-        // engine ids (position preserved — _row_id sits last, and so
-        // does the derived identity column)
-        else df.withColumn(ic, col("_row_id") + lit(start)).drop("_row_id")
-    }
+  // ---------------- THE READ CORE ------------------------------------
+  // Every read of table data — the public verbs, DML and maintenance
+  // inputs, the change feed — is a FILE SELECTION over one table state
+  // plus a residual filter, planned by [[scan]] in four steps:
+  //   1. scan the chosen entries with the state's reader: the captured
+  //      union (`schemaJson`), parquet mergeSchema for an evolved table
+  //      without a capture (`schema`), a plain one-footer read
+  //      otherwise; with row ids, the explicit schema of record plus
+  //      __row_id;
+  //   2. optionally expose each row's (file, ordinal) coordinate — the
+  //      file as its FULL normalized path ([[fileKey]]), never a base
+  //      name: converted and cloned tables reuse base names across
+  //      directories;
+  //   3. anti-join the deletion-vector sidecars on that coordinate —
+  //      only DV'd files pay the join, a DV-free selection is a plain
+  //      scan;
+  //   4. optionally resolve __row_id = coalesce(materialized id, file
+  //      base + ordinal).
+  // [[logicalScan]] then resolves the logical view (column mapping, the
+  // identity column). An empty selection plans an empty frame with the
+  // same columns instead of failing schema inference.
 
-  /** [[readAt]] WITHOUT the column-mapping resolution — the frame
-    * under the files' own (physical) names. Internal rewrite plumbing
-    * (DML, optimize, CDC emission) works physically and converts at
-    * its user-facing seams. */
-  private[graft] def readAtPhysical(s: SparkSession, root: String, v: Int): DataFrame = {
-    val rels = manifestEntries(root, v).map(_.rel)
-    if (rels.nonEmpty) readRelsDv(s, root, v, rels)
-    else {
-      // a ZERO-ENTRY version (a delete that matched every row) is a
-      // valid table state, not a brick: the deleting commit captured
-      // the schema (`schemaJson`), so readers plan an empty frame with
-      // the right columns instead of failing schema inference
-      val js = manifestMeta(root, v).getOrElse("schemaJson",
-        throw new IllegalStateException(s"snapshot read on $root: version $v has no " +
-          "file entries and no schema capture — unreadable empty state"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(js)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** One readable table state: a committed version's entries and
+    * metadata, or a branch head (its staged entries over the base's
+    * carried state). */
+  private final case class TableState(root: String, v: Int,
+      meta: Map[String, String], entries: Seq[FileEntry]) {
+    def colMap: Option[Seq[(String, String)]] = meta.get("colmap").map(parseColMap)
+    lazy val dv: Map[String, String] = dvOf(meta)
+  }
+
+  private def stateAt(root: String, v: Int): TableState =
+    TableState(root, v, manifestMeta(root, v), manifestEntries(root, v))
+
+  /** Coordinate columns of a [[scan]]: the row's data file (its
+    * [[fileKey]]) and its ordinal within that file. */
+  private val FileCol = "__file"
+  private val IdxCol = "__idx"
+
+  /** A table file's coordinate key: its absolute, normalized path
+    * (a shallow clone's `../` rels resolve into the source table). */
+  private def fileKey(root: String, rel: String): String =
+    Paths.get(root, rel).toAbsolutePath.normalize.toString
+
+  /** The same key computed in-plan from a scan's file URI
+    * (`_metadata.file_path` or `input_file_name()`): scheme and
+    * authority stripped and percent-escapes decoded — the path
+    * `java.net.URI.getPath` yields — with a literal '+' escaped first
+    * so url_decode's form decoding cannot turn it into a space. */
+  private def fileKey(uri: Column): Column =
+    url_decode(regexp_replace(
+      regexp_replace(uri, "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", ""), "\\+", "%2B"))
+
+  /** The state's physical schema of record: the captured union when
+    * one exists, else the files' own — one footer on a uniform table,
+    * every footer (metadata only) on an evolved one. */
+  private def recordSchema(s: SparkSession, st: TableState)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    st.meta.get("schemaJson") match {
+      case Some(js) => DataType.fromJson(js).asInstanceOf[StructType]
+      case None =>
+        // a ZERO-ENTRY version (a delete that matched every row) is a
+        // valid table state: its deleting commit captured the schema
+        if (st.entries.isEmpty) throw new IllegalStateException(
+          s"snapshot read on ${st.root}: version ${st.v} has no file entries " +
+            "and no schema capture — unreadable empty state")
+        val probe = if (st.meta.contains("schema")) st.entries else st.entries.take(1)
+        inferringReader(s, st)
+          .parquet(probe.map(e => Paths.get(st.root, e.rel).toString): _*).schema
     }
   }
+
+  private def inferringReader(s: SparkSession, st: TableState) =
+    if (st.meta.contains("schema")) s.read.option("mergeSchema", "true") else s.read
+
+  /** Steps 1-4 of the core over `files` of `st`, in PHYSICAL names.
+    * `coords` keeps the [[FileCol]]/[[IdxCol]] coordinate columns;
+    * `rowIds` resolves [[RowIdCol]] (last column). */
+  private def scan(s: SparkSession, st: TableState, files: Seq[FileEntry],
+      coords: Boolean = false, rowIds: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    // an explicit read schema: the schema of record plus __row_id for
+    // an id read (null-filled in positional files), the capture for a
+    // captured table; None infers from the files
+    val schema: Option[StructType] =
+      if (rowIds) Some(StructType(recordSchema(s, st).fields
+        .filterNot(_.name == RowIdCol).map(_.copy(nullable = true)) :+
+        StructField(RowIdCol, LongType, nullable = true)))
+      else if (st.meta.contains("schemaJson")) Some(recordSchema(s, st))
+      else None
+    if (files.isEmpty) {
+      val cols = schema.getOrElse(recordSchema(s, st))
+      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        if (coords) cols.add(FileCol, StringType).add(IdxCol, LongType) else cols)
+    }
+    val reader = schema.fold(inferringReader(s, st))(s.read.schema)
+    val withCoords = coords || rowIds
+    def read(fs: Seq[FileEntry], located: Boolean): DataFrame = {
+      val df = reader.parquet(fs.map(e => Paths.get(st.root, e.rel).toString): _*)
+      if (!located) df
+      else df.withColumn(FileCol, fileKey(col("_metadata.file_path")))
+        .withColumn(IdxCol, col("_metadata.row_index"))
+    }
+    val (dvd, clean) = files.partition(e => st.dv.contains(e.rel))
+    val live = (if (clean.isEmpty) Nil else Seq(read(clean, withCoords))) ++
+      (if (dvd.isEmpty) Nil else {
+        val kept = read(dvd, located = true)
+          .join(broadcast(dvOrdinals(s, st, dvd)), Seq(FileCol, IdxCol), "left_anti")
+        Seq(if (withCoords) kept else kept.drop(FileCol, IdxCol))
+      })
+    val df = live.reduce(_.unionByName(_, allowMissingColumns = true))
+    if (!rowIds) df
+    else {
+      import s.implicits._
+      val bases = rowBasesOf(st.meta).toSeq
+        .map { case (r, b) => (fileKey(st.root, r), b) }.toDF(FileCol, "__rt_base")
+      val keep = df.columns.filterNot(c => c == RowIdCol ||
+        (!coords && (c == FileCol || c == IdxCol)))
+      df.join(broadcast(bases), Seq(FileCol), "left")
+        .select((keep.map(col) :+
+          coalesce(col(RowIdCol), col("__rt_base") + col(IdxCol)).as(RowIdCol)).toIndexedSeq: _*)
+    }
+  }
+
+  /** The deleted (file, ordinal) coordinates of `files` (each carrying
+    * a deletion vector in `st`): ONE parquet relation over their
+    * sidecars, each row tagged with its data file's key through a tiny
+    * broadcast join on the sidecar's own path. */
+  private def dvOrdinals(s: SparkSession, st: TableState,
+      files: Seq[FileEntry]): DataFrame = {
+    import s.implicits._
+    val pairs = files.map(_.rel).distinct.sorted.map(r => (st.dv(r), r))
+    s.read.parquet(pairs.map(p => Paths.get(st.root, p._1).toString).distinct: _*)
+      .withColumn("__dv_side", fileKey(col("_metadata.file_path")))
+      .join(broadcast(pairs.map { case (d, r) => (fileKey(st.root, d), fileKey(st.root, r)) }
+        .toDF("__dv_side", FileCol)), "__dv_side")
+      .select(col("idx").as(IdxCol), col(FileCol))
+  }
+
+  /** The core's LOGICAL view of a file selection: column mapping
+    * resolved and, on an identity table, the identity column appended
+    * after the data columns (the row id under the declared name, plus
+    * any START WITH offset). `ids` serves the raw `_row_id` instead. */
+  private def logicalScan(s: SparkSession, st: TableState, files: Seq[FileEntry],
+      ids: Boolean = false): DataFrame = {
+    val identity = if (ids) None else st.meta.get("identity")
+    if (!ids && identity.isEmpty) toLogical(scan(s, st, files), st.colMap)
+    else {
+      val df = toLogical(scan(s, st, files, rowIds = true),
+        Some(st.colMap.toSeq.flatten :+ ("_row_id" -> RowIdCol)))
+      identity.fold(df) { ic =>
+        require(!df.columns.exists(c => c.equalsIgnoreCase(ic) && c != "_row_id"),
+          s"snapshot read on ${st.root}: version ${st.v} resurfaces a data column " +
+            s"named $ic, colliding with the identity column — rename one")
+        val start = st.meta.get("idstart").map(_.toLong).getOrElse(0L)
+        if (start == 0L) df.withColumnRenamed("_row_id", ic)
+        // declared START WITH: a read-side offset over the 0-based
+        // engine ids (position preserved — the id column sits last)
+        else df.withColumn(ic, col("_row_id") + lit(start)).drop("_row_id")
+      }
+    }
+  }
+
+  /** Read a pinned version — time travel, and the isolation guarantee:
+    * the file list is resolved ONCE; later commits add files and new
+    * manifests but never touch these. Renamed columns surface under
+    * their logical names AS OF the snapshot, dropped physicals
+    * disappear, and an IDENTITY column appends after the data
+    * columns. */
+  def readAt(s: SparkSession, root: String, v: Int): DataFrame = {
+    val st = stateAt(root, v)
+    logicalScan(s, st, st.entries)
+  }
+
+  def read(s: SparkSession, root: String): DataFrame =
+    readAt(s, root, currentVersion(root))
+
+  /** [[readAt]] WITHOUT the logical view — the frame under the files'
+    * own (physical) names. Internal rewrite plumbing (DML, optimize,
+    * CDC emission) works physically and converts at its user-facing
+    * seams. */
+  private[graft] def readAtPhysical(s: SparkSession, root: String, v: Int): DataFrame = {
+    val st = stateAt(root, v)
+    scan(s, st, st.entries)
+  }
+
+  /** The surviving rows of `files` at version `v` in PHYSICAL names,
+    * deletion vectors applied — the rewrite input of DML and
+    * maintenance. With `rowIds` each row carries its resolved
+    * [[RowIdCol]], so a rewrite that writes the frame through
+    * materializes every id it carries forward. */
+  private[graft] def readFiles(s: SparkSession, root: String, v: Int,
+      files: Seq[FileEntry], rowIds: Boolean = false): DataFrame =
+    scan(s, stateAt(root, v), files, rowIds = rowIds)
 
   /** COLUMN MAPPING (Delta's rename/drop evolution): the manifest's
     * `colmap` meta (`logical=physical,...`, ordered — it IS the
@@ -1173,11 +1329,7 @@ object SnapshotTable {
   def renameColumn(s: SparkSession, root: String, from: String, to: String): Int = {
     if (from.contains(".")) return renameField(s, root, from, to)
     validateIdent(root, "rename", to)
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"rename on $root: table has no committed version")
       val cur = currentColMap(s, root, v, "rename")
       require(cur.exists(_._1 == from),
@@ -1213,12 +1365,10 @@ object SnapshotTable {
         case Some(dk) => carried0 - dk + (s"default.$to" -> carried0(dk))
         case None => carried0
       }
-      try result = commitEntries(root, v, manifestEntries(root, v), shardSize = 16,
+      commitEntries(root, v, manifestEntries(root, v), shardSize = 16,
         carried + ("colmap" -> fmtColMap(next)) +
           ("alter" -> s"rename:$from>$to"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
-    result
   }
 
   /** Parse + guard a dotted struct-field path at the ALTER surface:
@@ -1286,11 +1436,7 @@ object SnapshotTable {
     val (parentPath, field) = nestedParts(root, "rename", from)
     val parent = parentPath.mkString(".")
     validateIdent(root, "rename", to)
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"rename on $root: table has no committed version")
       val cur = currentColMap(s, root, v, "rename")
       requireNoConstraintRef(s, root, v, "rename", from)
@@ -1318,12 +1464,10 @@ object SnapshotTable {
             case None => node.children
           })
       }
-      try result = commitEntries(root, v, manifestEntries(root, v), shardSize = 16,
+      commitEntries(root, v, manifestEntries(root, v), shardSize = 16,
         carriedMeta(root, v) + ("colmap" -> fmtColMap(next)) +
           ("alter" -> s"rename:$from>$parent.$to"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
-    result
   }
 
   /** ALTER TABLE ... DROP COLUMN — removes the mapping entry; the
@@ -1335,11 +1479,7 @@ object SnapshotTable {
   def dropColumn(s: SparkSession, root: String, name: String): Int = {
     if (name.contains(".")) return dropField(s, root, name)
     validateIdent(root, "drop column", name)
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"drop column on $root: table has no committed version")
       val cur = currentColMap(s, root, v, "drop column")
       require(cur.exists(_._1 == name),
@@ -1360,12 +1500,10 @@ object SnapshotTable {
       val carried0 = carriedMeta(root, v)
       val carried = carried0.keys.find(_.equalsIgnoreCase(s"default.$name"))
         .fold(carried0)(carried0 - _)
-      try result = commitEntries(root, v, manifestEntries(root, v), shardSize = 16,
+      commitEntries(root, v, manifestEntries(root, v), shardSize = 16,
         carried + ("colmap" -> fmtColMap(next)) +
           ("alter" -> s"dropcol:$name"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
-    result
   }
 
   /** ALTER TABLE ... DROP COLUMN a.b[.c...] — NESTED field drop at
@@ -1379,11 +1517,7 @@ object SnapshotTable {
   private def dropField(s: SparkSession, root: String, name: String): Int = {
     val (parentPath, field) = nestedParts(root, "drop column", name)
     val parent = parentPath.mkString(".")
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"drop column on $root: table has no committed version")
       val cur = currentColMap(s, root, v, "drop column")
       requireNoConstraintRef(s, root, v, "drop column", name)
@@ -1397,12 +1531,10 @@ object SnapshotTable {
             "drop the whole column instead")
         ColNode(nf.filterNot(_._1 == field), node.children - field)
       }
-      try result = commitEntries(root, v, manifestEntries(root, v), shardSize = 16,
+      commitEntries(root, v, manifestEntries(root, v), shardSize = 16,
         carriedMeta(root, v) + ("colmap" -> fmtColMap(next)) +
           ("alter" -> s"dropcol:$name"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
-    result
   }
 
   /** `ALTER TABLE ... ALTER COLUMN <c> TYPE <wider>` — TYPE WIDENING
@@ -1422,11 +1554,7 @@ object SnapshotTable {
     val allowed: Map[DataType, Set[DataType]] = Map(
       IntegerType -> Set[DataType](LongType, DoubleType),
       FloatType -> Set[DataType](DoubleType))
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"widen on $root: table has no committed version")
       val map = colMap(root, v)
       val physName = physicalName(map, name)
@@ -1442,7 +1570,7 @@ object SnapshotTable {
         s"widen on $root: no column $name (have " +
           s"${base.fieldNames.map(p => logicalName(map, p)).mkString(",")})")
       val from = base(physName).dataType
-      if (from == to) result = v // already wide enough: no-op
+      if (from == to) v // already wide enough: no-op
       else {
         require(allowed.get(from).exists(_.contains(to)),
           s"widen on $root: $name is $from and $to is not a supported metadata-only " +
@@ -1479,13 +1607,11 @@ object SnapshotTable {
           else f.copy(nullable = true)))
         val widenList = (carried.get("widen").map(_ + ",").getOrElse("") +
           s"$physName:${from.simpleString}>${to.simpleString}")
-        try result = commitEntries(root, v, manifestEntries(root, v), 16,
+        commitEntries(root, v, manifestEntries(root, v), 16,
           carried + ("schemaJson" -> widened.json) + ("widen" -> widenList) +
             ("alter" -> s"widen:$name:${from.simpleString}>${to.simpleString}"))
-        catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
       }
     }
-    result
   }
 
   /** Guard for names SYNTHESIZED into the colmap from RESIDENT file
@@ -1544,8 +1670,10 @@ object SnapshotTable {
     * away, vacuum keeps a sidecar alive exactly as long as a retained
     * manifest references it. */
   private[graft] def dvState(root: String, v: Int): Map[String, String] =
-    if (v == 0) Map.empty
-    else manifestMeta(root, v).get("dv").map(_.split(';').map { e =>
+    if (v == 0) Map.empty else dvOf(manifestMeta(root, v))
+
+  private def dvOf(meta: Map[String, String]): Map[String, String] =
+    meta.get("dv").map(_.split(';').map { e =>
       val Array(rel, dvRel) = e.split("=", 2); (rel, dvRel)
     }.toMap).getOrElse(Map.empty)
 
@@ -1574,24 +1702,18 @@ object SnapshotTable {
     * zero-match DML). */
   def setTableFlags(root: String, sets: Map[String, String],
       unsets: Seq[String] = Nil): Int = {
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"setTableFlags on $root: table has no committed version — " +
         "commit data first, then set the flags")
       val cur = carriedMeta(root, v)
       val already = sets.forall { case (k, w) => cur.get(k).contains(w) } &&
         unsets.forall(k => !cur.contains(k))
-      if (already) result = v
-      else try result = commitEntries(root, v, manifestEntries(root, v), 16,
+      if (already) v
+      else commitEntries(root, v, manifestEntries(root, v), 16,
         cur ++ sets -- unsets +
           ("alter" -> ("props:" + (sets.toSeq.sorted.map { case (k, w) => s"$k=$w" } ++
             unsets.sorted.map(k => s"-$k")).mkString(","))))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
-    result
   }
 
   // ---------------- MANIFEST-LOG CHECKPOINT (r20) --------------------
@@ -1660,7 +1782,7 @@ object SnapshotTable {
         catch { case _: java.nio.file.NoSuchFileException => None }
       }
       val tmp = manifestDir(root).resolve(
-        s".ckpt_${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+        s".ckpt_${uniqueTag()}.tmp")
       Files.write(tmp, (prevRows ++ fresh).mkString("\n").getBytes)
       Files.move(tmp, ckptPath(root, v), StandardCopyOption.REPLACE_EXISTING,
         StandardCopyOption.ATOMIC_MOVE)
@@ -1735,11 +1857,7 @@ object SnapshotTable {
     // name would otherwise both pass a pre-loop check and the loser's
     // retry would silently re-point the winner's live ref (the same
     // re-verification discipline commitRewrite applies to DV state)
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    val result = casCommit(root) { v =>
       val curMeta = carriedMeta(root, v)
       require(!branchesOf(curMeta).contains(name),
         s"createTag on $root: '$name' is a live BRANCH — refs share one namespace")
@@ -1748,11 +1866,10 @@ object SnapshotTable {
         s"createTag on $root: tag '$name' already points at version " +
           s"${existing.get} — DROP TAG it first; re-pointing a live ref " +
           "would invalidate whatever pinned the name")
-      if (existing.contains(target)) result = v
-      else try result = commitEntries(root, v, manifestEntries(root, v), 16,
+      if (existing.contains(target)) v
+      else commitEntries(root, v, manifestEntries(root, v), 16,
         curMeta + (TagKey + name -> target.toString) +
           ("alter" -> s"tag:$name=v$target"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
     // a VACUUM planned before this tag committed may still reclaim the
     // target (vacuum never commits, so CAS cannot order the two) —
@@ -1891,11 +2008,7 @@ object SnapshotTable {
     require(target >= 1 && target <= cur,
       s"createBranch on $root: version $target is not a committed version (1..$cur)")
     manifestEntries(root, target) // force the reader gate + existence
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    val result = casCommit(root) { v =>
       val curMeta = carriedMeta(root, v)
       require(!tagsOf(curMeta).contains(name),
         s"createBranch on $root: '$name' is a live TAG — refs share one namespace")
@@ -1903,11 +2016,10 @@ object SnapshotTable {
       require(existing.forall(_ == target),
         s"createBranch on $root: branch '$name' already exists at base " +
           s"${existing.get} — DROP BRANCH it first")
-      if (existing.contains(target)) result = v
-      else try result = commitEntries(root, v, manifestEntries(root, v), 16,
+      if (existing.contains(target)) v
+      else commitEntries(root, v, manifestEntries(root, v), 16,
         curMeta + (BranchKey + name -> target.toString) +
           ("alter" -> s"branch:$name=v$target"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
     // same residual-race discipline as createTag: verify the base is
     // still resident after the ref committed, roll back loudly if not
@@ -1950,7 +2062,7 @@ object SnapshotTable {
       val map = meta.get("colmap").map(parseColMap)
       val checked = enforceChecks(df, checksOf(meta), s"branch $name append")
       val phys = toPhysical(checked, map)
-      val tag = java.util.UUID.randomUUID().toString.take(8)
+      val tag = uniqueTag()
       val rels = writeDataFiles(phys, root, s"br_${name}_$tag")
       // a stats-less table harvests under a name no footer carries —
       // primary stats read the sentinel; the per-column extras (r20)
@@ -1966,7 +2078,7 @@ object SnapshotTable {
           (entries ++ newEntries).map(_.line)
       val slot = branchManifestPath(root, name, head + 1)
       val tmp = manifestDir(root).resolve(
-        s".branch_${name}_${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+        s".branch_${name}_${uniqueTag()}.tmp")
       Files.write(tmp, lines.mkString("\n").getBytes)
       try {
         Files.createFile(slot)
@@ -2009,8 +2121,7 @@ object SnapshotTable {
     * base apply; staged files are plain appends. */
   def readBranch(s: SparkSession, root: String, name: String): DataFrame = {
     val (entries, meta, base) = branchState(root, name)
-    toLogical(readRelsDv(s, root, base, entries.map(_.rel)),
-      meta.get("colmap").map(parseColMap))
+    logicalScan(s, TableState(root, base, meta, entries), entries)
   }
 
   /** PUBLISH (Iceberg's fast_forward): commit the branch head's entry
@@ -2134,14 +2245,10 @@ object SnapshotTable {
     * mapping when none exists (the mapping is what hides materialized
     * id columns from plain reads). */
   def enableRowTracking(s: SparkSession, root: String): Int = {
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"row tracking on $root: table has no committed version")
       val carried = carriedMeta(root, v)
-      if (carried.get("rowtracking").contains("on")) result = v // idempotent
+      if (carried.get("rowtracking").contains("on")) v // idempotent
       else {
         val entries = manifestEntries(root, v)
         require(entries.forall(_.rows >= 0),
@@ -2153,13 +2260,11 @@ object SnapshotTable {
           case Some(_) => Map.empty[String, String]
           case None => Map("colmap" -> fmtColMap(currentColMap(s, root, v, "row tracking")))
         }
-        try result = commitEntries(root, v, entries, 16,
+        commitEntries(root, v, entries, 16,
           carried ++ mapMeta + ("rowtracking" -> "on") +
             ("alter" -> "rowtracking:on"))
-        catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
       }
     }
-    result
   }
 
   /** IDENTITY COLUMN (Delta's `GENERATED ALWAYS AS IDENTITY`, r15):
@@ -2179,18 +2284,14 @@ object SnapshotTable {
       start: Long = 0L): Int = {
     validateIdent(root, "identity column", name)
     enableRowTracking(s, root)
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       val carried = carriedMeta(root, v)
       carried.get("identity") match {
         case Some(cur) if cur == name =>
           require(identityStart(root, v) == start,
             s"identity column on $root: $name is already declared with " +
               s"START WITH ${identityStart(root, v)} — the start cannot change")
-          result = v // idempotent
+          v // idempotent
         case Some(cur) => throw new IllegalArgumentException(
           s"identity column on $root: the table already has identity column " +
             s"$cur — one per table")
@@ -2207,13 +2308,11 @@ object SnapshotTable {
           // START WITH is user-facing surface.
           val startMeta = if (start == 0L) Map.empty[String, String]
             else Map("idstart" -> start.toString)
-          try result = commitEntries(root, v, manifestEntries(root, v), 16,
+          commitEntries(root, v, manifestEntries(root, v), 16,
             carried ++ startMeta + ("identity" -> name) +
               ("alter" -> s"identity:$name"))
-          catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
       }
     }
-    result
   }
 
   /** The table's identity column at version `v`, if declared. */
@@ -2293,11 +2392,7 @@ object SnapshotTable {
   def setColumnDefault(s: SparkSession, root: String, name: String,
       sqlExpr: String): Int = {
     validateIdent(root, "set default", name)
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"set default on $root: table has no committed version")
       val schema = readAt(s, root, v).schema
       require(schema.fieldNames.exists(_.equalsIgnoreCase(name)),
@@ -2323,29 +2418,21 @@ object SnapshotTable {
           .child.foldable,
         s"set default on $root: DEFAULT ($sqlExpr) for $canon is not a constant " +
           "expression — for a per-row derivation use a GENERATED column")
-      try result = commitEntries(root, v, manifestEntries(root, v), 16,
+      commitEntries(root, v, manifestEntries(root, v), 16,
         carriedMeta(root, v) + (s"default.$canon" -> sqlExpr) +
           ("alter" -> s"default:$canon"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
-    result
   }
 
   def dropColumnDefault(root: String, name: String): Int = {
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"drop default on $root: table has no committed version")
       val canon = columnDefaults(root, v).keys.find(_.equalsIgnoreCase(name))
         .getOrElse(throw new IllegalArgumentException(
           s"drop default on $root: column $name has no DEFAULT"))
-      try result = commitEntries(root, v, manifestEntries(root, v), 16,
+      commitEntries(root, v, manifestEntries(root, v), 16,
         carriedMeta(root, v) - s"default.$canon" + ("alter" -> s"dropdefault:$canon"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
-    result
   }
 
   /** CREATE-time defaults park like the identity declaration (the
@@ -2407,82 +2494,10 @@ object SnapshotTable {
     readWithRowIdsAt(s, root, currentVersion(root))
 
   private[graft] def readWithRowIdsAt(s: SparkSession, root: String, v: Int): DataFrame = {
-    val meta = manifestMeta(root, v)
-    require(meta.get("rowtracking").contains("on"),
+    val st = stateAt(root, v)
+    require(st.meta.get("rowtracking").contains("on"),
       s"readWithRowIds on $root: row tracking is not enabled (enableRowTracking)")
-    val entries = manifestEntries(root, v)
-    val map = colMap(root, v)
-    if (entries.isEmpty)
-      // build from the physical read directly — readAt on an IDENTITY
-      // table routes back here (its read IS the id read), so calling
-      // it from the empty-entries case would recurse forever on an
-      // identity table whose current version has zero entries
-      // (declare identity, then DELETE every row)
-      return toLogical(readAtPhysical(s, root, v), map)
-        .withColumn("_row_id", lit(null).cast("long"))
-    val phys = relsWithIds(s, root, v, entries.map(_.rel))
-    // resolve the logical view through toLogical (the one decode point
-    // — nested struct-field mappings included) with the id column
-    // appended as one more mapped entry, so the id read serves exactly
-    // the plain read's columns plus `_row_id`
-    toLogical(phys, Some(map.toSeq.flatten :+ ("_row_id" -> RowIdCol)))
-  }
-
-  /** The rewrite-input (and row-id read) workhorse: the given files'
-    * surviving rows in PHYSICAL namespace plus a fully-resolved
-    * [[RowIdCol]] column — coalesce(materialized __row_id, base +
-    * row_index), deletion vectors anti-filtered BEFORE the position is
-    * read. A rewrite that writes this frame through therefore
-    * materializes every id it carries forward. */
-  private[graft] def relsWithIds(s: SparkSession, root: String, v: Int,
-      rels: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{element_at, split => fsplit}
-    val bases = rowBases(root, v)
-    val dv = dvState(root, v)
-    val basesDf = {
-      import s.implicits._
-      broadcast(bases.toSeq.map { case (r, b) =>
-        (Paths.get(r).getFileName.toString, b) }.toDF("__rt_file", "__rt_base"))
-    }
-    val mat = rowMatOf(manifestMeta(root, v))
-    val (withIds, plain) = rels.partition(mat.contains)
-    def scan(rs: Seq[String], materialized: Boolean): Option[DataFrame] =
-      if (rs.isEmpty) None else {
-        val paths = rs.map(r => Paths.get(root, r).toString)
-        // materialized files read under the TABLE's physical schema of
-        // record PLUS __row_id — an explicit schema, so a mixed-width
-        // subset upcasts in-slot exactly like the capture path (footer
-        // inference would refuse int-vs-long merges), and a
-        // metadata-added column null-fills instead of silently
-        // vanishing (r14 review)
-        val df0 =
-          if (!materialized) subsetReader(s, root, v).parquet(paths: _*)
-          else {
-            val phys = readAtPhysical(s, root, v).schema
-            val schema = org.apache.spark.sql.types.StructType(
-              phys.fields.filterNot(_.name == RowIdCol).map(_.copy(nullable = true)) :+
-                org.apache.spark.sql.types.StructField(RowIdCol,
-                  org.apache.spark.sql.types.LongType, nullable = true))
-            s.read.schema(schema).parquet(paths: _*)
-          }
-        val withPos = df0
-          .withColumn("__rt_file", element_at(fsplit(col("_metadata.file_path"), "/"), -1))
-          .withColumn("__rt_idx", col("_metadata.row_index"))
-        val rsDv = rs.filter(dv.contains)
-        val filtered = dvSidecars(s, root, dv, rsDv, "__rt_idx", "__rt_file") match {
-          case None => withPos
-          case Some(pairs) =>
-            withPos.join(broadcast(pairs), Seq("__rt_file", "__rt_idx"), "left_anti")
-        }
-        val joined = filtered.join(basesDf, Seq("__rt_file"), "left")
-        val idCol = if (materialized)
-          coalesce(col(RowIdCol), col("__rt_base") + col("__rt_idx"))
-        else col("__rt_base") + col("__rt_idx")
-        val keep = df0.columns.filterNot(_ == RowIdCol).toIndexedSeq
-        Some(joined.select((keep.map(col) :+ idCol.as(RowIdCol)): _*))
-      }
-    Seq(scan(plain, materialized = false), scan(withIds, materialized = true))
-      .flatten.reduce(_ unionByName(_, allowMissingColumns = true))
+    logicalScan(s, st, st.entries, ids = true)
   }
 
   /** The ONE SET/UNSET TBLPROPERTIES policy, shared by the catalog
@@ -2623,11 +2638,7 @@ object SnapshotTable {
     require(!refs.exists(_.equalsIgnoreCase(name)),
       s"set generated on $root: expression for $name references the column " +
         "itself — generation expressions derive from OTHER columns")
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"set generated on $root: table has no committed version")
       val cur = genExprs(root, v)
       cur.keys.find(_.equalsIgnoreCase(name)).foreach(g =>
@@ -2676,31 +2687,23 @@ object SnapshotTable {
       require(bad.isEmpty,
         s"set generated on $root: existing row violates $canon AS ($exprSql): " +
           s"${bad.headOption.getOrElse("")} — backfill the column first")
-      try result = commitEntries(root, v, manifestEntries(root, v), 16,
+      commitEntries(root, v, manifestEntries(root, v), 16,
         carriedMeta(root, v) + (s"gen.$canon" -> exprSql) +
           ("alter" -> s"addgen:$canon"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
-    result
   }
 
   /** Detach a generation expression (the column stays, with its
     * materialized values — it just stops being derived/enforced). */
   def dropGeneratedExpr(root: String, name: String): Int = {
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"drop generated on $root: table has no committed version")
       val canon = genExprs(root, v).keys.find(_.equalsIgnoreCase(name)).getOrElse(
         throw new IllegalArgumentException(
           s"drop generated on $root: column $name has no generation expression"))
-      try result = commitEntries(root, v, manifestEntries(root, v), 16,
+      commitEntries(root, v, manifestEntries(root, v), 16,
         carriedMeta(root, v) - s"gen.$canon" + ("alter" -> s"dropgen:$canon"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
-    result
   }
 
   /** Compute any generated columns `df` OMITS (Delta's write-side
@@ -2783,11 +2786,7 @@ object SnapshotTable {
     require(!exprSql.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"add constraint on $root: the expression may not contain tabs/newlines " +
         "(manifest metadata is line-oriented)")
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"add constraint on $root: table has no committed version")
       val cur = checkConstraints(root, v)
       require(!cur.contains(name),
@@ -2799,12 +2798,10 @@ object SnapshotTable {
       require(bad.isEmpty,
         s"add constraint on $root: existing row violates CHECK ($exprSql): " +
           s"${bad.headOption.getOrElse("")} — clean the data first")
-      try result = commitEntries(root, v, manifestEntries(root, v), 16,
+      commitEntries(root, v, manifestEntries(root, v), 16,
         carriedMeta(root, v) + (s"check.$name" -> exprSql) +
           ("alter" -> s"addcheck:$name"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
     }
-    result
   }
 
   /** `ALTER TABLE ... DROP CONSTRAINT name` — metadata-only removal. */
@@ -2815,124 +2812,23 @@ object SnapshotTable {
     require(!name.startsWith("gen:"),
       s"drop constraint on $root: $name is a generated-column invariant — " +
         s"use dropGeneratedExpr / UNSET TBLPROPERTIES ('gen.${name.stripPrefix("gen:")}')")
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
-      retry.observed(v)
+    casCommit(root) { v =>
       require(v > 0, s"drop constraint on $root: table has no committed version")
       require(checkConstraints(root, v).contains(name),
         s"drop constraint on $root: no constraint $name")
-      try result = commitEntries(root, v, manifestEntries(root, v), 16,
+      commitEntries(root, v, manifestEntries(root, v), 16,
         carriedMeta(root, v) - s"check.$name" + ("alter" -> s"dropcheck:$name"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
-    }
-    result
-  }
-
-  /** DV-aware subset read (PHYSICAL names): files without a deletion
-    * vector read on the plain path; files with one read alongside
-    * `_metadata` and anti-join their (file, ordinal) pairs against the
-    * sidecar contents — the sidecars total exactly the deleted rows,
-    * so the anti-join broadcasts. Join key is the file BASENAME (rels
-    * are uuid-tagged and unique within a table). Zero overhead when
-    * the version has no DVs (the overwhelmingly common case). */
-  /** ONE parquet relation over the sidecars of `rels` (those with an
-    * entry in `dv`), emitting (`idxName`, `fileName` = data-file base
-    * name) — the frame every DV exclusion anti-join broadcasts. The
-    * sidecar file name → data-file base mapping is recovered through a
-    * tiny broadcast join on `_metadata.file_path`. Replaces the
-    * one-relation-PER-sidecar unionByName reduce the read/MoR paths
-    * used to build: per-relation plan cost (file status, footer,
-    * analysis) grows with the DV'd file count and is pure driver-side
-    * wait — same rows, same anti-join semantics. None when no rel
-    * carries a sidecar. */
-  private def dvSidecars(s: SparkSession, root: String,
-      dv: Map[String, String], rels: Seq[String],
-      idxName: String, fileName: String): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{element_at, split => fsplit}
-    import s.implicits._
-    // sidecar rels may carry subpath components (a shallow clone
-    // references the source's sidecars through its rel), so the READ
-    // path keeps the full rel; the join key is the sidecar's base name
-    // (what _metadata.file_path yields), unique by uuid tag
-    val pairs = rels.distinct.sorted.flatMap(r => dv.get(r).map(dvRel =>
-      (dvRel, Paths.get(r).getFileName.toString)))
-    if (pairs.isEmpty) None
-    else Some(s.read.parquet(pairs.map(p => Paths.get(root, p._1).toString): _*)
-      .withColumn("__dv_side", element_at(fsplit(col("_metadata.file_path"), "/"), -1))
-      .join(broadcast(pairs.map(p =>
-          (Paths.get(p._1).getFileName.toString, p._2)).toDF("__dv_side", fileName)),
-        "__dv_side")
-      .select(col("idx").as(idxName), col(fileName)))
-  }
-
-  private[graft] def readRelsDv(s: SparkSession, root: String, v: Int,
-      rels: Seq[String]): DataFrame = {
-    val dv = dvState(root, v)
-    val paths = rels.map(r => Paths.get(root, r).toString)
-    val withDv = rels.filter(dv.contains)
-    if (withDv.isEmpty) subsetReader(s, root, v).parquet(paths: _*)
-    else {
-      import org.apache.spark.sql.functions.{element_at, split => fsplit}
-      // ONLY the DV'd files pay the anti-join; the rest stay a plain
-      // scan (measured 7× cheaper at the 8× probe) — the common shape
-      // is one point-deleted file in a sea of untouched ones
-      val dvd = subsetReader(s, root, v)
-        .parquet(withDv.map(r => Paths.get(root, r).toString): _*)
-      val cols = dvd.columns.toIndexedSeq
-      val pairs = dvSidecars(s, root, dv, withDv, "__dv_idx", "__dv_file").get
-      val filtered = dvd
-        .withColumn("__dv_file", element_at(fsplit(col("_metadata.file_path"), "/"), -1))
-        .withColumn("__dv_idx", col("_metadata.row_index"))
-        .join(broadcast(pairs), Seq("__dv_file", "__dv_idx"), "left_anti")
-        .select(cols.map(col): _*)
-      val plain = rels.filterNot(dv.contains)
-      if (plain.isEmpty) filtered
-      else subsetReader(s, root, v)
-        .parquet(plain.map(r => Paths.get(root, r).toString): _*)
-        .unionByName(filtered, allowMissingColumns = true)
     }
   }
-
-  /** Reader honoring the evolution markers, cheapest first:
-    * `schemaJson` — the union schema CAPTURED AT THE WIDENING COMMIT
-    * (Delta's design: the log, not the files, owns the schema) — makes
-    * planning zero-footer and zero-job at any file count; `schema`
-    * alone falls back to parquet mergeSchema inference (a distributed
-    * footer job per scan — the pre-r11 path, kept for evolved tables
-    * whose union no writer captured); unmarked tables read plain (one
-    * footer). */
-  private def evolvedReader(s: SparkSession, root: String, v: Int) = {
-    val meta = if (v > 0) manifestMeta(root, v) else Map.empty[String, String]
-    meta.get("schemaJson") match {
-      case Some(js) => s.read.schema(
-        org.apache.spark.sql.types.DataType.fromJson(js)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      case None if meta.contains("schema") => s.read.option("mergeSchema", "true")
-      case None => s.read
-    }
-  }
-
-  def read(s: SparkSession, root: String): DataFrame =
-    readAt(s, root, currentVersion(root))
-
-  /** The reader every file-SUBSET scan of version `v` must use:
-    * evolved versions (the `schema` marker) resolve the union schema
-    * via mergeSchema exactly as [[readAt]] does for the whole version.
-    * Without this a mixed-width subset samples ONE footer, and rows
-    * from wider files silently lose their evolved-column values — the
-    * bug class deleteWhere hit in r9 (ADVICE) applies to every
-    * pruned/merge/diff read alike. */
-  private[graft] def subsetReader(s: SparkSession, root: String, v: Int) =
-    evolvedReader(s, root, v)
 
   /** Planning step of a stats-pruned scan: the entries of version `v`
-    * whose [lo, hi] key range intersects [qlo, qhi]. Pure manifest
-    * arithmetic — no data-file IO; stat-less entries (sentinel range)
-    * always survive, so pruning is never unsound. */
+    * whose PRIMARY-stats [lo, hi] intersects [qlo, qhi] — the
+    * one-column case of [[prunedEntriesBox]] (the empty name addresses
+    * the primary range). Pure manifest arithmetic — no data-file IO;
+    * stat-less entries (sentinel range) always survive, so pruning is
+    * never unsound. */
   def prunedEntries(root: String, v: Int, qlo: Long, qhi: Long): Seq[FileEntry] =
-    manifestEntries(root, v).filter(e => e.lo <= qhi && e.hi >= qlo)
+    prunedEntriesBox(root, v, "", Seq(("", qlo, qhi)))
 
   /** Scan ONLY the files whose footer-harvested `keyCol` stats
     * intersect [lo, hi] — at 100 TB this is the difference between
@@ -2941,15 +2837,12 @@ object SnapshotTable {
     * not a million. The predicate is still applied after the scan
     * (stats prune whole FILES; the residual filter prunes rows within
     * the survivors, since a file's range may only overlap the query
-    * range). x15 proves the skip; SnapshotStatsSpec counts the files. */
+    * range). `keyCol` is a LOGICAL name. x15 proves the skip;
+    * SnapshotStatsSpec counts the files. */
   def readPruned(s: SparkSession, root: String, keyCol: String,
       lo: Long, hi: Long): DataFrame = {
     val v = currentVersion(root)
-    val files = prunedEntries(root, v, lo, hi).map(_.rel)
-    // keyCol is a LOGICAL name: resolve the residual filter on the
-    // logical view (identity for unmapped tables); deletion vectors
-    // apply inside the subset read
-    toLogical(readRelsDv(s, root, v, files), colMap(root, v))
+    logicalScan(s, stateAt(root, v), prunedEntries(root, v, lo, hi))
       .filter(col(keyCol).between(lo, hi))
   }
 
@@ -3202,15 +3095,11 @@ object SnapshotTable {
     restore(root, v)
   }
 
-  def restore(root: String, toVersion: Int): Int = {
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val cur = currentVersion(root)
-      retry.observed(cur)
+  def restore(root: String, toVersion: Int): Int =
+    casCommit(root) { cur =>
       require(toVersion >= 1 && toVersion <= cur,
         s"snapshot restore on $root: versions run 1..$cur, no version $toVersion")
-      if (toVersion == cur) result = cur
+      if (toVersion == cur) cur
       else {
         if (!Files.exists(manifestPath(root, toVersion)))
           throw new IllegalStateException(s"snapshot restore on $root: version " +
@@ -3309,13 +3198,10 @@ object SnapshotTable {
               fmtRowBases(merged).map("rowbase" -> _) ++
               fmtRowMat(matMerged).map("rowmat" -> _) ++ mapFix
           }
-        try result = commitEntries(root, cur, manifestEntries(root, toVersion),
+        commitEntries(root, cur, manifestEntries(root, toVersion),
           shardSize = 16, meta)
-        catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
       }
     }
-    result
-  }
 
   /** CONVERT TO SNAPSHOT (r16, Delta's `CONVERT TO DELTA`): adopt an
     * existing plain-parquet directory IN PLACE as a snapshot table —
@@ -3560,6 +3446,14 @@ object SnapshotTable {
     commitEntries(dstRoot, 0, entries, shardSize = 16, meta)
   }
 
+  /** A fresh name component for files, staging dirs and physical
+    * column names: the FULL random UUID (122 random bits, dashes
+    * stripped so it also reads as a plain identifier). A shorter
+    * prefix would leave birthday collisions between two writers'
+    * files in one table directory within reach at scale. */
+  private[graft] def uniqueTag(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "")
+
   /** Write a DataFrame's rows as one immutable data file under root;
     * returns the root-relative path. Commit-unique names (version tag +
     * logical name) keep every file addressable by any manifest.
@@ -3701,6 +3595,23 @@ object SnapshotTable {
         sleep(math.min(50L * (losses - StaleClaimAfterLosses + 1), 1000L))
     }
   }
+  /** THE optimistic-commit loop every main-manifest committer runs:
+    * each attempt receives the current version, re-runs its own
+    * pre-commit checks against it, and returns its result (usually the
+    * version [[commitEntries]] minted, or the observed one for a
+    * no-op). Only a lost manifest CAS — FileAlreadyExistsException out
+    * of the attempt — retries, under [[CommitRetry]]'s bounded policy;
+    * any other failure propagates. */
+  private[graft] def casCommit[T](root: String)(attempt: Int => T): T = {
+    val retry = new CommitRetry(root)
+    while (true) {
+      val v = currentVersion(root)
+      retry.observed(v)
+      try return attempt(v)
+      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
+    }
+    throw new IllegalStateException("unreachable")
+  }
   private[graft] val MaxCommitAttempts = 64
   private[graft] val StaleClaimAfterLosses = 8
   private[graft] val StaleClaimMinAgeMs = 60000L
@@ -3771,7 +3682,7 @@ object SnapshotTable {
   def optimizeClustered(s: SparkSession, root: String, keyCol: String,
       targetFiles: Int, shardSize: Int = 4): Int = {
     val v = currentVersion(root)
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val tag = uniqueTag()
     // ROW-TRACKED tables rewrite WITH their ids: the compaction moves
     // every row, so identity survives only by materializing __row_id
     // into the new files — and the materialized mapping must then KEEP
@@ -3843,15 +3754,13 @@ object SnapshotTable {
         s"stats column is $statsPhys — the scope prunes by the primary stats")
     val touched = prunedEntries(root, v, lo, hi)
     if (touched.isEmpty) return v
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val tag = uniqueTag()
     // physical-namespace rewrite: DV-applied content, same columns the
     // files already carry (dropped physicals ride along untouched;
     // row-tracked tables read WITH ids so the compacted files keep
     // their rows' identities materialized)
-    val content =
-      if (carried.get("rowtracking").contains("on"))
-        relsWithIds(s, root, v, touched.map(_.rel))
-      else readRelsDv(s, root, v, touched.map(_.rel))
+    val content = readFiles(s, root, v, touched,
+      rowIds = carried.get("rowtracking").contains("on"))
     val rels = writeDataFiles(
       conformNullability(content, fileNullability(root, touched.head.rel))
         .repartitionByRange(math.max(1, targetFiles), col(statsPhys)),
@@ -3893,11 +3802,9 @@ object SnapshotTable {
     if (dv.isEmpty) return v
     val carried = carriedMeta(root, v)
     val touched = manifestEntries(root, v).filter(e => dv.contains(e.rel))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val tag = uniqueTag()
     val rowTracked = carried.get("rowtracking").contains("on")
-    val content =
-      if (rowTracked) relsWithIds(s, root, v, touched.map(_.rel))
-      else readRelsDv(s, root, v, touched.map(_.rel))
+    val content = readFiles(s, root, v, touched, rowIds = rowTracked)
     // keep the table's clustering: survivors re-range on the stats
     // column so the replacements stay prunable; a stats-less table
     // ranges on its first column (harvest then yields sentinel stats,
@@ -4018,7 +3925,7 @@ object SnapshotTable {
           "changeset may not carry it (updates inherit, inserts mint fresh)"))
     val oldPhysIds: Option[DataFrame] =
       if (rowTracked && affected.nonEmpty)
-        Some(relsWithIds(s, root, v, affected.map(_.rel)).localCheckpoint(false))
+        Some(readFiles(s, root, v, affected, rowIds = true).localCheckpoint(false))
       else None
     val old0 =
       // a changeset of only NEW keys can prune to zero files (growth
@@ -4030,8 +3937,7 @@ object SnapshotTable {
       // the keyed union, CDC images — speaks the changeset's names.
       // Deletion vectors apply inside the read, so a rewrite of a
       // DV'd file can never resurrect its deleted rows.
-      else oldPhysIds.map(toLogical(_, map)).getOrElse(
-        toLogical(readRelsDv(s, root, v, affected.map(_.rel)), map))
+      else toLogical(oldPhysIds.getOrElse(readFiles(s, root, v, affected)), map)
     require(old0.columns.forall(cols.contains),
       s"merge on $root: changeset lacks table columns " +
         s"${old0.columns.filterNot(cols.contains).mkString(",")} — a merge must carry " +
@@ -4059,9 +3965,7 @@ object SnapshotTable {
         Some(org.apache.spark.sql.types.DataType.fromJson(carried("schemaJson"))
           .asInstanceOf[org.apache.spark.sql.types.StructType])
       else if (affected.nonEmpty) Some(old0.schema)
-      else Some(subsetReader(s, root, v)
-        .parquet(Paths.get(root, untouched.head.rel).toString)
-        .filter(lit(false)).schema)
+      else Some(readFiles(s, root, v, untouched.take(1)).schema)
     // priorStruct names are PHYSICAL (captures describe files) —
     // translate for the comparison against the changeset's logical cols
     val tableColsOrdered: Seq[String] =
@@ -4132,7 +4036,7 @@ object SnapshotTable {
         owi.join(dropIds, Seq(idCol), "left_anti")
           .unionByName(upserts.join(idsByKey, Seq(idCol), "left"))
     }
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val tag = uniqueTag()
     // Row-grain CHANGE DATA FEED (Delta's _change_data design): when
     // the table opts in (`cdf=row` meta, carried forward like
     // statsCol), the merge emits its row-level change images as CDC
@@ -4548,7 +4452,6 @@ object SnapshotTable {
       touchedRels: Set[String], newEntries: Seq[FileEntry], shardSize: Int,
       opTag: String, extraMeta: Map[String, String] = Map.empty,
       emptySchemaJson: Option[String] = None): Int = {
-    var v = baseVersion
     // the deletion-vector state of the touched files AS OF the version
     // this operation READ: a rebase must verify it is unchanged, or a
     // concurrent DV delete's rows would silently resurrect (the
@@ -4564,9 +4467,7 @@ object SnapshotTable {
     // zero-byte claim, backs off, fails loudly): a hand-rolled counter
     // here would spin its attempts out in milliseconds against a corpse
     // claim and wedge every UPDATE/DELETE while appends self-heal
-    val retry = new CommitRetry(root)
-    while (true) {
-      retry.observed(v)
+    casCommit(root) { v =>
       val carried0 = carriedMeta(root, v)
       // touched files are replaced: their deletion vectors die with
       // them (this rewrite READ and applied them — see dvRead check)
@@ -4600,15 +4501,9 @@ object SnapshotTable {
         if (untouched.isEmpty) (carried - "schema" - "schemaJson" - "widen") ++
           (if (newEntries.isEmpty) emptySchemaJson.map("schemaJson" -> _) else None)
         else carried
-      try return commitEntries(root, v, untouched ++ newEntries, shardSize,
+      commitEntries(root, v, untouched ++ newEntries, shardSize,
         baseMeta ++ extraMeta + (opTag -> s"cow:${touchedRels.size}of${entries.size}"))
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          retry.lost(e)
-          v = currentVersion(root)
-      }
     }
-    -1 // unreachable
   }
 
   /** SQL UPDATE, copy-on-write — the one DML verb the maintenance
@@ -4633,66 +4528,34 @@ object SnapshotTable {
     * current version (Delta's no-op contract). SET may only name
     * existing columns — UPDATE never changes the schema, so evolution
     * markers carry through unchanged (rewritten files of an evolved
-    * table land at the union width via [[subsetReader]], which the
+    * table land at the union width via the read core ([[readFiles]]), which the
     * markers already describe). */
   /** UPDATE's phase-1 plan, a named seam so PlanSpec can assert the
     * predicate actually reaches the parquet scan (`PushedFilters`) —
     * at 100 TB the find-touched pass lives or dies on row-group
     * skipping. */
   private[graft] def updateTouchedScan(full: DataFrame, wherePred: String): DataFrame =
-    full.filter(expr(wherePred)).select(input_file_name().as("f")).distinct()
+    full.filter(expr(wherePred)).select(fileKey(input_file_name()).as("f")).distinct()
 
   /** The find-touched phase's input: the version's RAW logical scan —
-    * no DV anti-join (input_file_name cannot resolve across it; a file
-    * whose only matches are already DV'd is spuriously touched and
-    * handled downstream as zero new hits). Shared by update/delete. */
+    * the core over a DV-free view of the state (input_file_name cannot
+    * resolve across the DV anti-join; a file whose only matches are
+    * already DV'd is spuriously touched and handled downstream as zero
+    * new hits). Shared by update/delete. */
   private def rawLogicalScan(s: SparkSession, root: String, v: Int,
-      entries: Seq[FileEntry]): DataFrame =
-    toLogical(subsetReader(s, root, v)
-      .parquet(entries.map(e => Paths.get(root, e.rel).toString): _*),
-      colMap(root, v))
+      entries: Seq[FileEntry]): DataFrame = {
+    val st = stateAt(root, v)
+    toLogical(scan(s, st.copy(meta = st.meta - "dv"), entries), st.colMap)
+  }
 
-  /** The manifest entries named by `input_file_name`'s URI set. Entry
-    * paths are normalized before matching because a SHALLOW CLONE's
-    * entries are `../`-relative into the source table — a raw
-    * `endsWith(rel)` test would silently miss them and turn a clone's
-    * DML into a no-op. Each side is canonicalized ONCE and probed via
-    * a Set — O(entries + touched), not the O(entries × touched) string
-    * scan a million-entry manifest cannot afford on the driver. */
+  /** The manifest entries whose [[fileKey]] the find-touched scan
+    * reported — normalized on both sides, so a SHALLOW CLONE's
+    * `../`-relative entries match, and probed via a Set: O(entries +
+    * touched), not the O(entries × touched) string scan a
+    * million-entry manifest cannot afford on the driver. */
   private def touchedEntries(root: String, entries: Seq[FileEntry],
-      touchedPaths: Set[String]): Seq[FileEntry] = {
-    val paths: Set[String] = touchedPaths.map { p =>
-      try {
-        val parsed = new java.net.URI(p).getPath
-        if (parsed != null) parsed else stripScheme(p)
-      } catch {
-        // URI-illegal characters (a raw space in the path, as older
-        // path stringifications emit): strip the scheme by hand — the
-        // raw string can never equal a filesystem path, so returning
-        // it verbatim would silently no-op the DML
-        case _: Exception => stripScheme(p)
-      }
-    }
-    entries.filter(e =>
-      paths.contains(Paths.get(root, e.rel).toAbsolutePath.normalize.toString))
-  }
-
-  /** "file:///tmp/x" / "file://host/tmp/x" / "file:/tmp/x" → "/tmp/x"
-    * (an authority component is dropped with the scheme); strings that
-    * are not scheme-prefixed paths pass through untouched. */
-  private def stripScheme(p: String): String = {
-    val i = p.indexOf(':')
-    if (i > 0 && p.substring(0, i).forall(_.isLetter) &&
-        i + 1 < p.length && p.charAt(i + 1) == '/') {
-      val rest = p.substring(i + 1)
-      if (rest.startsWith("//")) {
-        // "//" introduces an authority (possibly empty): the path
-        // starts at the next slash
-        val afterAuth = rest.indexOf('/', 2)
-        if (afterAuth >= 0) rest.substring(afterAuth) else "/"
-      } else rest
-    } else p
-  }
+      touchedKeys: Set[String]): Seq[FileEntry] =
+    entries.filter(e => touchedKeys(fileKey(root, e.rel)))
 
   /** Rewrite parallelism for a copy-on-write DML commit: at LEAST one
     * task per touched file (preserving the file-granular layout), but
@@ -4767,66 +4630,41 @@ object SnapshotTable {
       cdcRows: Option[DataFrame => DataFrame],
       postFiles: (DataFrame, String) => Seq[FileEntry],
       rowTracked: Boolean = false): Option[Int] = {
-    import org.apache.spark.sql.functions.{element_at, split => fsplit}
-    val dvCur = dvState(root, v)
-    // metadata columns must come off the RAW scan (they don't resolve
-    // across joins); already-DV'd ordinals are excluded by an explicit
-    // anti-join so a second statement can't re-touch them.
-    // ROW-TRACKED callers (MoR UPDATE — its postimage file must carry
-    // the preimage rows' identities) read under the explicit physical
-    // schema-of-record plus __row_id, exactly like [[relsWithIds]]'s
-    // materialized branch: footer sampling over a mixed materialized/
-    // positional touched set would surface __row_id for only SOME rows
-    // (or none), and mergeSchema refuses mixed widths — the explicit
-    // schema null-fills positional files and upcasts narrower slots.
-    val rawPhys =
-      if (!rowTracked) subsetReader(s, root, v)
-        .parquet(touched.map(e => Paths.get(root, e.rel).toString): _*)
-      else {
-        val phys = readAtPhysical(s, root, v).schema
-        val schema = org.apache.spark.sql.types.StructType(
-          phys.fields.filterNot(_.name == RowIdCol).map(_.copy(nullable = true)) :+
-            org.apache.spark.sql.types.StructField(RowIdCol,
-              org.apache.spark.sql.types.LongType, nullable = true))
-        s.read.schema(schema)
-          .parquet(touched.map(e => Paths.get(root, e.rel).toString): _*)
-      }
-    val raw = toLogicalFull(rawPhys, map)
-      .withColumn("__file", element_at(fsplit(col("_metadata.file_path"), "/"), -1))
-      .withColumn("__idx", col("_metadata.row_index"))
-    // one relation over ALL relevant sidecars (dvSidecars) instead of
-    // one per sidecar union-reduced — driver-side plan cost no longer
-    // grows with the DV'd file count; same rows, same anti-join
-    val withMeta = dvSidecars(s, root, dvCur,
-        touched.map(_.rel).filter(dvCur.contains), "__idx", "__file") match {
-      case None => raw
-      case Some(sides) =>
-        raw.join(broadcast(sides), Seq("__file", "__idx"), "left_anti")
-    }
+    val st = stateAt(root, v)
+    val dvCur = st.dv
+    // the live rows with their (file, ordinal) coordinates: the core
+    // excludes already-DV'd ordinals, so a second statement can't
+    // re-touch them. ROW-TRACKED callers (MoR UPDATE — its postimage
+    // file must carry the preimage rows' identities) resolve each
+    // hit's id in the same scan, so the postimage (and the CDC images)
+    // carry the preimage ids as a resident __row_id column
+    val raw = toLogicalFull(scan(s, st, touched, coords = true, rowIds = rowTracked), map)
     // LAZY checkpoint: the hit-count job right below materializes it —
     // an eager pin here would run the same scan as its own extra job
-    val hits = withMeta.filter(coalesce(cond, lit(false))).localCheckpoint(false)
-    val hitCounts = hits.groupBy("__file").count().collect()
+    val hits = raw.filter(coalesce(cond, lit(false))).localCheckpoint(false)
+    val hitCounts = hits.groupBy(FileCol).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // every live match was already DV'd: version no-op
     if (hitCounts.isEmpty) return Some(v)
-    val byBase = touched.map(e => Paths.get(e.rel).getFileName.toString -> e).toMap
+    val byKey = touched.map(e => fileKey(root, e.rel) -> e).toMap
+    val hitKeys = hitCounts.keys.toSeq.sorted
     // hit files' existing sidecars, read ONCE (checkpointed — they
     // total the already-deleted rows): one count job serves the
     // selectivity cap, and the same frame feeds the superseding
     // union write below
-    val oldSides: Option[DataFrame] =
+    val oldSides: Option[DataFrame] = {
+      val withDv = hitKeys.map(byKey).filter(e => dvCur.contains(e.rel))
       // lazy checkpoint: the oldCounts job right below materializes it
-      dvSidecars(s, root, dvCur,
-        hitCounts.keys.toSeq.map(b => byBase(b).rel), "idx", "__file")
-        .map(_.localCheckpoint(false))
+      if (withDv.isEmpty) None
+      else Some(dvOrdinals(s, st, withDv).localCheckpoint(false))
+    }
     val oldCounts: Map[String, Long] = oldSides.fold(Map.empty[String, Long])(
-      _.groupBy("__file").count().collect()
+      _.groupBy(FileCol).count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap)
-    val underCap = hitCounts.forall { case (base, n) =>
-      val e = byBase(base)
+    val underCap = hitCounts.forall { case (key, n) =>
+      val e = byKey(key)
       e.rows > 0 &&
-        (oldCounts.getOrElse(base, 0L) + n).toDouble / e.rows <= DvMaxSelectivity
+        (oldCounts.getOrElse(key, 0L) + n).toDouble / e.rows <= DvMaxSelectivity
     }
     if (!underCap) return None // fall back to copy-on-write
     // AGGREGATE cap (ADVICE r13, widened to TABLE scope in r16): the
@@ -4848,73 +4686,57 @@ object SnapshotTable {
     // of broadcast longs
     val dvBudget = s.conf.get("spark.graft.dv.maxTotalOrdinals",
       DvMaxTotalOrdinals.toString).toLong
-    val touchedRels = hitCounts.keys.map(b => byBase(b).rel).toSet
+    val touchedRels = hitKeys.map(byKey(_).rel).toSet
     // untouched sidecars price from the manifest's `dvn` counts —
     // pure driver arithmetic; only rels the counts don't cover
     // (legacy commits, re-rel'd clones) pay a footer read each
     val untouchedOrdinals = dvOrdinalsExcluding(root, dvCur,
-      dvCountsOf(manifestMeta(root, v)), touchedRels)
+      dvCountsOf(st.meta), touchedRels)
     if (hitCounts.values.sum + oldCounts.values.sum + untouchedOrdinals >
         dvBudget) return None
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val tag = uniqueTag()
     // one sidecar per hit file: the file's FULL touched-ordinal set
     // (old sidecar ∪ new hits) — a superseding sidecar, so a reader
     // consults exactly one per file. ALL sidecars land in ONE
-    // partitioned write, hash-distributed on __file across
-    // min(hitFiles, parallelism) tasks (each file's ordinals land in
-    // exactly one task, so each __file= dir still yields ONE part):
+    // partitioned write, hash-distributed on the hit file's index
+    // across min(hitFiles, parallelism) tasks (each file's ordinals
+    // land in exactly one task, so each __fid= dir yields ONE part):
     // the pre-r14 coalesce(1) serialized a wide spread-delete's whole
     // ordinal set through one task (VERDICT r13 #5).
-    val allIdx = (hits.select(col("__idx").as("idx"), col("__file")) +:
-      oldSides.toSeq).reduce(_ unionByName _)
+    val fids = {
+      import s.implicits._
+      broadcast(hitKeys.zipWithIndex.toDF(FileCol, "__fid"))
+    }
     val scratch = Engine.tmpDir(s"graft_dv_scratch_$tag")
-    allIdx
-      .repartition(math.max(1, math.min(hitCounts.size,
-        s.sparkContext.defaultParallelism)), col("__file"))
-      .write.mode("overwrite").partitionBy("__file").parquet(scratch)
-    val newDvEntries: Map[String, String] = hitCounts.keys.zipWithIndex.map {
-      case (base, i) =>
-        val dir = Paths.get(scratch, s"__file=$base")
-        val parts = Engine.listDir(dir)
+    (hits.select(IdxCol, FileCol) +: oldSides.toSeq).reduce(_ unionByName _)
+      .join(fids, FileCol)
+      .select(col(IdxCol).as("idx"), col("__fid"))
+      .repartition(math.max(1, math.min(hitKeys.size,
+        s.sparkContext.defaultParallelism)), col("__fid"))
+      .write.mode("overwrite").partitionBy("__fid").parquet(scratch)
+    val newDvEntries: Map[String, String] = hitKeys.zipWithIndex.map {
+      case (key, i) =>
+        val parts = Engine.listDir(Paths.get(scratch, s"__fid=$i"))
           .filter(_.getFileName.toString.endsWith(".parquet"))
         require(parts.size == 1,
-          s"dv sidecar write produced ${parts.size} parts for $base — expected " +
+          s"dv sidecar write produced ${parts.size} parts for $key — expected " +
             "exactly one (all of a file's ordinals hash to one task)")
         val rel = s"dvdata_${tag}_$i.parquet"
         Files.move(parts.head, Paths.get(root, rel), StandardCopyOption.REPLACE_EXISTING)
-        byBase(base).rel -> rel
+        byKey(key).rel -> rel
     }.toMap
     // the new sidecars' ordinal totals, recorded beside them (`dvn`)
     // so future budget checks never re-open these footers
-    val newDvCounts: Map[String, Long] = hitCounts.keys.map(base =>
-      byBase(base).rel -> (hitCounts(base) + oldCounts.getOrElse(base, 0L))).toMap
-    // row-tracked: resolve each hit's identity BEFORE the coordinate
-    // columns drop — coalesce(materialized __row_id, file base +
-    // ordinal), the one reader rule — so the postimage file (and the
-    // CDC images) carry the preimage ids as a resident __row_id column
-    val hitsWithIds =
-      if (!rowTracked) hits
-      else {
-        import s.implicits._
-        val basesDf = broadcast(rowBases(root, v).toSeq.map { case (r, b) =>
-          (Paths.get(r).getFileName.toString, b) }.toDF("__file", "__rt_base"))
-        hits.join(basesDf, Seq("__file"), "left")
-          .withColumn(RowIdCol,
-            coalesce(col(RowIdCol), col("__rt_base") + col("__idx")))
-          .drop("__rt_base")
-      }
-    val cleanHits = hitsWithIds.drop("__file", "__idx")
+    val newDvCounts: Map[String, Long] = hitKeys.map(key =>
+      byKey(key).rel -> (hitCounts(key) + oldCounts.getOrElse(key, 0L))).toMap
+    val cleanHits = hits.drop(FileCol, IdxCol)
     val cdcMeta = cdcRows.flatMap(mk =>
       writeCdcFiles(toPhysical(mk(cleanHits), map), root, tag))
     val newEntries = postFiles(cleanHits, tag)
     // hoisted like commitRewrite's checksRead: the base set is a loop
     // invariant, not worth a manifest re-parse per CAS attempt
     val checksRead = checkConstraints(root, v)
-    val retry = new CommitRetry(root)
-    var result = -1
-    while (result < 0) {
-      val vNow = currentVersion(root)
-      retry.observed(vNow)
+    casCommit(root) { vNow =>
       val entriesNow = manifestEntries(root, vNow)
       val present = entriesNow.map(_.rel).toSet
       val hitRels = newDvEntries.keySet
@@ -4948,9 +4770,8 @@ object SnapshotTable {
           .flatMap(_.split("=", 2)(1).split(',')))
         (newDvEntries.values ++ newEntries.map(_.rel) ++ cdcRels)
           .foreach(r => Files.deleteIfExists(Paths.get(root, r)))
-        return None
-      }
-      try result = commitEntries(root, vNow, entriesNow ++ newEntries, shardSize,
+        None
+      } else Some(commitEntries(root, vNow, entriesNow ++ newEntries, shardSize,
         carriedMeta(root, vNow) - "dv" - "dvn" ++
           fmtDv(dvNow ++ newDvEntries).map("dv" -> _) ++
           fmtDvn(dvnKept ++ newDvCounts).map("dvn" -> _) ++
@@ -4960,10 +4781,8 @@ object SnapshotTable {
           (if (rowTracked && newEntries.nonEmpty)
             Map("rowmat_new" -> newEntries.map(_.rel).mkString(";"))
           else Map.empty) +
-          (auditKey -> s"$auditPrefix:${hitRels.size}of${entriesNow.size}"))
-      catch { case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) }
+          (auditKey -> s"$auditPrefix:${hitRels.size}of${entriesNow.size}")))
     }
-    Some(result)
   }
 
   def update(s: SparkSession, root: String, sets: Seq[(String, String)],
@@ -5080,11 +4899,9 @@ object SnapshotTable {
     // width) and converts back for the write. Identity mapping = no-op.
     // Row-tracked tables read WITH ids: __row_id rides the rewrite as
     // an unmapped physical and lands materialized in the new files.
-    val old = toLogicalFull(
-      if (rowTracked) relsWithIds(s, root, v, touched.map(_.rel))
-      else readRelsDv(s, root, v, touched.map(_.rel)), map)
+    val old = toLogicalFull(readFiles(s, root, v, touched, rowIds = rowTracked), map)
     val updated = setProjection(old, Some(cond))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val tag = uniqueTag()
     // row-grain CDF (see merge). The images cost a second pass over
     // the touched files (checkpointing every touched row to share one
     // pass would hold the whole rewrite in memory — the second scan is
@@ -5173,12 +4990,10 @@ object SnapshotTable {
     // logical view for the predicate, physical for the write (see
     // update; dropped physicals carry through the rewrite; row-tracked
     // tables carry materialized ids the same way)
-    val oldView = toLogicalFull(
-      if (carried.get("rowtracking").contains("on"))
-        relsWithIds(s, root, v, touched.map(_.rel))
-      else readRelsDv(s, root, v, touched.map(_.rel)), map)
+    val oldView = toLogicalFull(readFiles(s, root, v, touched,
+      rowIds = carried.get("rowtracking").contains("on")), map)
     val kept = oldView.filter(not(coalesce(cond, lit(false))))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val tag = uniqueTag()
     // row-grain CDF (see merge): a DELETE's images are just the
     // predicate's hits, typed delete
     val cdcMeta: Option[String] =
@@ -5263,7 +5078,7 @@ object SnapshotTable {
       // abandoned runs are tmp garbage, never a torn fixture.
       val dirTag = math.abs(scala.util.hashing.MurmurHash3.stringHash(d))
       val scratch = Engine.tmpDir(
-        s"graft_snap_stage_${dirTag}_${java.util.UUID.randomUUID().toString.take(8)}")
+        s"graft_snap_stage_${dirTag}_${uniqueTag()}")
       Engine.listDir(Paths.get(scratch)).foreach(Engine.deleteRecursively)
       Tables.events(s, d)
         .withColumn("ep_day", expr("(ts div 1000000000) div 86400"))
@@ -5427,44 +5242,39 @@ object SnapshotTable {
     * per sync, not a snapshot scan. */
   def changesBetween(s: SparkSession, root: String,
       vFrom: Int, vTo: Int): DataFrame = {
-    val from = manifestEntries(root, vFrom).map(_.rel).toSet
-    val to = manifestEntries(root, vTo).map(_.rel).toSet
+    val stFrom = stateAt(root, vFrom)
+    val stTo = stateAt(root, vTo)
+    val from = stFrom.entries.map(_.rel).toSet
+    val to = stTo.entries.map(_.rel).toSet
     // each side reads under ITS version's schema semantics (an evolved
     // vTo resolves the union width; a pre-evolution vFrom stays
     // narrow), resolves ITS version's column mapping, and applies ITS
     // version's deletion vectors — a removed file's already-DV-deleted
     // rows must not re-report as fresh deletes
-    def readRels(rels: Set[String], v: Int): Option[DataFrame] =
+    def readRels(st: TableState, rels: Set[String]): Option[DataFrame] =
       if (rels.isEmpty) None
-      else Some(toLogical(readRelsDv(s, root, v, rels.toSeq.sorted),
-        colMap(root, v)))
-    val added = readRels(to -- from, vTo)
-    val removed = readRels(from -- to, vFrom)
+      else Some(toLogical(scan(s, st, st.entries.filter(e => rels(e.rel)).sortBy(_.rel)),
+        st.colMap))
+    val added = readRels(stTo, to -- from)
+    val removed = readRels(stFrom, from -- to)
     // a commit can change a file's DELETION VECTOR without touching
     // the file (a merge-on-read delete, or RESTORE across one): the
     // ordinal difference of the two sidecar states IS the row delta —
-    // newly-deleted ordinals report as deletes, resurrected ones as
-    // inserts. Without this a DV commit diffs to an empty change set.
-    val dvF = dvState(root, vFrom)
-    val dvT = dvState(root, vTo)
-    def sideIdx(o: Option[String]): DataFrame = o match {
-      case Some(d) => s.read.parquet(Paths.get(root, d).toString).select(col("idx"))
-      case None => s.range(0).select(col("id").as("idx"))
-    }
-    val dvDeltas: Seq[DataFrame] = (from intersect to).toSeq.sorted
-      .filter(r => dvF.get(r) != dvT.get(r)).flatMap { rel =>
-        def rowsAt(idx: DataFrame, v: Int, ct: String): DataFrame =
-          toLogical(subsetReader(s, root, v)
-              .parquet(Paths.get(root, rel).toString), colMap(root, v))
-            .withColumn("__idx", col("_metadata.row_index"))
-            .join(broadcast(idx.withColumnRenamed("idx", "__idx")),
-              Seq("__idx"), "left_semi")
-            .drop("__idx").withColumn("change_type", lit(ct))
+    // newly-deleted ordinals report as deletes (live at vFrom),
+    // resurrected ones as inserts (live at vTo). Without this a DV
+    // commit diffs to an empty change set.
+    val dvDeltas: Seq[DataFrame] = stFrom.entries.sortBy(_.rel)
+      .filter(e => to(e.rel) && stFrom.dv.get(e.rel) != stTo.dv.get(e.rel)).flatMap { e =>
+        def ordinals(st: TableState): DataFrame =
+          if (st.dv.contains(e.rel)) dvOrdinals(s, st, Seq(e)).select(IdxCol)
+          else s.range(0).select(col("id").as(IdxCol))
+        def rowsAt(st: TableState, idx: DataFrame, ct: String): DataFrame =
+          toLogical(scan(s, st, Seq(e), coords = true)
+              .join(broadcast(idx), Seq(IdxCol), "left_semi").drop(FileCol, IdxCol),
+            st.colMap).withColumn("change_type", lit(ct))
         Seq(
-          rowsAt(sideIdx(dvT.get(rel)).exceptAll(sideIdx(dvF.get(rel))),
-            vFrom, "delete"),
-          rowsAt(sideIdx(dvF.get(rel)).exceptAll(sideIdx(dvT.get(rel))),
-            vTo, "insert"))
+          rowsAt(stFrom, ordinals(stTo).exceptAll(ordinals(stFrom)), "delete"),
+          rowsAt(stTo, ordinals(stFrom).exceptAll(ordinals(stTo)), "insert"))
       }
     val base = (added, removed) match {
       case (Some(a), Some(r)) =>
@@ -5531,7 +5341,7 @@ object SnapshotTable {
       val v1 = commitEntries(root, 0, entries, shardSize = 3)
       val lastRel = s"data_g$X18Grp.parquet"
       assert(entries.exists(_.rel == lastRel), s"fixture drift: no $lastRel")
-      val enriched = s.read.parquet(Paths.get(root, lastRel).toString)
+      val enriched = readFiles(s, root, v1, entries.filter(_.rel == lastRel))
         .withColumn("quality", col("value") * 0.1)
       val newRel = writeDataFile(enriched, root, "v2_enriched")
       // the widening commit CAPTURES the union schema (all-nullable:
@@ -5731,28 +5541,13 @@ object SnapshotTable {
     * serve point lookups on everything else. */
   def readPointLookup(s: SparkSession, root: String, keyCol: String,
       values: Seq[Long]): DataFrame = {
-    val v = currentVersion(root)
-    val map = colMap(root, v)
-    val entries = manifestEntries(root, v)
+    val st = stateAt(root, currentVersion(root))
     // keyCol is LOGICAL; parquet blooms are indexed by the files'
     // physical column name
-    val hit = entries.map(_.rel)
-      .filter(rel => bloomMayContain(root, rel,
-        physicalName(map, keyCol), values).nonEmpty)
-    if (hit.isEmpty) {
-      // preserve the schema without scanning data pages: one footer on
-      // a uniform table; every footer (still metadata-only) on an
-      // evolved one, where a single file's width is not the union's
-      val schemaRels =
-        if (manifestMeta(root, v).contains("schema")) entries.map(_.rel)
-        else entries.take(1).map(_.rel)
-      toLogical(subsetReader(s, root, v)
-        .parquet(schemaRels.map(r => Paths.get(root, r).toString): _*), map)
-        .filter(lit(false))
-    }
-    else
-      toLogical(readRelsDv(s, root, v, hit), map)
-        .filter(col(keyCol).isin(values: _*))
+    val keyPhys = physicalName(st.colMap, keyCol)
+    logicalScan(s, st,
+        st.entries.filter(e => bloomMayContain(root, e.rel, keyPhys, values).nonEmpty))
+      .filter(col(keyCol).isin(values: _*))
   }
 
   /** x20's needle ids — derived from the manifest's exact row count
@@ -5818,7 +5613,7 @@ object SnapshotTable {
       .repartitionByRange(targetFiles, col("_z"))
       .sortWithinPartitions("_z") // row-group-level locality too
       .drop("_z")
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val tag = uniqueTag()
     val rels = writeDataFiles(zordered, root, s"z_$tag")
     val entries = harvestEntries(s, root, rels, colA, Seq(colB))
     val rtMeta = if (!rt) Map.empty[String, String]
@@ -5885,7 +5680,7 @@ object SnapshotTable {
       .repartitionByRange(targetFiles, col("_z"))
       .sortWithinPartitions("_z")
       .drop("_z")
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val tag = uniqueTag()
     val rels = writeDataFiles(keyed, root, s"lc_$tag")
     // the general per-column harvest (r20) collects every key's stats;
     // the primary stays the first cluster key
@@ -5906,22 +5701,20 @@ object SnapshotTable {
     * `extra` stats by name; unknown columns never prune — sound). */
   def prunedEntriesBox(root: String, v: Int, primaryCol: String,
       box: Seq[(String, Long, Long)]): Seq[FileEntry] =
-    manifestEntries(root, v).filter { e =>
-      box.forall { case (c, qlo, qhi) =>
-        val (l, h) = e.statsFor(c, primaryCol)
-        l <= qhi && h >= qlo
-      }
-    }
+    manifestEntries(root, v).filter(e =>
+      box.forall { case (c, qlo, qhi) => e.overlaps(c, primaryCol, qlo, qhi) })
 
   /** Scan only the files whose per-column stats intersect the box, with
-    * the exact box predicate re-applied on survivors. */
+    * the exact box predicate re-applied on survivors. Column names are
+    * LOGICAL; the manifest's stats are keyed by physical name. */
   def readPrunedBox(s: SparkSession, root: String, primaryCol: String,
       box: Seq[(String, Long, Long)]): DataFrame = {
     val v = currentVersion(root)
-    val files = prunedEntriesBox(root, v, primaryCol, box)
-      .map(e => Paths.get(root, e.rel).toString)
-    val pred = box.map { case (c, l, h) => col(c).between(l, h) }.reduce(_ && _)
-    subsetReader(s, root, v).parquet(files: _*).filter(pred)
+    val st = stateAt(root, v)
+    val phys = physicalName(st.colMap, _: String)
+    logicalScan(s, st, prunedEntriesBox(root, v, phys(primaryCol),
+        box.map { case (c, l, h) => (phys(c), l, h) }))
+      .filter(box.map { case (c, l, h) => col(c).between(l, h) }.reduce(_ && _))
   }
 
   /** x22's day range (10 mid-month days); the user range is derived

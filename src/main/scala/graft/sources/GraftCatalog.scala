@@ -431,11 +431,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         // file list, capture widened by every added column. The shared
         // retry policy reclaims a dead committer's zero-byte claim and
         // fails loudly instead of busy-spinning forever against it.
-        val retry = new SnapshotTable.CommitRetry(root)
-        var committed = false
-        while (!committed) {
-          val v = SnapshotTable.currentVersion(root)
-          retry.observed(v)
+        SnapshotTable.casCommit(root) { v =>
           val cur = SnapshotSourceUtil.sparkSchema(
             SnapshotSourceUtil.tableMessageType(root, v))
           // add-column evolution over NESTED-typed tables is
@@ -456,7 +452,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
             val phys = map match {
               case None => name
               case Some(_) =>
-                s"${name}_${java.util.UUID.randomUUID().toString.take(8)}"
+                s"${name}_${SnapshotTable.uniqueTag()}"
             }
             (name, phys, dt)
           }
@@ -469,17 +465,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
             .map(_.stripPrefix("evolved:+") + ",").getOrElse("")
           val names = adds.map(_._1).mkString(",")
           val physNames = physAdds.map(_._2).mkString(",")
-          try {
-            SnapshotTable.commitEntries(root, v, SnapshotTable.manifestEntries(root, v),
-              shardSize = 16, SnapshotTable.carriedMeta(root, v) +
-                ("schema" -> s"evolved:+$priorAdds$physNames") +
-                ("schemaJson" -> union.json) +
-                ("alter" -> s"addcol:$names") ++
-                nextMap.map("colmap" -> SnapshotTable.fmtColMap(_)))
-            committed = true
-          } catch {
-            case e: java.nio.file.FileAlreadyExistsException => retry.lost(e)
-          }
+          SnapshotTable.commitEntries(root, v, SnapshotTable.manifestEntries(root, v),
+            shardSize = 16, SnapshotTable.carriedMeta(root, v) +
+              ("schema" -> s"evolved:+$priorAdds$physNames") +
+              ("schemaJson" -> union.json) +
+              ("alter" -> s"addcol:$names") ++
+              nextMap.map("colmap" -> SnapshotTable.fmtColMap(_)))
         }
         // CREATE-time declarations that were waiting on a column this
         // widening just made resident apply NOW (r16 ADVICE: pending

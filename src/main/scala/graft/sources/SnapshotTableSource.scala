@@ -783,7 +783,7 @@ private[sources] class SnapshotDsv2Table(root: String, schema: StructType,
         if (bounds.isEmpty) entries
         else {
           val (qlo, qhi) = (bounds.map(_._1).max, bounds.map(_._2).min)
-          entries.filter(e => e.lo <= qhi && e.hi >= qlo)
+          entries.filter(_.overlaps(c0, c0, qlo, qhi))
         }
       case None => entries
     }
@@ -800,9 +800,9 @@ private[sources] class SnapshotDsv2Table(root: String, schema: StructType,
     // back to physical names for the rewrite (see SnapshotTable.delete)
     val map = SnapshotTable.colMap(root, v)
     val kept = SnapshotTable.toLogicalFull(
-        SnapshotTable.readRelsDv(s, root, v, cands.map(_.rel)), map)
+        SnapshotTable.readFiles(s, root, v, cands), map)
       .filter(not(coalesce(cond, lit(false))))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val tag = SnapshotTable.uniqueTag()
     val rels = SnapshotTable.writeDataFiles(
       SnapshotTable.toPhysical(kept, map), root, s"del_$tag")
     // zero-row part files are not manifested (see SnapshotTable.delete)
@@ -1255,15 +1255,10 @@ private[sources] class SnapshotScan(root: String, version: Int,
             val longs = vs.flatMap(SnapshotScanBuilder.longValue)
             // non-numeric key values: no sound file-level judgment — keep all
             if (longs.length != vs.length) None
-            else Some((e: SnapshotTable.FileEntry) => {
-              val (l, h) = e.statsFor(p, primaryPhys)
-              longs.exists(v => l <= v && h >= v)
-            })
+            else Some((e: SnapshotTable.FileEntry) =>
+              longs.exists(v => e.overlaps(p, primaryPhys, v, v)))
           case _ => SnapshotScanBuilder.bound(f, c).map { case (qlo, qhi) =>
-            (e: SnapshotTable.FileEntry) => {
-              val (l, h) = e.statsFor(p, primaryPhys)
-              l <= qhi && h >= qlo
-            }
+            (e: SnapshotTable.FileEntry) => e.overlaps(p, primaryPhys, qlo, qhi)
           }
         }
       }.toSeq
@@ -1446,12 +1441,8 @@ private[sources] class SnapshotScan(root: String, version: Int,
           SnapshotScanBuilder.bound(f, c).map(c -> _)).toSeq)
     val statically =
       if (bounds.isEmpty) all
-      else all.filter { e =>
-        bounds.forall { case (c, (qlo, qhi)) =>
-          val (l, h) = e.statsFor(judgeCols(c), primaryPhys)
-          l <= qhi && h >= qlo
-        }
-      }
+      else all.filter(e => bounds.forall { case (c, (qlo, qhi)) =>
+        e.overlaps(judgeCols(c), primaryPhys, qlo, qhi) })
     runtimeKeep.fold(statically)(statically.filter)
   }
 
@@ -2359,13 +2350,9 @@ private[graft] object SnapshotCommit {
     val rels = messages.collect { case SnapshotFileCommit(rel) if rel.nonEmpty => rel }
       .toSeq.sorted
     if (rels.isEmpty && extraMeta.isEmpty && !replace) return
-    var done = false
     val harvested = scala.collection.mutable.Map.empty[String,
       Seq[SnapshotTable.FileEntry]]
-    val retry = new SnapshotTable.CommitRetry(root)
-    while (!done) {
-      val v = SnapshotTable.currentVersion(root)
-      retry.observed(v)
+    SnapshotTable.casCommit(root) { v =>
       // a CAS retry may land on a base whose CHECK constraints CHANGED
       // since the rows were written and per-row-checked (a racing ADD
       // CONSTRAINT validated only ITS base's resident data): the rows
@@ -2403,18 +2390,13 @@ private[graft] object SnapshotCommit {
         SnapshotTable.harvestEntries(
           org.apache.spark.sql.SparkSession.active, root, rels,
           statsCol.getOrElse(""))) // no stats column: rows-only sentinel lo/hi
-      try {
-        // carry EVERY query's epoch watermark forward (a commit that
-        // dropped another streaming writer's `epoch:` key would erase
-        // that query's replay protection — the Delta txn map keeps one
-        // version per appId for exactly this reason); our own key is
-        // overwritten by extraMeta
-        SnapshotTable.commitEntries(root, v, existing ++ fresh, shardSize = 16,
-          meta ++ extraMeta)
-        done = true
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) // lost CAS: re-read, retry
-      }
+      // carry EVERY query's epoch watermark forward (a commit that
+      // dropped another streaming writer's `epoch:` key would erase
+      // that query's replay protection — the Delta txn map keeps one
+      // version per appId for exactly this reason); our own key is
+      // overwritten by extraMeta
+      SnapshotTable.commitEntries(root, v, existing ++ fresh, shardSize = 16,
+        meta ++ extraMeta)
     }
     // a CREATE-time identity declaration (pending marker) applies on
     // the table's first commit — one metadata-only follow-up, the same
@@ -2453,7 +2435,7 @@ private[sources] case class SnapshotWriterFactory(root: String,
 
   private def writer(partitionId: Int, epochId: Long): DataWriter[InternalRow] = {
     val rel = s"data_w_e${epochId}_p${partitionId}_" +
-      s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
+      s"${SnapshotTable.uniqueTag()}.parquet"
     new PartitionFileWriter(root, rel, parquetSchema, schema, checks,
       srcIdx, fills, nestedMap)
   }
@@ -3023,7 +3005,7 @@ private[sources] case class SnapshotReaderFactory(projectedMessage: String,
   * inner reader runs without its deletion vector so skipped rows still
   * advance the position — anti-filters DV'd ordinals, and resolves
   * `_row_id` = coalesce(materialized __row_id, partition base +
-  * ordinal): byte-for-byte the [[SnapshotTable.relsWithIds]] rule, so
+  * ordinal): byte-for-byte the [[SnapshotTable.readWithRowIds]] rule, so
   * the DSv2 route and the Scala route cannot diverge. */
 private[sources] case class SnapshotRowIdReaderFactory(projectedMessage: String,
     innerPruned: StructType, out: StructType,

@@ -75,7 +75,7 @@ object SnapshotSink {
       if (v == 0) -1L
       else ST.manifestMeta(root, v).get(LastBatchKey).map(_.toLong).getOrElse(-1L)
     if (batchId <= lastCommitted(ST.currentVersion(root))) return false
-    val tag = f"$tagPrefix$batchId%05d_${java.util.UUID.randomUUID().toString.take(8)}"
+    val tag = f"$tagPrefix$batchId%05d_${ST.uniqueTag()}"
     // the batch arrives under LOGICAL names; files carry physical ones
     // (identity for unmapped tables — the overwhelmingly common case).
     // CHECK constraints verify each row inside the write job (the
@@ -118,33 +118,27 @@ object SnapshotSink {
     val entries = ST.harvestEntries(df.sparkSession, root,
       ST.writeDataFiles(ST.toPhysical(checked, map), root, tag),
       ST.physicalName(map, keyCol))
-    val retry = new ST.CommitRetry(root)
-    while (true) {
-      val v = ST.currentVersion(root)
-      retry.observed(v)
-      if (batchId <= lastCommitted(v)) return false // raced replay: someone committed it
-      // the batch's rows were checked against cv's constraints; a
-      // racing ADD CONSTRAINT in between validated only ITS resident
-      // data — committing the already-written files under the new
-      // invariant would be unvalidated, so abort loudly (the stream
-      // restarts and re-checks the replayed batch)
-      if (ST.checkConstraints(root, v) != plannedChecks)
-        throw new IllegalStateException(
-          s"graft-snapshot sink: CHECK constraints of $root changed while " +
-            s"batch $batchId was in flight — restart re-validates the batch")
-      try {
+    ST.casCommit(root) { v =>
+      if (batchId <= lastCommitted(v)) false // raced replay: someone committed it
+      else {
+        // the batch's rows were checked against cv's constraints; a
+        // racing ADD CONSTRAINT in between validated only ITS resident
+        // data — committing the already-written files under the new
+        // invariant would be unvalidated, so abort loudly (the stream
+        // restarts and re-checks the replayed batch)
+        if (ST.checkConstraints(root, v) != plannedChecks)
+          throw new IllegalStateException(
+            s"graft-snapshot sink: CHECK constraints of $root changed while " +
+              s"batch $batchId was in flight — restart re-validates the batch")
         ST.commitEntries(root, v, baseOf(v) ++ entries,
           shardSize, ST.carriedMeta(root, v) ++ extraMeta +
             (LastBatchKey -> batchId.toString))
         // a CREATE-time identity declaration (pending marker) applies
         // on the table's first commit, whichever route lands it
         ST.applyPendingIdentity(df.sparkSession, root)
-        return true
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) // CAS lost: re-read, retry
+        true
       }
     }
-    false // unreachable
   }
 
   /** st8's ingest-batch boundaries (epoch days; the events table spans
@@ -235,27 +229,22 @@ object SnapshotSink {
     // the (already tiny, per-key) batch state — the broadcast-scalar
     // pattern, not a table materialization
     val kb = state.agg(min(col(keyCol)), max(col(keyCol))).head()
-    val retry = new ST.CommitRetry(root)
-    while (true) {
-      val v = ST.currentVersion(root)
-      retry.observed(v)
-      if (batchId <= lastCommitted(v)) return false // raced replay: someone committed it
-      try {
-        if (v == 0) {
-          // first batch creates the table (merge needs a base version);
-          // statsCol makes every later merge/DSv2 read key-prunable
-          val tag = f"b$batchId%05d_${java.util.UUID.randomUUID().toString.take(8)}"
-          val entries = ST.harvestEntries(state.sparkSession, root,
-            ST.writeDataFiles(state, root, tag), keyCol)
-          ST.commitEntries(root, 0, entries, shardSize = 4,
-            Map("statsCol" -> keyCol, LastBatchKey -> batchId.toString))
-          return true
-        }
-        if (kb.isNullAt(0)) { // empty batch: advance the id, carry entries
-          ST.commitEntries(root, v, ST.manifestEntries(root, v), shardSize = 4,
-            ST.carriedMeta(root, v) + (LastBatchKey -> batchId.toString))
-          return true
-        }
+    ST.casCommit(root) { v =>
+      if (batchId <= lastCommitted(v)) false // raced replay: someone committed it
+      else if (v == 0) {
+        // first batch creates the table (merge needs a base version);
+        // statsCol makes every later merge/DSv2 read key-prunable
+        val tag = f"b$batchId%05d_${ST.uniqueTag()}"
+        val entries = ST.harvestEntries(state.sparkSession, root,
+          ST.writeDataFiles(state, root, tag), keyCol)
+        ST.commitEntries(root, 0, entries, shardSize = 4,
+          Map("statsCol" -> keyCol, LastBatchKey -> batchId.toString))
+        true
+      } else if (kb.isNullAt(0)) { // empty batch: advance the id, carry entries
+        ST.commitEntries(root, v, ST.manifestEntries(root, v), shardSize = 4,
+          ST.carriedMeta(root, v) + (LastBatchKey -> batchId.toString))
+        true
+      } else {
         val all = ST.manifestEntries(root, v)
         val cands = ST.prunedEntries(root, v, kb.getLong(0), kb.getLong(1))
         // combine only against may-match files: a key absent from every
@@ -263,10 +252,7 @@ object SnapshotSink {
         // so the full_outer over the pruned read is the full_outer over
         // the table restricted to the batch's keys — which is all the
         // left_semi below keeps anyway
-        val current =
-          if (cands.isEmpty) state.filter(lit(false))
-          else ST.subsetReader(s, root, v)
-            .parquet(cands.map(e => Paths.get(root, e.rel).toString): _*)
+        val current = ST.readFiles(s, root, v, cands)
         val stateCols = state.columns.filterNot(_ == keyCol)
         // combine column-wise: table row ⊕ batch row where both exist
         val combined = current.as("t").join(state.as("b"), Seq(keyCol), "full_outer")
@@ -286,12 +272,9 @@ object SnapshotSink {
           extraMeta = Map(LastBatchKey -> batchId.toString,
             "upsert_scan" -> s"${cands.size}of${all.size}"),
           baseVersion = v)
-        return true
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException => retry.lost(e) // CAS lost: re-read, retry
+        true
       }
     }
-    false // unreachable
   }
 
   /** st11_stream_upsert_sink — the CDC-style per-user state table a

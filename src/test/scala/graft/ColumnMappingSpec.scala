@@ -65,6 +65,16 @@ class ColumnMappingSpec extends AnyFunSuite {
       s"filter on the renamed stats column did not prune: ${scan.rdd.getNumPartitions} partitions")
   }
 
+  test("readPrunedBox takes LOGICAL names on a renamed column and still prunes") {
+    val root = fresh("prunebox")
+    ST.renameColumn(spark, root, "k", "key")
+    val box = ST.readPrunedBox(spark, root, "key", Seq(("key", 1L, 2L)))
+    assert(box.columns.toSeq == Seq("key", "tag", "v"))
+    assert(box.select("key").as[Long].collect().toSet == Set(1L, 2L))
+    assert(box.inputFiles.length == 1,
+      s"box on the renamed stats column did not prune: ${box.inputFiles.toSeq}")
+  }
+
   test("DROP hides the column everywhere; re-ADD gets a fresh physical — no resurrection") {
     val root = fresh("drop")
     val before = dataFiles(root)

@@ -75,6 +75,36 @@ class DvSpec extends AnyFunSuite {
     assert(ST.readPruned(spark, root, "k", 1L, 5L).count() == 4)
   }
 
+  test("readPrunedBox applies deletion vectors like every other read") {
+    val root = fresh("box")
+    spark.sql(s"DELETE FROM '$root' WHERE k IN (3, 25)").collect()
+    val got = ST.readPrunedBox(spark, root, "k", Seq(("k", 1L, 5L)))
+      .select("k").as[Long].collect().sorted.toSeq
+    assert(got == Seq(1L, 2L, 4L, 5L), s"box read resurrected DV'd rows: $got")
+  }
+
+  test("files sharing a base name in sibling directories keep their own vectors") {
+    val root = DvSpec.siblingParts("dv_sib")
+    ST.enableDeletionVectors(root)
+    spark.sql(s"DELETE FROM '$root' WHERE k IN (3, 117)").collect()
+    val v = ST.currentVersion(root)
+    assert(ST.manifestMeta(root, v)("delete") == "dv:2of2",
+      ST.manifestMeta(root, v).toString)
+    // each sidecar lands on its own data file and names exactly the
+    // ordinal of that file's deleted row (a/ holds k 0..99, b/ 100..199)
+    val dv = ST.dvState(root, v)
+    assert(dv.keySet == Set("a/part-0.parquet", "b/part-0.parquet"), dv.toString)
+    def ordinals(rel: String) =
+      spark.read.parquet(Paths.get(root, dv(rel)).toString).as[Long].collect().toSeq
+    assert(ordinals("a/part-0.parquet") == Seq(3L))
+    assert(ordinals("b/part-0.parquet") == Seq(17L))
+    val expect = (0L until 200L).filterNot(k => k == 3L || k == 117L)
+    assert(ST.read(spark, root).select("k").as[Long].collect().sorted.toSeq == expect,
+      "Scala-route DV scan wrong")
+    assert(spark.read.format("graft-snapshot").load(root).select("k").as[Long]
+      .collect().sorted.toSeq == expect, "DSv2-route DV scan wrong")
+  }
+
   test("a second DELETE supersedes sidecars (old ∪ new); vacuum reclaims the old") {
     val root = fresh("supersede")
     spark.sql(s"DELETE FROM '$root' WHERE k = 5").collect()
@@ -358,5 +388,30 @@ class DvSpec extends AnyFunSuite {
     // and RESTORE to the pre-delete version resurfaces the row
     ST.restore(root, 2)
     assert(ST.read(spark, root).count() == 40)
+  }
+}
+
+object DvSpec {
+  import TestSession._
+  import org.apache.spark.sql.functions.col
+
+  /** Two 100-row files that share the base name `part-0.parquet` in
+    * sibling directories (`a/` holds k 0..99, `b/` holds k 100..199),
+    * adopted in place with stats on `k`. */
+  def siblingParts(name: String): String = {
+    val Engine = graft.operators.Engine
+    val root = Engine.tmpDir(s"graft_$name")
+    Engine.listDir(Paths.get(root)).foreach(Engine.deleteRecursively)
+    Seq("a" -> 0L, "b" -> 100L).foreach { case (dir, lo) =>
+      val scratch = Engine.tmpDir(s"graft_${name}_$dir")
+      spark.range(lo, lo + 100).select(col("id").as("k"), (col("id") * 1.0).as("v"))
+        .coalesce(1).write.mode("overwrite").parquet(scratch)
+      val part = Engine.listDir(Paths.get(scratch))
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.createDirectories(Paths.get(root, dir))
+      Files.move(part, Paths.get(root, dir, "part-0.parquet"))
+    }
+    graft.operators.SnapshotTable.convertInPlace(spark, root, "k")
+    root
   }
 }

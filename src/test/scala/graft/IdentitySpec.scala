@@ -125,6 +125,15 @@ class IdentitySpec extends AnyFunSuite {
     val viaDsv2 = spark.read.format("graft-snapshot").load(root)
       .select("k", "id").as[(Long, Long)].collect().toMap
     assert(viaDsv2 == expect, "DSv2 path route diverged")
+    // the pruned and point-lookup reads serve it too
+    def kid(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "id").as[(Long, Long)].collect().toMap
+    assert(kid(ST.readPruned(spark, root, "k", 1L, 100L)) == expect,
+      "readPruned diverged")
+    assert(kid(ST.readPrunedBox(spark, root, "k", Seq(("k", 1L, 100L)))) == expect,
+      "readPrunedBox diverged")
+    assert(kid(ST.readPointLookup(spark, root, "k", Seq(7L, 100L))) ==
+      expect.filter(kv => kv._1 == 7L || kv._1 == 100L), "readPointLookup diverged")
     // with rowIds too: both columns, same values
     val both = spark.read.format("graft-snapshot").option("rowIds", "true")
       .load(root).select("id", "_row_id").as[(Long, Long)].collect()

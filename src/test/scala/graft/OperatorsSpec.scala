@@ -1167,6 +1167,19 @@ class SnapshotStatsSpec extends AnyFunSuite {
       .filter(expr(s"(ts div 1000000000) div 86400").between(ST.X15Lo, ST.X15Hi)).count()
     assert(pruned.map(_.rows).sum >= sfRows)
   }
+
+  test("x15/x22 pruned reads with no surviving file: an empty frame with readAt's schema") {
+    val root = ST.statsTable(spark, sf)
+    val v = ST.currentVersion(root)
+    assert(ST.prunedEntries(root, v, 0L, 1L).isEmpty)
+    val pruned = ST.readPruned(spark, root, "ep_day", 0L, 1L)
+    assert(pruned.schema == ST.readAt(spark, root, v).schema)
+    assert(pruned.count() == 0)
+    val z = ST.zorderTable(spark, sf)
+    val box = ST.readPrunedBox(spark, z, "user_id", Seq(("ep_day", 0L, 1L)))
+    assert(box.schema == ST.read(spark, z).schema)
+    assert(box.count() == 0)
+  }
 }
 
 /** st8's exactly-once streaming commit path: batch↔version mapping,

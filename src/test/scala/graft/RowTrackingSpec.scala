@@ -56,6 +56,16 @@ class RowTrackingSpec extends AnyFunSuite {
     assert(Seq(100L, 101L).map(after).forall(_ >= 40L), "fresh ids below the mark")
   }
 
+  test("files sharing a base name in sibling directories get distinct ids") {
+    val root = DvSpec.siblingParts("rt_sib")
+    ST.enableRowTracking(spark, root)
+    val rows = ST.readWithRowIds(spark, root).select("k", "_row_id")
+      .as[(Long, Long)].collect()
+    assert(rows.length == 200, s"${rows.length} rows for 200")
+    assert(rows.map(_._1).toSet == (0L until 200L).toSet)
+    assert(rows.map(_._2).distinct.length == 200, "row ids collide across the two files")
+  }
+
   test("DELETE preserves ids on both paths: DV (ordinals) and CoW (materialized)") {
     val root = fresh("del")
     ST.enableDeletionVectors(root)
