@@ -779,8 +779,8 @@ object ScaleProbe {
         .agg(max(col("s"))).collect(); 1L
     }
     // r17: add-column EVOLUTION over a nested-typed table — the
-    // evolved scan pays the per-file request (one footer each, the
-    // same price primitive evolution pays) and must stay
+    // evolved scan null-fills the added column per file (the same
+    // price primitive evolution pays) and must stay
     // data-proportional, not blow up against the pre-evolution scan
     time("x47e_arr_scan_preevolve_ref") {
       spark.read.format("graft-snapshot").load(s"$work/snap_arr")

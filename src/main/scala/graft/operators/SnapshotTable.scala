@@ -4592,7 +4592,7 @@ object SnapshotTable {
     * AssertNotNull — the written parquet declares REQUIRED again
     * (Spark's scan-side schemas are always nullable, so an
     * unconformed rewrite would write OPTIONAL beside REQUIRED and the
-    * uniform-table read path's shared request would refuse the mix),
+    * NOT NULL the connector exposes would hold for some files only),
     * and a DML expression that actually produces NULL for such a
     * column fails LOUDLY — parquet REQUIRED is the table's NOT NULL
     * constraint, and Delta refuses constraint-violating writes the

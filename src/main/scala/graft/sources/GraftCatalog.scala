@@ -86,14 +86,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val cur = SnapshotTable.currentVersion(root)
     val schema =
       if (cur > 0)
-        // the exposed schema is the LOGICAL one (column mapping:
-        // renames surface, dropped columns don't); an identity column
-        // appends like the Scala read's; column DEFAULTs re-attach as
+        // the exposed LOGICAL schema; column DEFAULTs re-attach as
         // field metadata (the analyzer's INSERT-fill keys)
-        SnapshotSourceUtil.withDefaults(
-          SnapshotSourceUtil.withIdentity(SnapshotSourceUtil.logicalStruct(
-            SnapshotSourceUtil.sparkSchema(SnapshotSourceUtil.tableMessageType(root)),
-            SnapshotTable.colMap(root, cur)), root, cur), root, cur)
+        SnapshotSourceUtil.exposedSchema(root, cur, defaults = true)
       else
         DataType.fromJson(new String(Files.readAllBytes(schemaFile(d))))
           .asInstanceOf[StructType]
@@ -124,13 +119,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // not a raw filesystem exception mid-planning
     // time travel resolves the mapping AS OF the snapshot: a read
     // before a RENAME surfaces the old names (Delta's contract)
-    val schema = try {
-      SnapshotSourceUtil.withIdentity(
-        SnapshotSourceUtil.logicalStruct(
-          SnapshotSourceUtil.sparkSchema(
-            SnapshotSourceUtil.tableMessageType(root, v)),
-          SnapshotTable.colMap(root, v)), root, v)
-    } catch {
+    val schema = try SnapshotSourceUtil.exposedSchema(root, v) catch {
       case _: java.nio.file.NoSuchFileException => throw new IllegalArgumentException(
         s"graft catalog: version $v of $root was vacuumed away — " +
           "its snapshot is no longer addressable")
@@ -432,12 +421,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         // retry policy reclaims a dead committer's zero-byte claim and
         // fails loudly instead of busy-spinning forever against it.
         SnapshotTable.casCommit(root) { v =>
-          val cur = SnapshotSourceUtil.sparkSchema(
-            SnapshotSourceUtil.tableMessageType(root, v))
+          val cur = SnapshotSourceUtil.physicalSchema(root, v)
           // add-column evolution over NESTED-typed tables is
-          // in-envelope since r17: the per-file request machinery
-          // decodes each file under its own declarations, so the
-          // evolved table keeps reading on this route
+          // in-envelope since r17: Spark's parquet reader null-fills
+          // the added column per file, so the evolved table keeps
+          // reading on this route
           // uniqueness runs in the LOGICAL namespace (what users see)
           val map = SnapshotTable.colMap(root, v)
           val logicalNames = map.map(_.map(_._1)).getOrElse(cur.fieldNames.toSeq)

@@ -7,14 +7,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, Table, TableCapability, TableProvider}
@@ -26,6 +24,9 @@ import org.apache.spark.sql.connector.distributions.{Distribution, Distributions
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsOverwrite, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile, SchemaColumnConvertNotSupportedException}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{AlwaysTrue, And, DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -72,13 +73,15 @@ import graft.operators.SnapshotTable
   *     the first commit at-or-after it via the same commit-time source
   *     time travel uses (in-commit timestamps when present).
   *
-  * Projection pushdown is real: `pruneColumns` narrows the parquet
-  * record schema handed to the file reader, so a 2-column aggregate
-  * over a wide table decodes 2 columns (SnapshotSourceSpec pins the
-  * scan's readSchema). Each data file is one InputPartition — at
-  * 100 TB planning ships (path, schema) pairs, never data, and task
-  * parallelism is file-granular, the same unit the manifest commits
-  * in. */
+  * Data files decode through Spark's own parquet reader
+  * (`ParquetFileFormat`, the reader the path API scans with), so both
+  * routes share one type mapping. Projection pushdown is real:
+  * `pruneColumns` narrows the schema that reader is asked for, so a
+  * 2-column aggregate over a wide table decodes 2 columns
+  * (SnapshotSourceSpec pins the scan's readSchema). Each data file is
+  * one InputPartition — at 100 TB planning ships paths, never data,
+  * and task parallelism is file-granular, the same unit the manifest
+  * commits in. */
 class SnapshotTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-snapshot"
 
@@ -123,18 +126,15 @@ class SnapshotTableProvider extends TableProvider with DataSourceRegister {
     * [[inferSchema]] and the tag-pinning branch of [[getTable]] so a
     * pinned ref's schema and scan derive from the SAME resolution. */
   private def schemaAt(r: String, v: Int,
-      options: CaseInsensitiveStringMap): StructType = {
-    val base = SnapshotSourceUtil.logicalStruct(
-      SnapshotSourceUtil.sparkSchema(SnapshotSourceUtil.tableMessageType(r, v)),
-      SnapshotTable.colMap(r, v))
-    // change-data-feed reads surface the table schema plus the change
-    // metadata columns (Delta's CDF column contract)
-    if (SnapshotSourceUtil.cdfEnabled(options)) SnapshotSourceUtil.withCdfColumns(base)
+      options: CaseInsensitiveStringMap): StructType =
+    // change-data-feed reads surface the table's data columns plus the
+    // change metadata columns (Delta's CDF column contract) — a diff
+    // row has no id contract, so no identity column
+    if (SnapshotSourceUtil.cdfEnabled(options))
+      SnapshotSourceUtil.withCdfColumns(
+        SnapshotSourceUtil.exposedSchema(r, v, identity = false))
     else {
-      // an IDENTITY column surfaces on every plain read (it IS part
-      // of the table's logical schema); CDF mode serves change rows
-      // (data columns only — a diff row has no id contract)
-      val withId = SnapshotSourceUtil.withIdentity(base, r, v)
+      val withId = SnapshotSourceUtil.exposedSchema(r, v)
       if (SnapshotSourceUtil.rowIdsEnabled(options)) {
         // `.option("rowIds", "true")`: the path-route spelling of the
         // x41 row-id read — the table schema plus `_row_id` (the
@@ -147,7 +147,6 @@ class SnapshotTableProvider extends TableProvider with DataSourceRegister {
         SnapshotSourceUtil.withRowIdColumn(withId)
       } else withId
     }
-  }
 
   // the write path hands the incoming query's schema to getTable
   override def supportsExternalMetadata(): Boolean = true
@@ -267,30 +266,45 @@ private[sources] object SnapshotSourceUtil {
     base.add(RowIdField, LongType, nullable = true)
   }
 
-  /** Append the version's IDENTITY column (engine-assigned, = the row
-    * tracking id under a user-facing name) to a resolved logical
-    * schema — the connector twin of [[SnapshotTable.readAt]]'s
-    * identity append. */
-  def withIdentity(base: StructType, root: String, v: Int): StructType =
-    SnapshotTable.identityCol(root, v) match {
-      case Some(ic) if !base.fieldNames.contains(ic) =>
+  /** The LOGICAL schema version `v` of `root` exposes on every DSv2
+    * route (path load, catalog, time travel): the physical schema of
+    * record with the column mapping resolved (renames surface, dropped
+    * columns don't), plus — unless `identity` is off, as on the change
+    * feed — the IDENTITY column (engine-assigned, = the row tracking
+    * id under a user-facing name; the twin of [[SnapshotTable.readAt]]'s
+    * identity append). `defaults` re-attaches column DEFAULTs as field
+    * metadata (the catalog's INSERT-fill keys). */
+  def exposedSchema(root: String, v: Int, identity: Boolean = true,
+      defaults: Boolean = false): StructType = {
+    val base = logicalStruct(physicalSchema(root, v), SnapshotTable.colMap(root, v))
+    val withId = SnapshotTable.identityCol(root, v) match {
+      case Some(ic) if identity && !base.fieldNames.contains(ic) =>
         base.add(ic, LongType, nullable = true)
       case _ => base
     }
+    if (defaults) withDefaults(withId, root, v) else withId
+  }
 
-  /** The nested field mapping TREES by PHYSICAL parent column name:
-    * `pa -> ColNode` — NESTED column mappings (dotted colmap entries,
-    * x44; ARBITRARY depth since r19) resolve on EVERY DSv2 route:
-    * [[logicalStruct]] rebuilds mapped struct columns field-for-field
-    * for schema exposure, the reader factories translate logical field
-    * names through these trees when building their positional decode
-    * plans, and the task WRITER translates the same way so landed
-    * files carry physical names beside residents. The factories'
-    * namespace is physical at the top level (physStruct renamed it)
-    * but struct INNER field names stay logical at every depth — this
-    * is the translation both sides resolve through. Empty when the
-    * table has no dotted colmap entries (the common case — zero
-    * cost). */
+  /** The PHYSICAL (file-named) Spark schema of record of version `v`:
+    * the captured union when the version has one (what the path API's
+    * read core scans with), else the footer schema — one footer on a
+    * uniform table, the union on an evolved one — converted by
+    * [[sparkSchema]]. */
+  def physicalSchema(root: String, v: Int): StructType = {
+    require(v > 0, s"graft-snapshot: $root has no committed version")
+    SnapshotTable.manifestMeta(root, v).get("schemaJson") match {
+      case Some(js) => DataType.fromJson(js).asInstanceOf[StructType]
+      case None => sparkSchema(tableMessageType(root, v))
+    }
+  }
+
+  /** The nested field mapping TREES by PHYSICAL parent column name, for
+    * the task WRITER: `pa -> ColNode` — NESTED column mappings (dotted
+    * colmap entries, x44; ARBITRARY depth since r19) translate incoming
+    * LOGICAL struct field names so landed files carry physical names
+    * beside residents (the writer's top level is physical already —
+    * [[physStruct]] renamed it). Empty when the table has no dotted
+    * colmap entries (the common case — zero cost). */
   def nestedFieldMaps(map: Option[Seq[(String, String)]])
       : Map[String, SnapshotTable.ColNode] = map match {
     case None => Map.empty
@@ -304,7 +318,7 @@ private[sources] object SnapshotSourceUtil {
   /** Re-attach column-DEFAULT metadata (the analyzer's
     * CURRENT_DEFAULT/EXISTS_DEFAULT fill keys) from the manifest's
     * `default.<col>` state — the footer-derived schema carries none. */
-  def withDefaults(base: StructType, root: String, v: Int): StructType = {
+  private def withDefaults(base: StructType, root: String, v: Int): StructType = {
     val ds = SnapshotTable.columnDefaults(root, v)
     if (ds.isEmpty) base
     else StructType(base.fields.map { f =>
@@ -333,13 +347,9 @@ private[sources] object SnapshotSourceUtil {
         nullable = false)
   }
 
-  /** The table's parquet record schema, from the FIRST manifest entry's
-    * footer — one metadata read. Mixed-width (schema-evolved) versions
-    * are rejected: the connector serves uniform-schema tables; evolved
-    * snapshots read through `SnapshotTable.readAt`'s merge path. */
-  /** StructType → parquet record schema, for the WRITE side (the exact
-    * reverse of [[sparkSchema]], so a written table reads back with the
-    * same StructType). */
+  /** StructType → parquet record schema, for the WRITE side (the
+    * reverse of [[sparkSchema]] over the writer's types, so a written
+    * table reads back with the same StructType). */
   def messageType(schema: StructType): MessageType = {
     import org.apache.parquet.schema.Types
     val b = Types.buildMessage()
@@ -347,9 +357,9 @@ private[sources] object SnapshotSourceUtil {
     b.named("spark_schema")
   }
 
-  /** Spark type → parquet type for the WRITE side — primitives plus
-    * (r16) nested STRUCTS as groups, the exact reverse of
-    * [[sparkType]]. */
+  /** Spark type → parquet type for the WRITE side — six primitives plus
+    * (r16) nested STRUCTS as groups and (r17) standard 3-level
+    * LIST/MAP groups. */
   private def parquetType(name: String,
       dt: org.apache.spark.sql.types.DataType,
       nullable: Boolean): org.apache.parquet.schema.Type = {
@@ -413,13 +423,13 @@ private[sources] object SnapshotSourceUtil {
       scala.util.Try(messageType(
         DataType.fromJson(js).asInstanceOf[StructType])).toOption
     }
-    // EVOLVED (mixed-width) and WIDENED versions read through per-file
-    // requests; since r17 those handle NESTED columns too (each file's
-    // request carries its own declarations and the decode plans follow
-    // them), so add-column evolution over a struct/array/map-bearing
-    // table is in-envelope — the union below enforces that the nested
-    // columns THEMSELVES never change shape across files (add-column
-    // evolution only, same rule as primitives).
+    // EVOLVED (mixed-width) versions read each file by NAME through
+    // Spark's parquet reader, which null-fills the columns a file
+    // lacks — also NESTED ones, so add-column evolution over a
+    // struct/array/map-bearing table is in-envelope; the union below
+    // enforces that the nested columns THEMSELVES never change shape
+    // across files (add-column evolution only, same rule as
+    // primitives).
     if (captured.isDefined) captured.get
     else if (entries.isEmpty)
       // a zero-entry version (delete-all) is plannable only through
@@ -442,7 +452,7 @@ private[sources] object SnapshotSourceUtil {
       // the file schemas, in first-appearance order — the same answer
       // parquet mergeSchema resolves, priced the same way (a footer
       // read per file, planning-time only, no data pages). The reader
-      // side null-fills per file (see SnapshotReaderFactory).
+      // null-fills per file (see SnapshotFileReaderFactory).
       val seen = new java.util.LinkedHashMap[String, org.apache.parquet.schema.Type]()
       val hits = new java.util.HashMap[String, Integer]()
       val optionalCarrier = new java.util.HashSet[String]()
@@ -463,12 +473,13 @@ private[sources] object SnapshotSourceUtil {
           } else {
             // NESTED columns (r17): structural identity up to
             // repetition — a CoW rewrite legitimately flips inner
-            // REQUIRED to OPTIONAL and reorders fields, so compare the
-            // nullable-normalized Spark types, not the raw
-            // declarations; a genuinely different shape (new field,
-            // retyped element) refuses like a primitive conflict
+            // REQUIRED to OPTIONAL, so compare the nullable-normalized
+            // Spark types (through the same converter the reader
+            // uses), not the raw declarations; a genuinely different
+            // shape (new field, retyped element) refuses like a
+            // primitive conflict
             require(prev == null || (!prev.isPrimitive &&
-                nullNormalized(sparkType(f)) == nullNormalized(sparkType(prev))),
+                nullNormalized(sparkField(f)) == nullNormalized(sparkField(prev))),
               s"graft-snapshot: evolved table $root has conflicting nested " +
                 s"types for column ${f.getName}: $prev vs $f — add-column " +
                 "evolution only (nested columns themselves cannot evolve)")
@@ -496,8 +507,8 @@ private[sources] object SnapshotSourceUtil {
         } else if (rep == f.getRepetition) f
         else {
           // same group, demoted top-level repetition (the union is a
-          // PLANNING artifact — per-file requests substitute each
-          // file's own declaration before any read)
+          // PLANNING artifact — files are read under their own
+          // declarations)
           val g = f.asGroupType()
           val b0 = org.apache.parquet.schema.Types.buildGroup(rep)
           val b = if (g.getLogicalTypeAnnotation != null)
@@ -512,7 +523,8 @@ private[sources] object SnapshotSourceUtil {
 
   /** Every nullability flag forced true, recursively — structural
     * type identity up to repetition (the evolution union's nested
-    * comparison; Spark's own asNullable is private[spark]). */
+    * comparison) and the reader's null-filling request (Spark's own
+    * asNullable is private[spark]). */
   private[sources] def nullNormalized(dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.DataType = dt match {
     case StructType(fs) => StructType(fs.map(f =>
@@ -523,110 +535,16 @@ private[sources] object SnapshotSourceUtil {
     case other => other
   }
 
-  /** Does the FILE's nested type structurally serve the REQUESTED one?
-    * Containment, not equality: nested column PRUNING narrows the
-    * request (a `SELECT a.b` reads struct<b> from files carrying
-    * struct<b,c>) and a CoW rewrite legitimately reorders inner fields
-    * (decode plans match by name) — so extra file fields and order
-    * divergence must pass. A MISSING requested field or a retyped one
-    * must refuse: inner fields never evolve (add-column evolution
-    * stops at the top level). Nullability is ignored (repetition flips
-    * are legit per-file variance). The per-file reader uses this to
-    * refuse a divergent nested file AT READER BUILD with the file and
-    * column named, instead of dying mid-task on a positional
-    * mis-decode — the read-side close of the schemaJson capture branch
-    * bypassing the footer union's conflict check (r17 note): captured
-    * (zero-footer) planning never sweeps footers, so a hand-registered
-    * divergent file used to surface as an opaque decode error. */
-  private[sources] def structurallyServes(file: org.apache.spark.sql.types.DataType,
-      want: org.apache.spark.sql.types.DataType): Boolean = (file, want) match {
-    case (StructType(ff), StructType(wf)) =>
-      wf.forall(w => ff.exists(f =>
-        f.name == w.name && structurallyServes(f.dataType, w.dataType)))
-    case (ArrayType(fe, _), ArrayType(we, _)) => structurallyServes(fe, we)
-    case (MapType(fk, fv, _), MapType(wk, wv, _)) =>
-      structurallyServes(fk, wk) && structurallyServes(fv, wv)
-    case _ => file == want
-  }
+  /** Parquet schema → Spark schema through Spark's own converter
+    * (`ParquetToSparkSchemaConverter` under the session's settings) —
+    * the mapping Spark's parquet reader and the path API apply, so
+    * dates, decimals, INT96 timestamps, binary and legacy 2-level
+    * lists expose as they read. REQUIRED exposes as NOT NULL. */
+  def sparkSchema(m: MessageType): StructType =
+    new ParquetToSparkSchemaConverter(SQLConf.get).convert(m)
 
-  /** Parquet type → Spark type: primitives plus (r16) NESTED GROUPS
-    * as StructType plus (r17) LIST/MAP logical-type groups as
-    * ArrayType/MapType — the standard THREE-LEVEL repeated-group
-    * encoding (what Spark, Arrow and DuckDB all write: `<rep> group c
-    * (LIST) { repeated group list { <rep> T element; } }`). Decode is
-    * POSITIONAL, so the inner names (`list`/`element` vs `array` vs
-    * `item`) don't matter — the shape is the contract. Legacy 2-level
-    * lists (a bare REPEATED field) stay refused loudly. */
-  private[sources] def sparkType(f: org.apache.parquet.schema.Type): org.apache.spark.sql.types.DataType = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    // a bare REPEATED field (parquet's legacy 2-level list) is outside
-    // the envelope whatever its kind — a repeated PRIMITIVE would
-    // otherwise map to its scalar type and the reader's (j, 0) access
-    // would silently serve only element 0 of each row's list (r16
-    // review); the standard 3-level encoding never reaches here (its
-    // repeated inner group is consumed by the LIST/MAP branches below)
-    require(!f.isRepetition(org.apache.parquet.schema.Type.Repetition.REPEATED),
-      s"graft-snapshot: bare repeated field ${f.getName} (legacy 2-level " +
-        "list) is outside the connector's envelope — read through " +
-        "SnapshotTable.readAt")
-    if (f.isPrimitive) f.asPrimitiveType().getPrimitiveTypeName match {
-      case PrimitiveTypeName.INT64 => LongType
-      case PrimitiveTypeName.INT32 => IntegerType
-      case PrimitiveTypeName.DOUBLE => DoubleType
-      case PrimitiveTypeName.FLOAT => FloatType
-      case PrimitiveTypeName.BOOLEAN => BooleanType
-      case PrimitiveTypeName.BINARY => StringType
-      case other => sys.error(s"graft-snapshot: unsupported column type $other (${f.getName})")
-    } else {
-      val g = f.asGroupType()
-      def repeatedInner(expectFields: Int, what: String): org.apache.parquet.schema.GroupType = {
-        require(g.getFieldCount == 1 && !g.getType(0).isPrimitive &&
-            g.getType(0).isRepetition(org.apache.parquet.schema.Type.Repetition.REPEATED) &&
-            g.getType(0).asGroupType().getFieldCount == expectFields,
-          s"graft-snapshot: $what column ${f.getName} is not the standard " +
-            "3-level repeated-group encoding — read through SnapshotTable.readAt")
-        g.getType(0).asGroupType()
-      }
-      g.getLogicalTypeAnnotation match {
-        case _: LogicalTypeAnnotation.ListLogicalTypeAnnotation =>
-          val el = repeatedInner(1, "LIST").getType(0)
-          ArrayType(sparkType(el),
-            !el.isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED))
-        case _: LogicalTypeAnnotation.MapLogicalTypeAnnotation =>
-          val kv = repeatedInner(2, "MAP")
-          MapType(sparkType(kv.getType(0)), sparkType(kv.getType(1)),
-            !kv.getType(1).isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED))
-        case _ =>
-          StructType(g.getFields.asScala.map(x =>
-            StructField(x.getName, sparkType(x),
-              !x.isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED))).toSeq)
-      }
-    }
-  }
-
-  def sparkSchema(m: MessageType): StructType = StructType(m.getFields.asScala.map { f =>
-    StructField(f.getName, sparkType(f),
-      !f.isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED))
-  }.toSeq)
-
-  /** The parquet request schema for a pruned column set — field order
-    * follows the pruned StructType, which is also the output row
-    * layout. */
-  def projectedMessage(full: MessageType, pruned: StructType): MessageType =
-    new MessageType(full.getName,
-      pruned.fields.map(f => full.getType(full.getFieldIndex(f.name))).toList.asJava)
-
-  /** Load a deletion-vector sidecar's ordinal set (executor- or
-    * driver-side; sidecars are tiny by the selectivity cap). */
-  def loadDvSet(path: String): java.util.HashSet[java.lang.Long] = {
-    val set = new java.util.HashSet[java.lang.Long]()
-    val r = ParquetReader.builder(new GroupReadSupport(), new HadoopPath(path))
-      .withConf(new Configuration()).build()
-    var g = r.read()
-    while (g != null) { set.add(g.getLong("idx", 0)); g = r.read() }
-    r.close()
-    set
-  }
+  private def sparkField(f: org.apache.parquet.schema.Type): DataType =
+    sparkSchema(new MessageType("spark_schema", f)).head.dataType
 
   /** Physical (file-named) struct → the LOGICAL schema the table's
     * column mapping exposes: mapped fields rename, unmapped (dropped)
@@ -653,15 +571,32 @@ private[sources] object SnapshotSourceUtil {
       }
     })
 
-  /** Logical-named struct → physical field names (CDF metadata columns
-    * and anything unmapped pass through). The reader factories operate
-    * entirely in the physical namespace — output rows are positional,
-    * so only `readSchema()` speaks logical. */
+  /** Logical-named struct → physical TOP-LEVEL names, for the task
+    * writer (it translates struct fields itself, through
+    * [[nestedFieldMaps]]); anything unmapped passes through. */
   def physStruct(logical: StructType,
       map: Option[Seq[(String, String)]]): StructType = map match {
     case None => logical
     case Some(_) => StructType(logical.fields.map(f =>
       f.copy(name = SnapshotTable.physicalName(map, f.name))))
+  }
+
+  /** Logical-named struct → the reader's PHYSICAL request: names
+    * translate through the column mapping tree at every depth, mapped
+    * struct fields included, since Spark's parquet reader matches
+    * fields by name. Output rows are positional, so only
+    * `readSchema()` speaks logical. */
+  def physicalRequest(logical: StructType,
+      map: Option[Seq[(String, String)]]): StructType = {
+    def rename(st: StructType, node: SnapshotTable.ColNode): StructType =
+      StructType(st.fields.map { f =>
+        val dt = (f.dataType, node.children.get(f.name)) match {
+          case (s: StructType, Some(child)) => rename(s, child)
+          case (other, _) => other
+        }
+        f.copy(name = node.physicalOf(f.name), dataType = dt)
+      })
+    map.fold(logical)(m => rename(logical, SnapshotTable.parseColTree(m)))
   }
 }
 
@@ -1202,13 +1137,6 @@ private[sources] class SnapshotScan(root: String, version: Int,
 
   private def aggOnly: Boolean = aggAnswer.isDefined
 
-  // nested (dotted) colmap entries resolve through the reader
-  // factories' field-name translation (r17; arbitrary depth r19) —
-  // shared by the plain, rowIds and CDF decode plans below
-  private val nestedMap: Map[String, SnapshotTable.ColNode] =
-    if (version == 0) Map.empty
-    else SnapshotSourceUtil.nestedFieldMaps(SnapshotTable.colMap(root, version))
-
   /** Runtime (join-driven) file pruning — the DSv2 analog of dynamic
     * partition pruning: Spark evaluates the dim side of a join first,
     * hands the fact scan the resulting key set as an In/EqualTo filter
@@ -1325,100 +1253,37 @@ private[sources] class SnapshotScan(root: String, version: Int,
     "graft-snapshot: rowIds and readChangeFeed are mutually exclusive — change " +
       "rows are commit diffs, not snapshot rows, and carry no id contract")
 
-  /** Row-id read: the inner parquet request is the projection's TABLE
-    * columns PLUS `__row_id` (INT64 OPTIONAL). Evolved (per-file
-    * intersecting) mode unconditionally: materialized files carry the
-    * column, positional files don't, and the intersection machinery
-    * already resolves exactly that per-file variance — a positional
-    * file's `__row_id` slot decodes null and the reader falls back to
-    * file base + position (the same coalesce rule as
-    * [[SnapshotTable.readWithRowIds]]). */
-  private def rowIdFactory: SnapshotRowIdReaderFactory = {
-    // nested columns (structs/lists/maps) decode through the per-file
-    // machinery since r17: each file's request carries ITS OWN
-    // declarations and the nested decode plans follow them (inner
-    // layout and repetitions can diverge per file after CoW rewrites)
-    val map = SnapshotTable.colMap(root, version)
-    val basePhys = SnapshotSourceUtil.physStruct(StructType(
-      pruned.fields.filterNot(f => idOutNames.contains(f.name))), map)
-    val full = SnapshotSourceUtil.tableMessageType(root, version)
-    val msg = SnapshotSourceUtil.projectedMessage(full, basePhys)
-    val withId = new MessageType(msg.getName,
-      (msg.getFields.asScala.toList :+ org.apache.parquet.schema.Types
-        .primitive(PrimitiveTypeName.INT64,
-          org.apache.parquet.schema.Type.Repetition.OPTIONAL)
-        .named(SnapshotTable.RowIdCol)).asJava:
-        java.util.List[org.apache.parquet.schema.Type])
-    val innerPruned = basePhys.add(SnapshotTable.RowIdCol, LongType, nullable = true)
+  /** The scan's one data-file reader — batch, row ids, batch CDF and
+    * both streams. Its request is the projection's TABLE columns in
+    * physical names (nested-mapped struct fields included), plus
+    * `__row_id` for id reads — a positional file decodes it null and
+    * the reader falls back to file base + row index, the
+    * [[SnapshotTable.readWithRowIds]] rule. File row indexes ride
+    * along whenever rows need their ordinal: deletion vectors, ids,
+    * and the change feed's DV deltas. Lazy: a manifest-answered scan
+    * never builds it. */
+  private lazy val readerFactory: SnapshotFileReaderFactory = {
+    import SnapshotFileReaderFactory.{IdSlot, TsSlot, TypeSlot, VersionSlot}
+    val cdfSlots =
+      if (!cdfMode) Map.empty[String, Int]
+      else Map(SnapshotSourceUtil.CdfTypeCol -> TypeSlot,
+        SnapshotSourceUtil.CdfVersionCol -> VersionSlot,
+        SnapshotSourceUtil.CdfTimestampCol -> TsSlot)
+    val data = StructType(pruned.fields.filterNot(f =>
+      idOutNames.contains(f.name) || cdfSlots.contains(f.name)))
+    val slots = pruned.fields.map(f =>
+      if (idOutNames.contains(f.name)) IdSlot
+      else cdfSlots.getOrElse(f.name, data.fieldIndex(f.name)))
     // a declared START WITH offsets the IDENTITY spelling only —
     // `_row_id` stays the raw 0-based engine id on every route
-    val starts: Map[String, Long] = identCol match {
-      case Some(ic) if idOutNames.contains(ic) =>
-        val st = SnapshotTable.identityStart(root, version)
-        if (st == 0L) Map.empty else Map(ic -> st)
-      case _ => Map.empty
-    }
-    SnapshotRowIdReaderFactory(withId.toString, innerPruned,
-      SnapshotSourceUtil.physStruct(pruned, map), idOutNames, nestedMap, starts)
-  }
-
-  private def factory: SnapshotReaderFactory = {
-    // the SCAN's version, not the current one: a time-travel read must
-    // request the parquet schema as of its snapshot (nullability and
-    // width can both differ after later rewrites)
-    val full = SnapshotSourceUtil.tableMessageType(root, version)
-    // evolved (mixed-width) versions pay the per-file request
-    // intersection in the reader; uniform tables keep the zero-extra-IO
-    // fast path (the flag is the same one readAt gates mergeSchema on).
-    // Type-WIDENED versions (`widen`) are evolved the same way: files
-    // narrower than the schema of record need the per-file request
-    // (and the reader's per-slot upcast) to decode correctly.
-    // nested-bearing projections stay on the SAME shared-request fast
-    // path: parquet materializes group fields BY NAME under the
-    // request, so inner-order divergence across files is handled, and
-    // the reader auto-degrades a single file to per-file mode iff its
-    // repetitions genuinely mismatch (see the fallback in
-    // SnapshotReaderFactory — zero extra IO unless a file refuses)
-    val evolved = version > 0 && {
-      val m = SnapshotTable.manifestMeta(root, version)
-      m.contains("schema") || m.contains("widen")
-    }
-    // reader namespace is PHYSICAL (files' own names): translate the
-    // pruned projection through the version's column mapping; output
-    // rows are positional, so readSchema() stays logical
-    val prunedPhys = SnapshotSourceUtil.physStruct(pruned,
-      SnapshotTable.colMap(root, version))
-    SnapshotReaderFactory(
-      SnapshotSourceUtil.projectedMessage(full, prunedPhys).toString, prunedPhys,
-      evolved, nestedMap)
-  }
-
-  /** CDF reader: the parquet request carries only the TABLE columns of
-    * the projection; the change metadata columns are per-partition
-    * constants appended by the wrapper. Always per-file-intersecting
-    * (`evolved = true`): a delete partition reads a file committed
-    * under an OLDER — possibly narrower — width than the scan's
-    * resolved schema, and the feed must null-fill those gaps exactly
-    * like an evolved snapshot read (one footer pre-read per changed
-    * file — batch-proportional, the CDC price). */
-  private def cdfFactory: SnapshotCdfReaderFactory = {
-    // nested columns (structs/lists/maps) decode through the per-file
-    // machinery since r17: each changed file's request carries ITS
-    // OWN declarations and the nested decode plans follow them (a CoW
-    // rewrite can reorder inner fields and flip repetitions per file)
-    // physical namespace throughout (see factory): table columns
-    // translate through the mapping; CDF metadata columns are never
-    // mapped and pass through
-    val map = SnapshotTable.colMap(root, version)
-    val base = SnapshotSourceUtil.physStruct(StructType(pruned.fields.filterNot(f =>
-      f.name == SnapshotSourceUtil.CdfTypeCol ||
-        f.name == SnapshotSourceUtil.CdfVersionCol ||
-        f.name == SnapshotSourceUtil.CdfTimestampCol)), map)
-    val outPhys = SnapshotSourceUtil.physStruct(pruned, map)
-    val full = SnapshotSourceUtil.tableMessageType(root, version)
-    SnapshotCdfReaderFactory(
-      SnapshotSourceUtil.projectedMessage(full, base).toString, base, outPhys,
-      nestedMap)
+    val start = identCol.filter(idOutNames.contains)
+      .fold(0L)(_ => SnapshotTable.identityStart(root, version))
+    val starts = pruned.fields.map(f => if (identCol.contains(f.name)) start else 0L)
+    val ordinals = rowIdMode || cdfMode ||
+      (version > 0 && SnapshotTable.dvState(root, version).nonEmpty)
+    SnapshotFileReaderFactory(
+      SnapshotSourceUtil.physicalRequest(data, SnapshotTable.colMap(root, version)),
+      slots, starts, ids = rowIdMode, ordinals = ordinals)
   }
 
   /** The version's entries that survive the pushed filters' combined
@@ -1477,7 +1342,7 @@ private[sources] class SnapshotScan(root: String, version: Int,
         s"graft-snapshot CDF: version window ($startV, $endV] out of range (table at $version)")
       override def planInputPartitions(): Array[InputPartition] =
         SnapshotCdf.partitions(root, startV, endV)
-      override def createReaderFactory(): PartitionReaderFactory = cdfFactory
+      override def createReaderFactory(): PartitionReaderFactory = readerFactory
     }
     new Batch {
     // version + file list pinned at PLAN time: later commits never
@@ -1501,12 +1366,7 @@ private[sources] class SnapshotScan(root: String, version: Int,
         case None => files.map(p => p: InputPartition)
       }
     override def createReaderFactory(): PartitionReaderFactory =
-      // zero planned files (empty table / everything pruned): the
-      // factory is never invoked, and building the real one would
-      // footer-read a data file that may not exist
-      if (aggOnly || files.isEmpty) SnapshotAggReaderFactory
-      else if (rowIdMode) rowIdFactory
-      else factory
+      if (aggOnly) SnapshotAggReaderFactory else readerFactory
     }
   }
 
@@ -1583,10 +1443,10 @@ private[sources] class SnapshotScan(root: String, version: Int,
         "exclusive — the change feed delivers exactly the commits " +
         "skipChangeCommits would drop")
     if (cdfMode) new SnapshotCdfMicroBatchStream(root, startingVersion, perTrigger,
-      cdfFactory, maxBytes)
+      readerFactory, maxBytes)
     else new SnapshotMicroBatchStream(root, startingVersion, perTrigger,
-      if (rowIdMode) rowIdFactory else factory,
-      skipChanges, attachBases = rowIdMode, maxBytesPerTrigger = maxBytes)
+      readerFactory, skipChanges, attachBases = rowIdMode,
+      maxBytesPerTrigger = maxBytes)
   }
 }
 
@@ -1769,7 +1629,7 @@ private[sources] case class SnapshotAggPartition(values: Array[Any]) extends Inp
   * schema is resolved once at start — Delta's contract too). */
 private[sources] class SnapshotCdfMicroBatchStream(root: String,
     startingVersion: Int, maxVersionsPerTrigger: Int,
-    factory: SnapshotCdfReaderFactory, maxBytesPerTrigger: Option[Long] = None)
+    factory: PartitionReaderFactory, maxBytesPerTrigger: Option[Long] = None)
     extends MicroBatchStream with AvailableNowCapped {
 
   protected def capRoot: String = root
@@ -1888,79 +1748,6 @@ private[sources] object SnapshotCdf {
       val cts = SnapshotTable.commitTimeMillis(root, v)
       parts.map(_.copy(commitTsMillis = cts))
     }.toArray
-}
-
-/** Wraps the plain file reader, appending the per-partition change
-  * metadata columns. `base` is the projection's TABLE columns (the
-  * parquet request); `out` is the full output row layout, which may
-  * interleave the metadata columns anywhere the projection put them. */
-private[sources] case class SnapshotCdfReaderFactory(projectedMessage: String,
-    base: StructType, out: StructType,
-    nestedMap: Map[String, SnapshotTable.ColNode] = Map.empty)
-    extends PartitionReaderFactory {
-
-  // per-file width intersection unconditionally: delete partitions read
-  // files committed under older (narrower) widths than the scan schema
-  private val inner = SnapshotReaderFactory(projectedMessage, base,
-    evolved = true, nestedMap)
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val cp = p.asInstanceOf[SnapshotCdfPartition]
-    // DELTA mode (see SnapshotCdfPartition): plain inner read, keep
-    // only ordinals in keepDvPath ∖ dvPath — implemented as a skip-all
-    // -but-the-difference wrapper below
-    val delta = cp.keepDvPath.map { k =>
-      val keep = SnapshotSourceUtil.loadDvSet(k)
-      cp.dvPath.foreach(d => keep.removeAll(SnapshotSourceUtil.loadDvSet(d)))
-      keep
-    }
-    val innerReader0 = inner.createReader(SnapshotFilePartition(cp.path,
-      if (delta.isDefined) None else cp.dvPath))
-    val innerReader = delta match {
-      case None => innerReader0
-      case Some(keep) => new PartitionReader[InternalRow] {
-        private var ord = -1L
-        override def next(): Boolean = {
-          var has = innerReader0.next(); ord += 1
-          while (has && !keep.contains(ord)) { has = innerReader0.next(); ord += 1 }
-          has
-        }
-        override def get(): InternalRow = innerReader0.get()
-        override def close(): Unit = innerReader0.close()
-      }
-    }
-    val changeType = UTF8String.fromString(cp.changeType)
-    val version = cp.commitVersion.toLong
-    // TimestampType's internal representation is MICROS since epoch
-    val tsMicros = cp.commitTsMillis * 1000L
-    // out slot i ← base slot (>=0), change type (-1), version (-2),
-    // or commit timestamp (-3)
-    val slot: Array[Int] = out.fields.map { f =>
-      if (f.name == SnapshotSourceUtil.CdfTypeCol) -1
-      else if (f.name == SnapshotSourceUtil.CdfVersionCol) -2
-      else if (f.name == SnapshotSourceUtil.CdfTimestampCol) -3
-      else base.fieldIndex(f.name)
-    }
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = innerReader.next()
-      override def get(): InternalRow = {
-        val in = innerReader.get()
-        val vals = new Array[Any](slot.length)
-        var i = 0
-        while (i < slot.length) {
-          vals(i) = slot(i) match {
-            case -1 => changeType
-            case -2 => version
-            case -3 => tsMicros
-            case j => in.get(j, base.fields(j).dataType)
-          }
-          i += 1
-        }
-        new GenericInternalRow(vals)
-      }
-      override def close(): Unit = innerReader.close()
-    }
-  }
 }
 
 /** The write side of the connector: `df.write.format("graft-snapshot")
@@ -2123,9 +1910,10 @@ private[sources] class SnapshotWriteBuilder(root: String, info: LogicalWriteInfo
     // append route): two INSERTs whose analyzer-derived nullability
     // differs (a column-list insert filling non-null DEFAULTs beside
     // a positional one, say) would otherwise write REQUIRED beside
-    // OPTIONAL and the uniform-table read's shared request refuses
-    // the mix. REQUIRED slots get a loud per-row null guard in the
-    // writer — parquet REQUIRED is the table's NOT NULL constraint.
+    // OPTIONAL, and the NOT NULL the table exposes from its files'
+    // REQUIRED declarations would hold for some files only. REQUIRED
+    // slots get a loud per-row null guard in the writer — parquet
+    // REQUIRED is the table's NOT NULL constraint.
     val physMsg = if (cur == 0) None
       else scala.util.Try(SnapshotSourceUtil.tableMessageType(root, cur)).toOption
     val phys = physMsg.fold(phys0)(m => StructType(phys0.fields.map { f =>
@@ -2136,8 +1924,8 @@ private[sources] class SnapshotWriteBuilder(root: String, info: LogicalWriteInfo
     }))
     // NESTED columns (structs r16, lists/maps r17) write under the
     // RESIDENT footer's group type verbatim (inner field order AND
-    // repetition must match the files this one sits beside — the
-    // uniform read's shared request refuses a mix); compatibility is
+    // repetition match the files this one sits beside, so nested NOT
+    // NULL fields stay NOT NULL in every file); compatibility is
     // checked here at plan time: an incoming field the resident group
     // lacks is struct-field evolution (needs a rewrite), an omitted
     // REQUIRED field has no value to write. RECURSIVE compatibility:
@@ -2417,8 +2205,9 @@ private[graft] object SnapshotCommit {
 }
 
 /** Executor-side writer: each task streams its rows into one immutable
-  * uniquely-named parquet file under the table root via the example
-  * Group API (the write twin of the read path). */
+  * uniquely-named parquet file under the table root via parquet-mr's
+  * example Group API, whose NOT NULL guards at every nested depth
+  * Spark's own writer lacks. */
 private[sources] case class SnapshotWriterFactory(root: String,
     parquetSchema: String, schema: StructType,
     checks: Seq[(String, String,
@@ -2669,393 +2458,155 @@ private[sources] object SnapshotAggReaderFactory extends PartitionReaderFactory 
     }
 }
 
-/** Executor-side reader: parquet example-Group records of ONE file,
-  * decoded to InternalRow through the PRUNED request schema — columns
-  * outside the projection are never decompressed.
-  *
-  * Evolution-aware: the request is intersected with THIS file's footer
-  * schema before the scan (parquet rejects a request naming a column
-  * the file lacks), and fields outside the file surface as null — the
-  * add-column contract. An unevolved file carries every requested
-  * column, so the intersection is the identity and the fast path pays
-  * one footer read (already required by parquet's own open). */
-private[sources] case class SnapshotReaderFactory(projectedMessage: String,
-    pruned: StructType, evolved: Boolean = false,
-    nestedMap: Map[String, SnapshotTable.ColNode] = Map.empty)
+
+/** The one executor-side reader of table data files, on every route —
+  * batch, row ids, batch CDF and both micro-batch streams. Each file
+  * decodes through Spark's own parquet reader (`ParquetFileFormat`,
+  * the one the path API scans with), built ONCE on the driver over the
+  * physical `request`: columns are matched by name, a column a file
+  * lacks null-fills (add-column evolution), narrower files upcast
+  * (type widening), and only requested columns are decompressed. What
+  * the format cannot know, this wrapper adds per partition:
+  *   - deletion vectors: rows whose file row index is in the
+  *     partition's sidecar set are skipped;
+  *   - change-feed DV deltas: only row indexes in keep ∖ dv surface
+  *     (see [[SnapshotCdfPartition]]);
+  *   - row ids: `_row_id` = coalesce(__row_id, file base + row index)
+  *     plus the identity START WITH offset;
+  *   - the change-feed constant columns.
+  * Output slot i serves request slot `slots(i)` when >= 0, else the
+  * computed value its code names. Rows leave as UnsafeRows, the way
+  * Spark's own file scan emits them: the vectorized reader's rows are
+  * views over reused column vectors. */
+private[sources] class SnapshotFileReaderFactory private (
+    readData: PartitionedFile => Iterator[InternalRow],
+    readDv: Option[PartitionedFile => Iterator[InternalRow]],
+    request: StructType, slots: Array[Int], starts: Array[Long])
     extends PartitionReaderFactory {
+  import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Coalesce, JoinedRow, Literal, UnsafeProjection}
+  import SnapshotFileReaderFactory._
 
-  /** Uniform (shared-request) mode with a PER-FILE FALLBACK: parquet
-    * demands EXACT repetition equality at every depth, and a
-    * Scala-route CoW rewrite can legitimately land nested fields
-    * OPTIONAL beside seed files' REQUIRED — so a file that refuses the
-    * shared request at open (InvalidRecordException, before any row is
-    * served) is retried in per-file mode, where the request carries
-    * ITS own declarations and the decode plans follow them. Uniform
-    * tables — the 100 TB common case — pay ZERO extra footer IO;
-    * only a genuinely divergent file pays one footer re-open. Inner
-    * field ORDER divergence alone never triggers this: parquet
-    * materializes group fields by NAME under the shared request. */
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    if (evolved) createReader0(p)
-    else new PartitionReader[InternalRow] {
-      private var inner = createReader0(p)
-      private var first = true
-      private def repetitionMismatch(e: Throwable): Boolean =
-        Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-          .exists(_.isInstanceOf[org.apache.parquet.io.InvalidRecordException])
-      override def next(): Boolean =
-        if (!first) inner.next()
-        else {
-          first = false
-          try inner.next()
-          catch { case e: Throwable if repetitionMismatch(e) =>
-            try inner.close() catch { case _: Throwable => () }
-            inner = copy(evolved = true).createReader0(p)
-            inner.next()
-          }
-        }
-      override def get(): InternalRow = inner.get()
-      override def close(): Unit = inner.close()
+  private val matSlot = request.fieldNames.indexOf(SnapshotTable.RowIdCol)
+  private val idxSlot = request.fieldNames.indexOf(RowIndexCol)
+
+  /** The output projection over (request row ++ the partition's
+    * constants: row base, change type, commit version, commit
+    * timestamp) — the same expressions for every partition, so one
+    * generated class serves them all. */
+  private def projection(): UnsafeProjection = {
+    val n = request.length
+    def in(i: Int, dt: DataType) = BoundReference(i, dt, nullable = true)
+    UnsafeProjection.create(slots.indices.map { i =>
+      slots(i) match {
+        case IdSlot =>
+          val id = Coalesce(Seq(in(matSlot, LongType),
+            Add(in(n, LongType), in(idxSlot, LongType))))
+          if (starts(i) == 0L) id else Add(id, Literal(starts(i)))
+        case TypeSlot => in(n + 1, StringType)
+        case VersionSlot => in(n + 2, LongType)
+        case TsSlot => in(n + 3, TimestampType)
+        case j => in(j, request(j).dataType)
+      }
+    })
+  }
+
+  /** A deletion-vector sidecar's ordinal set (tiny by the selectivity
+    * cap), read by the same parquet reader as the data. */
+  private def loadDvSet(path: String): java.util.HashSet[java.lang.Long] = {
+    val set = new java.util.HashSet[java.lang.Long]()
+    readDv.get(partitionedFile(path)).foreach(r => set.add(r.getLong(0)))
+    set
+  }
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val (path, dvPath, keepPath, rowBase, change) = p match {
+      case f: SnapshotFilePartition => (f.path, f.dvPath, None, f.rowBase, None)
+      case c: SnapshotCdfPartition => (c.path, c.dvPath, c.keepDvPath, None, Some(c))
     }
-
-  private def createReader0(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[SnapshotFilePartition]
-    val path = fp.path
-    // deletion vector: the ordinals (file positions) this scan must
-    // skip — loaded executor-side from the tiny sidecar parquet
-    val dv: java.util.HashSet[java.lang.Long] =
-      fp.dvPath.map(SnapshotSourceUtil.loadDvSet).orNull
+    val dv = dvPath.map(loadDvSet)
+    val live: InternalRow => Boolean = keepPath.map(loadDvSet) match {
+      case Some(keep) =>
+        dv.foreach(keep.removeAll)
+        r => keep.contains(r.getLong(idxSlot))
+      case None => dv.fold((_: InternalRow) => true)(d => r => !d.contains(r.getLong(idxSlot)))
+    }
+    // no base on record: the positional id is null, never a wrong one
+    val consts = new GenericInternalRow(Array[Any](rowBase.map(Long.box).orNull,
+      change.map(c => UTF8String.fromString(c.changeType)).orNull,
+      change.fold(0L)(_.commitVersion.toLong),
+      // TimestampType's internal representation is MICROS since epoch
+      change.fold(0L)(_.commitTsMillis * 1000L)))
+    val project = projection()
+    val joined = new JoinedRow()
+    val rows = try readData(partitionedFile(path))
+      catch { case e: Exception => throw diverged(path, e) }
     new PartitionReader[InternalRow] {
-      import scala.jdk.CollectionConverters._
-      private val request = MessageTypeParser.parseMessageType(projectedMessage)
-      // the per-file footer pre-read happens ONLY for evolved versions:
-      // a uniform table (the overwhelmingly common case — this is an
-      // extra metadata RPC per file at 100 TB) skips straight to the
-      // shared request schema
-      private val fileMeta: Option[(Map[String, org.apache.parquet.schema.Type], Long)] =
-        if (!evolved) None
-        else {
-          val in = HadoopInputFile.fromPath(new HadoopPath(path), new Configuration())
-          val r = ParquetFileReader.open(in)
-          try Some((r.getFooter.getFileMetaData.getSchema.getFields.asScala
-              .map(f => f.getName -> f).toMap,
-            r.getFooter.getBlocks.asScala.map(_.getRowCount).sum))
-          finally r.close()
-        }
-      private val fileRows: Long = fileMeta.fold(0L)(_._2)
-      // pruned index i → slot in the per-file request, -1 = absent
-      private val slot: Array[Int] = fileMeta match {
-        case None => Array.tabulate(pruned.length)(identity)
-        case Some((fileFields, _)) =>
-          var next = 0
-          pruned.fields.map { f =>
-            if (fileFields.contains(f.name)) { val s = next; next += 1; s } else -1
-          }
-      }
-      // the request must carry the FILE's own field declarations (the
-      // union schema demotes evolution-gap columns to OPTIONAL, which
-      // parquet rejects against a file that declared them REQUIRED)
-      private val fileRequest = fileMeta match {
-        case None => request
-        case Some((fileFields, _)) =>
-          new MessageType(request.getName,
-            request.getFields.asScala.collect {
-              case f if fileFields.contains(f.getName) => fileFields(f.getName)
-            }.toList.asJava: java.util.List[org.apache.parquet.schema.Type])
-      }
-      // a projection of ONLY evolved columns over a pre-evolution file
-      // intersects to zero scannable columns: parquet cannot drive an
-      // empty scan, but the row COUNT is in the footer — emit that many
-      // all-null rows without touching a data page
-      private val reader =
-        if (evolved && fileRequest.getFieldCount == 0) null
-        else {
-          val conf = new Configuration()
-          conf.set(ReadSupport.PARQUET_READ_SCHEMA, fileRequest.toString)
-          ParquetReader.builder(new GroupReadSupport(), new HadoopPath(path))
-            .withConf(conf).build()
-        }
-      // DV'd rows never surface: the all-null fast path subtracts the
-      // sidecar's cardinality, the scanning path counts ordinals and
-      // skips members (file position == read order)
-      private var nullRowsLeft =
-        if (dv == null) fileRows else fileRows - dv.size
-      private var ord: Long = -1L
-      private var cur: Group = _
+      private var cur: InternalRow = _
       override def next(): Boolean =
-        if (reader == null) { nullRowsLeft -= 1; nullRowsLeft >= 0 }
-        else if (dv == null) { cur = reader.read(); cur != null }
-        else {
-          cur = reader.read()
-          ord += 1
-          while (cur != null && dv.contains(ord)) { cur = reader.read(); ord += 1 }
-          cur != null
-        }
-      // the FILE's physical primitive per pruned slot (evolved mode
-      // only — uniform tables decode straight at the requested type):
-      // a type-WIDENED table reads files narrower than the schema of
-      // record, and the decode upcasts in-slot (int32→long/double,
-      // float→double, int64→double) — Spark's own parquet readers
-      // promote the same way since 4.0
-      private val filePrim: Array[org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName] =
-        fileMeta match {
-          case None => null
-          case Some((fileFields, _)) => pruned.fields.map { f =>
-            // nested (group) columns never upcast — null, same as absent
-            fileFields.get(f.name).filter(_.isPrimitive)
-              .map(_.asPrimitiveType().getPrimitiveTypeName).orNull
-          }
-        }
-      // NESTED decode plans (r16 structs, r17 lists/maps): for each
-      // pruned slot holding a nested type, the group's field indices
-      // matched by NAME once at reader build — the per-row loop stays
-      // lookup-free. The plan's SHAPE AUTHORITY is whatever this
-      // reader requests: the static request in uniform mode (parquet
-      // materializes group fields by name under it), the FILE's own
-      // declaration in per-file mode — a CoW rewrite can reorder
-      // inner fields and flip repetitions per file, so per-file plans
-      // must never index the static layout (r17 review).
-      private def groupPlan(st: StructType,
-          gt: org.apache.parquet.schema.GroupType,
-          node: Option[SnapshotTable.ColNode] = None): Array[(Int, DataType, AnyRef)] =
-        st.fields.map { f =>
-          // a NESTED column mapping (any depth — the tree descends
-          // with the plan) translates the pruned struct's LOGICAL
-          // field name to the file's physical one before the
-          // positional lookup
-          val pn = node.fold(f.name)(_.physicalOf(f.name))
-          val j = if (gt.containsField(pn)) gt.getFieldIndex(pn) else -1
-          val sub: AnyRef =
-            if (j < 0) null
-            else f.dataType match {
-              case s: StructType => groupPlan(s, gt.getType(j).asGroupType(),
-                node.flatMap(_.children.get(f.name)))
-              case dt => nestedSub(dt, gt.getType(j))
-            }
-          (j, f.dataType, sub)
-        }
-      // sub-plan per DataType: struct → field plan; array → element
-      // sub-plan; map → [key sub-plan, value sub-plan]; primitive → null
-      private def nestedSub(dt: DataType,
-          pt: org.apache.parquet.schema.Type): AnyRef = dt match {
-        case s: StructType => groupPlan(s, pt.asGroupType())
-        case ArrayType(et, _) =>
-          nestedSub(et, pt.asGroupType().getType(0).asGroupType().getType(0))
-        case MapType(kt, vt, _) =>
-          val kv = pt.asGroupType().getType(0).asGroupType()
-          Array[AnyRef](nestedSub(kt, kv.getType(0)), nestedSub(vt, kv.getType(1)))
-        case _ => null
+        try {
+          var found = false
+          while (!found && rows.hasNext) { cur = rows.next(); found = live(cur) }
+          found
+        } catch { case e: Exception => throw diverged(path, e) }
+      override def get(): InternalRow = project(joined(cur, consts))
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ => () // the reader closes itself at task completion
       }
-      private val nestedPlans: Array[AnyRef] =
-        pruned.fields.zipWithIndex.map { case (f, i) =>
-          f.dataType match {
-            case _: StructType | _: ArrayType | _: MapType =>
-              // the group a row materializes under is the REQUESTED
-              // declaration — the static request in uniform mode, but
-              // THE FILE'S OWN group in per-file (evolved/rowIds/CDF)
-              // mode, whose inner layout can differ across files (a
-              // nested-mapped CoW rewrite reorders struct fields) —
-              // so plans must index the layout this reader will
-              // actually see, never the static request's (r17 review)
-              val pt: Option[org.apache.parquet.schema.Type] = fileMeta match {
-                case None => Some(request.getType(i))
-                case Some((fileFields, _)) =>
-                  val t = fileFields.get(f.name)
-                  // per-file (evolved/widened/captured) mode: the
-                  // footer is already in hand — refuse a file whose
-                  // nested shape diverges from the schema of record AT
-                  // READER BUILD, named, instead of mis-decoding
-                  // positionally mid-task. Captured (zero-footer)
-                  // planning never runs the union's conflict check, so
-                  // this is where a hand-registered divergent file
-                  // surfaces (r17's capture-bypass note). Skipped per
-                  // COLUMN when THAT column is nested-mapped: its
-                  // pruned inner names are LOGICAL and the file's
-                  // physical — not comparable by name (the decode
-                  // plans translate instead); unmapped columns stay
-                  // guarded even when another column carries a mapping.
-                  if (!nestedMap.contains(f.name)) t.foreach { ft =>
-                    val fdt = SnapshotSourceUtil.sparkType(ft)
-                    if (!SnapshotSourceUtil.structurallyServes(fdt, f.dataType))
-                      throw new IllegalStateException(
-                        s"graft-snapshot: file $path column ${f.name} declares " +
-                          s"${fdt.simpleString} but the scan requests " +
-                          s"${f.dataType.simpleString} — nested columns cannot " +
-                          "evolve (add-column evolution only); this file diverges " +
-                          "from the table's schema capture")
-                  }
-                  t
-              }
-              pt.map { t =>
-                f.dataType match {
-                  case s: StructType if nestedMap.contains(f.name) =>
-                    // a nested-mapped struct: the request carries the
-                    // FULL physical group (dropped fields ride along
-                    // undecoded); the plan translates logical field
-                    // names through the mapping tree at every depth,
-                    // matching the ALTER surface
-                    groupPlan(s, t.asGroupType(), nestedMap.get(f.name))
-                  case dt => nestedSub(dt, t)
-                }
-              }.orNull
-            case _ => null
-          }
-        }
-      private def decodeGroup(g: Group,
-          plan: Array[(Int, DataType, AnyRef)]): InternalRow = {
-        val vals = new Array[Any](plan.length)
-        var i = 0
-        while (i < plan.length) {
-          val (j, dt, sub) = plan(i)
-          vals(i) =
-            if (j < 0 || g.getFieldRepetitionCount(j) == 0) null
-            else decodeValue(g, j, 0, dt, sub)
-          i += 1
-        }
-        new GenericInternalRow(vals)
-      }
-      /** One non-null value at (field j, occurrence k) of `g`, decoded
-        * to Spark's internal representation — the shared kernel for
-        * top-level slots, struct fields, list elements and map
-        * entries. */
-      private def decodeValue(g: Group, j: Int, k: Int,
-          dt: DataType, sub: AnyRef): Any = dt match {
-        case LongType => g.getLong(j, k)
-        case IntegerType => g.getInteger(j, k)
-        case DoubleType => g.getDouble(j, k)
-        case FloatType => g.getFloat(j, k)
-        case BooleanType => g.getBoolean(j, k)
-        case StringType => UTF8String.fromString(g.getString(j, k))
-        case _: StructType => decodeGroup(g.getGroup(j, k),
-          sub.asInstanceOf[Array[(Int, DataType, AnyRef)]])
-        case ArrayType(et, _) =>
-          // 3-level LIST: g.getGroup(j,k) is the LIST group; its single
-          // repeated inner group holds one element each — an unset
-          // element slot (repetition 0) is a NULL element, zero inner
-          // groups is an EMPTY (non-null) array
-          val lg = g.getGroup(j, k)
-          val n = lg.getFieldRepetitionCount(0)
-          val out = new Array[Any](n)
-          var x = 0
-          while (x < n) {
-            val eg = lg.getGroup(0, x)
-            out(x) = if (eg.getFieldRepetitionCount(0) == 0) null
-              else decodeValue(eg, 0, 0, et, sub)
-            x += 1
-          }
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-        case MapType(kt, vt, _) =>
-          val mg = g.getGroup(j, k)
-          val n = mg.getFieldRepetitionCount(0)
-          val keys = new Array[Any](n)
-          val mvals = new Array[Any](n)
-          val subs = sub.asInstanceOf[Array[AnyRef]]
-          var x = 0
-          while (x < n) {
-            val kvg = mg.getGroup(0, x)
-            keys(x) = decodeValue(kvg, 0, 0, kt, subs(0))
-            mvals(x) = if (kvg.getFieldRepetitionCount(1) == 0) null
-              else decodeValue(kvg, 1, 0, vt, subs(1))
-            x += 1
-          }
-          new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(mvals))
-        case other => sys.error(s"graft-snapshot: unsupported nested type $other")
-      }
-      override def get(): InternalRow = {
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-        val vals = new Array[Any](pruned.length)
-        var i = 0
-        while (i < pruned.length) {
-          val j = slot(i)
-          val prim = if (filePrim == null) null else filePrim(i)
-          vals(i) =
-            if (j < 0 || cur.getFieldRepetitionCount(j) == 0) null
-            else pruned.fields(i).dataType match {
-              case LongType =>
-                if (prim == INT32) cur.getInteger(j, 0).toLong else cur.getLong(j, 0)
-              case IntegerType => cur.getInteger(j, 0)
-              case DoubleType => prim match {
-                case INT32 => cur.getInteger(j, 0).toDouble
-                case INT64 => cur.getLong(j, 0).toDouble
-                case FLOAT => cur.getFloat(j, 0).toDouble
-                case _ => cur.getDouble(j, 0)
-              }
-              case FloatType => cur.getFloat(j, 0)
-              case BooleanType => cur.getBoolean(j, 0)
-              case StringType => UTF8String.fromString(cur.getString(j, 0))
-              case dt @ (_: StructType | _: ArrayType | _: MapType) =>
-                decodeValue(cur, j, 0, dt, nestedPlans(i))
-              case other => sys.error(s"graft-snapshot: unsupported type $other")
-            }
-          i += 1
-        }
-        new GenericInternalRow(vals)
-      }
-      override def close(): Unit = if (reader != null) reader.close()
     }
   }
 }
 
-/** Row-id wrapper over the evolution-aware file reader (x41 through
-  * the connector): the inner read requests the projection's table
-  * columns plus `__row_id` (absent → null via the per-file
-  * intersection), the wrapper tracks the file ORDINAL itself — the
-  * inner reader runs without its deletion vector so skipped rows still
-  * advance the position — anti-filters DV'd ordinals, and resolves
-  * `_row_id` = coalesce(materialized __row_id, partition base +
-  * ordinal): byte-for-byte the [[SnapshotTable.readWithRowIds]] rule, so
-  * the DSv2 route and the Scala route cannot diverge. */
-private[sources] case class SnapshotRowIdReaderFactory(projectedMessage: String,
-    innerPruned: StructType, out: StructType,
-    idNames: Set[String] = Set(SnapshotSourceUtil.RowIdField),
-    nestedMap: Map[String, SnapshotTable.ColNode] = Map.empty,
-    starts: Map[String, Long] = Map.empty)
-    extends PartitionReaderFactory {
+private[sources] object SnapshotFileReaderFactory {
+  val IdSlot = -1
+  val TypeSlot = -2
+  val VersionSlot = -3
+  val TsSlot = -4
+  private val RowIndexCol = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
 
-  private val inner = SnapshotReaderFactory(projectedMessage, innerPruned,
-    evolved = true, nestedMap)
-  // __row_id is always the LAST inner slot (rowIdFactory appends it)
-  private val matSlot = innerPruned.length - 1
-  private val slot: Array[Int] = out.fields.map { f =>
-    if (idNames.contains(f.name)) -1 else innerPruned.fieldIndex(f.name)
+  /** Build the reader over the physical table columns `data`: `ids`
+    * adds `__row_id`, `ordinals` the file row index (and the sidecar
+    * reader deletion vectors need). */
+  def apply(data: StructType, slots: Array[Int], starts: Array[Long],
+      ids: Boolean, ordinals: Boolean): SnapshotFileReaderFactory = {
+    // nullable at every depth: Spark's reader refuses a non-nullable
+    // column it cannot find in a file, where a file committed before an
+    // added column must null-fill it (and the row index is no file
+    // column at all)
+    val nullable = SnapshotSourceUtil.nullNormalized(data).asInstanceOf[StructType]
+    val withId =
+      if (!ids || data.fieldNames.contains(SnapshotTable.RowIdCol)) nullable
+      else nullable.add(SnapshotTable.RowIdCol, LongType, nullable = true)
+    val request = if (ordinals) withId.add(RowIndexCol, LongType, nullable = true) else withId
+    new SnapshotFileReaderFactory(parquetReader(request),
+      if (ordinals) Some(parquetReader(new StructType().add("idx", LongType))) else None,
+      request, slots, starts)
   }
-  // per-output-slot READ-SIDE offset (identity START WITH; 0 for
-  // `_row_id` and every data column)
-  private val startOf: Array[Long] = out.fields.map(f => starts.getOrElse(f.name, 0L))
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[SnapshotFilePartition]
-    val dv: java.util.HashSet[java.lang.Long] =
-      fp.dvPath.map(SnapshotSourceUtil.loadDvSet).orNull
-    val hasBase = fp.rowBase.isDefined
-    val base = fp.rowBase.getOrElse(0L)
-    val in0 = inner.createReader(SnapshotFilePartition(fp.path))
-    new PartitionReader[InternalRow] {
-      private var ord = -1L
-      override def next(): Boolean = {
-        var has = in0.next(); ord += 1
-        while (has && dv != null && dv.contains(ord)) { has = in0.next(); ord += 1 }
-        has
-      }
-      override def get(): InternalRow = {
-        val in = in0.get()
-        val vals = new Array[Any](slot.length)
-        var i = 0
-        while (i < slot.length) {
-          vals(i) = slot(i) match {
-            case -1 =>
-              if (!in.isNullAt(matSlot)) in.getLong(matSlot) + startOf(i)
-              else if (hasBase) base + ord + startOf(i)
-              else null // no base on record: null id, never a wrong one
-            case j => in.get(j, innerPruned.fields(j).dataType)
-          }
-          i += 1
-        }
-        new GenericInternalRow(vals)
-      }
-      override def close(): Unit = in0.close()
-    }
+  private def parquetReader(schema: StructType): PartitionedFile => Iterator[InternalRow] = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema, new StructType(),
+      schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      new Configuration(spark.sparkContext.hadoopConfiguration))
   }
+
+  private def partitionedFile(path: String): PartitionedFile = {
+    val size = Files.size(Paths.get(path))
+    PartitionedFile(InternalRow.empty,
+      SparkPath.fromPath(new HadoopPath(Paths.get(path).toUri)), 0L, size, fileSize = size)
+  }
+
+  /** A file whose column cannot convert to the requested type — a
+    * hand-registered file whose nested field was retyped, which the
+    * captured (zero-footer) planning never sweeps — refuses with the
+    * file and column named. */
+  private def diverged(path: String, e: Exception): Exception =
+    Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).collectFirst {
+      case c: SchemaColumnConvertNotSupportedException =>
+        val column = c.getColumn.stripPrefix("[").stripSuffix("]").split(", ").mkString(".")
+        new IllegalStateException(s"graft-snapshot: file $path column $column " +
+          s"declares ${c.getPhysicalType} but the scan requests ${c.getLogicalType} — " +
+          "nested columns cannot evolve (add-column evolution only); this file " +
+          "diverges from the table's schema of record", e)
+    }.getOrElse(e)
 }
