@@ -8,12 +8,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Churn
-import graft.sources.Tables
+import graft.sources.{ParquetFooters, Tables}
 
 /** The reference's train/predict stage re-expressed on Spark MLlib:
   * per-user features (Churn.c2 + a one-hot event-type spread) + churn
-  * label (Churn.c3) → VectorAssembler → StandardScaler →
-  * LogisticRegression → per-user churn probability. Deterministic:
+  * label (Churn.c3) → VectorAssembler → LogisticRegression → per-user
+  * churn probability. The reference's "scale" step is LR's internal
+  * standardization (`standardization=true`, the default): it scales
+  * the features during optimization and folds the scaling back into
+  * the coefficients, so there is no separate scaler stage. Deterministic:
   * fixed seed, deterministic hash-based train/test split (user_id mod),
   * no sampling.
   *
@@ -49,23 +52,24 @@ object ChurnModel {
     * warehouse's ingested-so-far state, so day-N scores see day-N
     * features/horizon, exactly the daily-cadence contract. */
   private[graft] def featureMatrixOf(e: DataFrame): DataFrame = {
-    val oneHot = e
-      .groupBy(col("user_id"))
-      .pivot("event_type", EventTypes)
-      .agg(count(lit(1)))
-      .na.fill(0L)
-      .select(col("user_id") +: EventTypes.map(t => col(t).as(s"evt_$t")): _*)
-    Churn.c2UserFeaturesOf(e)
+    val evt = EventTypes.map(t => s"evt_$t")
+    // the one-hot counts ride c2's own aggregation: count(when(...))
+    // is the long a pivot + na.fill(0) gives, with no second per-user
+    // aggregate, global sort or join back on user_id (the matrix is
+    // built 4× per daily-pipeline run)
+    val m = Churn.c2Aggregate(e,
+        EventTypes.map(t => count(when(col("event_type") === t, 1)).as(s"evt_$t")))
+      // the join on user_id this replaces never matched a null user
+      .filter(col("user_id").isNotNull)
       .withColumn("span_days",
         floor((col("last_ep") - col("first_ep")) / lit(86400.0)).cast("long"))
       .withColumn("events_per_active_day",
         col("n_events").cast("double") / col("active_days"))
-      .join(oneHot, "user_id")
+    m.select((m.columns.filterNot(evt.contains) ++ evt).map(col).toIndexedSeq: _*)
       // the label is c3's definition applied to c2's already-computed
       // recency — value-identical to joining c3ChurnLabelOf(e), minus
-      // one whole per-user aggregation + shuffle join (the matrix is
-      // built 4× per daily-pipeline run; c3 itself stays a first-class
-      // gate operator)
+      // one whole per-user aggregation + shuffle join (c3 itself stays
+      // a first-class gate operator)
       .withColumn("churned",
         when(col("recency_days") >= Churn.ChurnDays, 1L).otherwise(0L))
   }
@@ -126,9 +130,9 @@ object ChurnModel {
   private def fitOnTrainFold(s: SparkSession, d: String): (DataFrame, PipelineModel) =
     fitMemo.getOrElseUpdate(s, d) {
       // users = distinct customers; exact count not needed for sizing —
-      // the dim table's row count is the matrix's row count upper bound
-      // and is a cheap metadata-ish scan of one long column
-      val users = Tables.customer(s, d).count()
+      // the dim table's row count is the matrix's row count upper bound,
+      // read from its footers (metadata, no job)
+      val users = ParquetFooters.rowCount(s, Tables.path(d, "customer"))
       val data = featureMatrix(s, d)
         .withColumn("label", col("churned").cast("double"))
         .coalesce(matrixPartitions(s, users))

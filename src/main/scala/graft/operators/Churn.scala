@@ -135,21 +135,30 @@ object Churn {
   /** c2 over an arbitrary events frame (user_id, event_type, value, ep,
     * ep_day) — the daily pipeline runs it over the WAREHOUSE table's
     * ingested-so-far state, not the raw corpus dir. */
-  private[graft] def c2UserFeaturesOf(e: DataFrame): DataFrame = {
+  private[graft] def c2UserFeaturesOf(e: DataFrame): DataFrame =
+    c2Aggregate(e).orderBy("user_id")
+
+  /** c2's per-user aggregate, unsorted, with `extra` aggregates
+    * appended after c2's columns in the SAME aggregation — the one
+    * definition of c2's features, shared with the churn model's
+    * feature matrix (which adds its per-event-type counts here rather
+    * than in a second aggregate joined back on user_id). */
+  private[graft] def c2Aggregate(e: DataFrame, extra: Seq[Column] = Nil): DataFrame = {
     val horizon = e.agg(max(col("ep")).as("g_max"))
     e.crossJoin(broadcast(horizon))
       .groupBy(col("user_id"))
       .agg(
         count(lit(1)).as("n_events"),
-        count(when(col("event_type") === "purchase", 1)).as("n_purchases"),
-        count(when(col("event_type") === "error", 1)).as("n_errors"),
-        dsum(col("value")).as("total_value"),
-        (sum(dec(col("value"))).cast("double") / count(lit(1))).as("avg_value"),
-        min(col("ep")).as("first_ep"),
-        max(col("ep")).as("last_ep"),
-        countDistinct(col("ep_day")).as("active_days"),
-        floor((max(col("g_max")) - max(col("ep"))) / lit(86400.0)).cast("long").as("recency_days"))
-      .orderBy("user_id")
+        (Seq(
+          count(when(col("event_type") === "purchase", 1)).as("n_purchases"),
+          count(when(col("event_type") === "error", 1)).as("n_errors"),
+          dsum(col("value")).as("total_value"),
+          (sum(dec(col("value"))).cast("double") / count(lit(1))).as("avg_value"),
+          min(col("ep")).as("first_ep"),
+          max(col("ep")).as("last_ep"),
+          countDistinct(col("ep_day")).as("active_days"),
+          floor((max(col("g_max")) - max(col("ep"))) / lit(86400.0)).cast("long")
+            .as("recency_days")) ++ extra): _*)
   }
 
   val c2Sql: String =

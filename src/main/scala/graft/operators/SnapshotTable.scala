@@ -865,8 +865,9 @@ object SnapshotTable {
       regexp_replace(uri, "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", ""), "\\+", "%2B"))
 
   /** The state's physical schema of record: the captured union when
-    * one exists, else the files' own — one footer on a uniform table,
-    * every footer (metadata only) on an evolved one. */
+    * one exists, else the files' own — one footer read on the driver
+    * for a uniform table (no job), every footer through parquet
+    * mergeSchema (metadata only, one job) for an evolved one. */
   private def recordSchema(s: SparkSession, st: TableState)
       : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.{DataType, StructType}
@@ -878,14 +879,12 @@ object SnapshotTable {
         if (st.entries.isEmpty) throw new IllegalStateException(
           s"snapshot read on ${st.root}: version ${st.v} has no file entries " +
             "and no schema capture — unreadable empty state")
-        val probe = if (st.meta.contains("schema")) st.entries else st.entries.take(1)
-        inferringReader(s, st)
-          .parquet(probe.map(e => Paths.get(st.root, e.rel).toString): _*).schema
+        val paths = st.entries.map(e => Paths.get(st.root, e.rel).toString)
+        if (st.meta.contains("schema"))
+          s.read.option("mergeSchema", "true").parquet(paths: _*).schema
+        else graft.sources.ParquetFooters.schema(s, paths.head)
     }
   }
-
-  private def inferringReader(s: SparkSession, st: TableState) =
-    if (st.meta.contains("schema")) s.read.option("mergeSchema", "true") else s.read
 
   /** Steps 1-4 of the core over `files` of `st`, in PHYSICAL names.
     * `coords` keeps the [[FileCol]]/[[IdxCol]] coordinate columns;
@@ -894,20 +893,22 @@ object SnapshotTable {
       coords: Boolean = false, rowIds: Boolean = false): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     // an explicit read schema: the schema of record plus __row_id for
-    // an id read (null-filled in positional files), the capture for a
-    // captured table; None infers from the files
+    // an id read (null-filled in positional files), else the schema of
+    // record itself; None — mergeSchema inference over the selection —
+    // only for an evolved table without a capture
     val schema: Option[StructType] =
       if (rowIds) Some(StructType(recordSchema(s, st).fields
         .filterNot(_.name == RowIdCol).map(_.copy(nullable = true)) :+
         StructField(RowIdCol, LongType, nullable = true)))
-      else if (st.meta.contains("schemaJson")) Some(recordSchema(s, st))
+      else if (st.meta.contains("schemaJson") || !st.meta.contains("schema"))
+        Some(recordSchema(s, st))
       else None
     if (files.isEmpty) {
       val cols = schema.getOrElse(recordSchema(s, st))
       return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         if (coords) cols.add(FileCol, StringType).add(IdxCol, LongType) else cols)
     }
-    val reader = schema.fold(inferringReader(s, st))(s.read.schema)
+    val reader = schema.fold(s.read.option("mergeSchema", "true"))(s.read.schema)
     val withCoords = coords || rowIds
     def read(fs: Seq[FileEntry], located: Boolean): DataFrame = {
       val df = reader.parquet(fs.map(e => Paths.get(st.root, e.rel).toString): _*)
@@ -944,7 +945,8 @@ object SnapshotTable {
       files: Seq[FileEntry]): DataFrame = {
     import s.implicits._
     val pairs = files.map(_.rel).distinct.sorted.map(r => (st.dv(r), r))
-    s.read.parquet(pairs.map(p => Paths.get(st.root, p._1).toString).distinct: _*)
+    graft.sources.ParquetFooters.read(s,
+        pairs.map(p => Paths.get(st.root, p._1).toString).distinct)
       .withColumn("__dv_side", fileKey(col("_metadata.file_path")))
       .join(broadcast(pairs.map { case (d, r) => (fileKey(st.root, d), fileKey(st.root, r)) }
         .toDF("__dv_side", FileCol)), "__dv_side")
@@ -3845,10 +3847,24 @@ object SnapshotTable {
     * streaming upsert sink) gets a `FileAlreadyExistsException` instead
     * of a silent lost update when another writer committed in between —
     * re-read and retry. The default (-1) reads the current version, the
-    * right contract when `changes` doesn't depend on table state. */
+    * right contract when `changes` doesn't depend on table state.
+    *
+    * `changes` is evaluated exactly ONCE (materialized up front): the
+    * bounds that prune files, the keyed anti-join, the upserts, the
+    * range sampler and the rewrite all read the same rows — never a
+    * re-run of the caller's plan (an ANSI MERGE's discovery join, a
+    * day's feature aggregation and model scoring). An empty changeset
+    * commits nothing and returns the base version. */
   def merge(s: SparkSession, root: String, clusterCol: String, idCol: String,
       changes: DataFrame, shardSize: Int = 4,
-      extraMeta: Map[String, String] = Map.empty, baseVersion: Int = -1): Int = {
+      extraMeta: Map[String, String] = Map.empty, baseVersion: Int = -1): Int =
+    mergeRows(s, root, clusterCol, idCol, changes.localCheckpoint(true), shardSize,
+      extraMeta, baseVersion)
+
+  /** [[merge]] over a MATERIALIZED changeset. */
+  private def mergeRows(s: SparkSession, root: String, clusterCol: String,
+      idCol: String, changes: DataFrame, shardSize: Int,
+      extraMeta: Map[String, String], baseVersion: Int): Int = {
     val v = if (baseVersion >= 0) baseVersion else currentVersion(root)
     val carried = carriedMeta(root, v)
     val map = colMap(root, v)
@@ -3899,7 +3915,9 @@ object SnapshotTable {
     carried.get("statsCol").foreach(c => require(c == physicalName(map, clusterCol),
       s"merge on $root: clusterCol=$clusterCol but the table's statsCol=$c — " +
         "merge pruning runs on the manifest's primary stats column"))
-    val bounds = changes.agg(min(col(clusterCol)), max(col(clusterCol))).head()
+    val bounds = changes.agg(min(col(clusterCol)), max(col(clusterCol)), count(lit(1)))
+      .head()
+    if (bounds.getLong(2) == 0L) return v // nothing to apply: no commit
     val (qlo, qhi) = (bounds.getLong(0), bounds.getLong(1))
     val affected = prunedEntries(root, v, qlo, qhi)
     val affectedSet = affected.map(_.rel).toSet
@@ -4417,19 +4435,14 @@ object SnapshotTable {
               :+ lit("d").as("op"): _*)
           remainingNmbs = remainingNmbs && !condCol(cond)
       }
-      // materialize the compiled changeset ONCE: without this the
-      // O(table) discovery join re-executes for every downstream
-      // action (the emptiness probe, merge's bounds aggregate, the
-      // rewrite write)
-      val changes = parts.reduce(_ unionByName _).localCheckpoint(true)
-      if (changes.isEmpty) result = v // nothing matched any clause: no-op
-      else {
-        try result = merge(s, root, clusterCol, onTgtCol, changes, baseVersion = v)
-        catch {
-          case e: java.nio.file.FileAlreadyExistsException =>
-            attempts += 1 // a racer committed after discovery: re-discover
-            if (attempts >= 8) throw e
-        }
+      // merge evaluates the compiled changeset (and so the O(table)
+      // discovery join) once, and no-ops when no clause matched a row
+      try result = merge(s, root, clusterCol, onTgtCol,
+        parts.reduce(_ unionByName _), baseVersion = v)
+      catch {
+        case e: java.nio.file.FileAlreadyExistsException =>
+          attempts += 1 // a racer committed after discovery: re-discover
+          if (attempts >= 8) throw e
       }
     }
     result

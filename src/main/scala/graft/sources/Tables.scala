@@ -7,15 +7,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scale-factor dir passed by the driver; column pruning and filter
   * pushdown happen in the caller's plan and reach the scan because these
   * are plain parquet relations (verified via `.explain("formatted")`:
-  * `PushedFilters`/`ReadSchema`).
+  * `PushedFilters`/`ReadSchema`). The schema comes from the file's
+  * footer ([[ParquetFooters]]), so building a frame starts no job.
   *
   * Capability mapping (public MorphL churning-users pipeline): `events`
   * plays the Google-Analytics hit/session stream the reference ingests;
   * `customer`/`orders` play its user/transaction dimensions.
   */
 object Tables {
+  /** The file of table `name` under the scale-factor dir `dir`. */
+  private[graft] def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetFooters.read(spark, Seq(path(dir, name)))
 
   def region(s: SparkSession, d: String): DataFrame     = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = read(s, d, "nation")

@@ -76,7 +76,7 @@ object Streams {
     * dir; the Kafka analogue is simply subscribing to the topic. */
   private def streamEvents(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = graft.sources.ParquetFooters.schema(s, Tables.path(d, "events"))
     // streaming file source wants a directory: read the sf dir with a
     // glob filter selecting just the events table. The read uses the
     // file's own ts type; normalizeTs restores the engine's

@@ -8,4 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** Every field nullable at every depth — the schema a file relation
+    * exposes whatever its files declare. */
+  def asNullable(t: types.StructType): types.StructType = t.asNullable
 }

@@ -1373,6 +1373,25 @@ class MergeSpec extends AnyFunSuite {
     assert(ST.readAt(spark, root, v2).columns.toSeq == Seq("id", "v", "score"))
   }
 
+  test("merge evaluates its changeset once: pruning bounds, anti-join, upserts and write") {
+    import spark.implicits._
+    val root = freshRoot("graft_merge_once")
+    val base = (1L to 40L).map(k => (k, 1.0 * k)).toDF("id", "v")
+      .repartitionByRange(4, col("id"))
+    assert(graft.streaming.SnapshotSink.appendBatch(root, base, 0L, keyCol = "id"))
+    // every evaluation of a changeset row passes through the tap on the
+    // id column, which every stage of the merge reads
+    val evaluated = spark.sparkContext.longAccumulator("merge_changeset_rows")
+    val tap = udf { (k: Long) => evaluated.add(1L); k }
+    val changes = (5L to 14L).map(k => (k, 2.0 * k)).toDF("k", "v")
+      .select(tap(col("k")).as("id"), col("v"), lit("u").as("op"))
+    ST.merge(spark, root, "id", "id", changes)
+    assert(evaluated.value == 10L,
+      s"10 changeset rows were evaluated ${evaluated.value} times")
+    val got = ST.read(spark, root).orderBy("id").as[(Long, Double)].collect().toSeq
+    assert(got == (1L to 40L).map(k => (k, if (k >= 5 && k <= 14) 2.0 * k else 1.0 * k)))
+  }
+
   test("widening merge refuses a changeset that retypes an existing column (ADVICE r11)") {
     import spark.implicits._
     val root = freshRoot("graft_merge_retype")

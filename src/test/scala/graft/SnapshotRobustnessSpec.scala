@@ -1068,6 +1068,93 @@ class SnapshotRobustnessSpec extends AnyFunSuite {
       "arrays must keep decoding on the evolved table")
   }
 
+  /** The type-parity fixture's columns over `id` 1..40: types beyond
+    * the connector writer's envelope (date, decimals, binary, Spark's
+    * default INT96 timestamp, smallint) plus a key `k`. */
+  private val typedColumns = Seq(col("id").as("k"),
+    expr("date_add(DATE'2024-01-01', CAST(id AS INT))").as("d"),
+    expr("CAST(id * 1.5 AS DECIMAL(18,6))").as("amt"),
+    expr("CAST(id AS DECIMAL(38,10)) / 7").cast("decimal(38,10)").as("big"),
+    expr("CAST(concat('b', CAST(id AS STRING)) AS BINARY)").as("bin"),
+    expr("TIMESTAMP'2024-03-01 10:00:00' + make_interval(0, 0, 0, 0, CAST(id AS INT))")
+      .as("ts"),
+    expr("CAST(id * 100 AS SMALLINT)").as("s"))
+
+  /** A two-file, k-clustered table of `cols` at `root`; its data files. */
+  private def typedTable(root: String, cols: Seq[org.apache.spark.sql.Column]): Seq[String] = {
+    val rels = ST.writeDataFiles(
+      spark.range(1, 41).select(cols: _*).repartitionByRange(2, col("k")), root, "a")
+    ST.commitEntries(root, 0, rels.map(ST.footerEntry(root, _, "k")), 8,
+      Map("statsCol" -> "k"))
+    rels
+  }
+
+  /** Spark jobs started by this thread while `f` runs. A fence job
+    * ends the window: listener events arrive in order, so once the
+    * fence's start is seen every earlier job's start has been too. */
+  private def jobsStartedBy(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"probe-${java.util.UUID.randomUUID}"
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.probe")))
+          .filter(_.startsWith(tag)).foreach(starts.put)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.probe", tag)
+      try f finally sc.setLocalProperty("graft.test.probe", null)
+      sc.setLocalProperty("graft.test.probe", s"$tag-fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.probe", null)
+      var n = 0
+      var seen = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (seen != null && seen == tag) {
+        n += 1
+        seen = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(seen == s"$tag-fence", "the fence job's start never arrived")
+      n
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("footer schemas equal Spark's inferred schemas, and reads plan without a job") {
+    import graft.sources.{ParquetFooters, Tables}
+    val root = freshRoot("graft_footer_schema")
+    val rels = typedTable(root, typedColumns ++ Seq(
+      struct(col("id").as("a"), expr("CAST(id AS STRING)").as("b")).as("st"),
+      expr("array(id, id + 1)").as("arr"),
+      expr("map(CAST(id AS STRING), CAST(id AS DOUBLE))").as("mp")))
+    // the helper's schema is the inferred one exactly, nullability and
+    // nested shapes included — per file and for the table directory
+    (rels.map(r => Paths.get(root, r).toString) :+ root).foreach { p =>
+      assert(ParquetFooters.schema(spark, p) == spark.read.parquet(p).schema, p)
+    }
+    // the events file (TIMESTAMP(NANOS) or MICROS by corpus vintage)
+    // under the nanosAsLong conf its loader sets
+    val ev = Tables.path(sf, "events")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assert(ParquetFooters.schema(spark, ev) == spark.read.parquet(ev).schema)
+    assert(ParquetFooters.rowCount(spark, ev) == spark.read.parquet(ev).count())
+    // building the frames starts no Spark job; only actions do — also
+    // over a directory below a hidden one (names above a path never
+    // hide its files)
+    val hiddenDir = Files.createTempDirectory(".graft_hidden")
+    val dirTable = hiddenDir.resolve("t")
+    Files.createDirectory(dirTable)
+    rels.foreach(r => Files.copy(Paths.get(root, r), dirTable.resolve(r)))
+    assert(ParquetFooters.schema(spark, dirTable.toString) ==
+      spark.read.parquet(dirTable.toString).schema)
+    val jobs = jobsStartedBy {
+      ParquetFooters.read(spark, Seq(dirTable.toString))
+      ST.read(spark, root)
+      ST.readPointLookup(spark, root, "k", Seq(3L, 30L))
+      Tables.events(spark, sf)
+    }
+    assert(jobs == 0, s"$jobs Spark jobs started before any action")
+    assert(ST.readPointLookup(spark, root, "k", Seq(3L, 30L)).count() == 2)
+  }
+
   test("DSv2 type parity: date/decimal/binary/INT96 timestamp/smallint read as the path API does") {
     // a Spark-written table whose column types go beyond the connector
     // writer's envelope: every DSv2 read route must serve the same
@@ -1075,17 +1162,7 @@ class SnapshotRobustnessSpec extends AnyFunSuite {
     // reinterpretation (date as int, decimal as its unscaled long)
     // and never a refusal (INT96 timestamps are Spark's default)
     val root = freshRoot("graft_dsv2_types")
-    val df = spark.range(1, 41).select(col("id").as("k"),
-      expr("date_add(DATE'2024-01-01', CAST(id AS INT))").as("d"),
-      expr("CAST(id * 1.5 AS DECIMAL(18,6))").as("amt"),
-      expr("CAST(id AS DECIMAL(38,10)) / 7").cast("decimal(38,10)").as("big"),
-      expr("CAST(concat('b', CAST(id AS STRING)) AS BINARY)").as("bin"),
-      expr("TIMESTAMP'2024-03-01 10:00:00' + make_interval(0, 0, 0, 0, CAST(id AS INT))")
-        .as("ts"),
-      expr("CAST(id * 100 AS SMALLINT)").as("s"))
-    val rels = ST.writeDataFiles(df.repartitionByRange(2, col("k")), root, "a")
-    ST.commitEntries(root, 0, rels.map(ST.footerEntry(root, _, "k")), 8,
-      Map("statsCol" -> "k"))
+    typedTable(root, typedColumns)
     def rows(d: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       d.collect().toSeq.map(_.toSeq.map {
         case b: Array[Byte] => b.toSeq
