@@ -1,6 +1,8 @@
 package graft
 
 import scala.collection.concurrent.TrieMap
+import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.duration.Duration
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
@@ -11,9 +13,15 @@ import org.apache.spark.sql.SparkSession
   * session's SparkContext ends, so a long-lived JVM hosting many
   * sessions never pins dead RDD blocks or model references. Keys must
   * identify immutable inputs (the harness never regenerates a testdata
-  * dir in place). */
+  * dir in place).
+  *
+  * Single-flight: each key's value is computed once even under
+  * concurrent callers. The first caller computes it; a caller that
+  * arrives meanwhile waits for that value, or rethrows that failure. A
+  * failure is not memoized: the next caller computes afresh. A value's
+  * computation must not ask the same memo for its own key. */
 final class SessionMemo[V] {
-  private val memo = TrieMap.empty[(SparkSession, String), V]
+  private val memo = TrieMap.empty[(SparkSession, String), Future[V]]
   private val hooked = TrieMap.empty[SparkSession, Boolean]
 
   def getOrElseUpdate(s: SparkSession, key: String)(value: => V): V = {
@@ -26,7 +34,22 @@ final class SessionMemo[V] {
       })
       true
     })
-    memo.getOrElseUpdate((s, key), value)
+    val k = (s, key)
+    val mine = Promise[V]()
+    memo.putIfAbsent(k, mine.future) match {
+      case Some(theirs) => Await.result(theirs, Duration.Inf)
+      case None =>
+        try {
+          val v = value
+          mine.success(v)
+          v
+        } catch {
+          case e: Throwable =>
+            memo.remove(k, mine.future)
+            mine.failure(e)
+            throw e
+        }
+    }
   }
 
   /** Visible for tests: live entries for a session. */

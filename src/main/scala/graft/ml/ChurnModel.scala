@@ -94,22 +94,6 @@ object ChurnModel {
       .setFeaturesCol("features")
       .setProbabilityCol("prob")))
 
-  /** (cached matrix, model fitted on the hash-split train fold).
-    * cache: LBFGS iterates over the matrix; without this every pass
-    * would recompute the per-user aggregations. The matrix is tiny
-    * relative to the event log (one row per user), so collapse to a
-    * data-proportional partition count (matrixPartitions: 1 at test SF,
-    * ~users/4M at scale) — every LBFGS iteration schedules a
-    * treeAggregate over the matrix, and at test size per-iteration cost
-    * is pure task overhead (4 partitions = 4x the tasks for zero
-    * parallelism gain), while a fixed 1 would serialize a 10⁹-user fit.
-    *
-    * Memoized per (session, dir): the fit is fully deterministic (fixed
-    * seed, hash split, no sampling), so c9/c13/c15 sharing one LBFGS
-    * run returns bit-identical scores to refitting — previously each of
-    * the three paid its own fit, and the redundant fits were most of
-    * c13's bench cost. c13's separated-jobs semantics are untouched: it
-    * still round-trips the model through MLWriter/MLReader. */
   /** Iterations of the most recent LBFGS fit (profiling aid). */
   private[graft] def lastFitIterations: Int = lastIters
   @volatile private var lastIters: Int = -1
@@ -127,7 +111,29 @@ object ChurnModel {
       math.max(1L, (users + MatrixRowsPerPartition - 1) / MatrixRowsPerPartition).toInt)
 
   private val fitMemo = new graft.SessionMemo[(DataFrame, PipelineModel)]
-  private def fitOnTrainFold(s: SparkSession, d: String): (DataFrame, PipelineModel) =
+
+  /** (cached matrix, model fitted on the hash-split train fold).
+    * cache: LBFGS iterates over the matrix; without this every pass
+    * would recompute the per-user aggregations. The matrix is tiny
+    * relative to the event log (one row per user), so collapse to a
+    * data-proportional partition count (matrixPartitions: 1 at test SF,
+    * ~users/4M at scale) — every LBFGS iteration schedules a
+    * treeAggregate over the matrix, and at test size per-iteration cost
+    * is pure task overhead (4 partitions = 4x the tasks for zero
+    * parallelism gain), while a fixed 1 would serialize a 10⁹-user fit.
+    *
+    * Memoized per (session, dir): the fit is fully deterministic (fixed
+    * seed, hash split, no sampling), so c9/c13/c15 sharing one LBFGS
+    * run returns bit-identical scores to refitting — previously each of
+    * the three paid its own fit, and the redundant fits were most of
+    * c13's bench cost. c13's separated-jobs semantics are untouched: it
+    * still round-trips the model through MLWriter/MLReader.
+    *
+    * The fit reads only the static corpus `d`, so the daily pipeline
+    * starts it with the cycle, overlapping that cycle's ingest and
+    * rollup (`Pipeline.runCycle`). A caller that asks while another
+    * thread fits waits for that fit rather than running a second. */
+  private[graft] def fitOnTrainFold(s: SparkSession, d: String): (DataFrame, PipelineModel) =
     fitMemo.getOrElseUpdate(s, d) {
       // users = distinct customers; exact count not needed for sizing —
       // the dim table's row count is the matrix's row count upper bound,

@@ -40,8 +40,10 @@ import graft.streaming.SnapshotSink
   * copy-on-write — O(users) per day, the same cost the reference pays
   * to refresh its serving store daily. Feature recompute over
   * ingested-so-far is O(warehouse) per day, batch-proportional at the
-  * day grain a 100 TB deployment would partition by; the model fit is
-  * amortized across the session (periodic retrain, daily predict).
+  * day grain a 100 TB deployment would partition by. The model fit
+  * reads only the static corpus: it starts with the first cycle,
+  * overlaps that cycle's ingest and rollup, and is memoized for the
+  * session's later cycles (periodic retrain, daily predict).
   */
 object Pipeline {
 
@@ -115,65 +117,50 @@ object Pipeline {
   }
 
   /** Run ONE daily cycle end-to-end. Returns the stages that actually
-    * committed (all false = full replay no-op). */
+    * committed (all false = full replay no-op).
+    *
+    * The model fit reads only the static corpus, never the warehouse,
+    * so it starts with the cycle and runs beside ingest and rollup; the
+    * score stage waits for it. Rollup and score both read the
+    * POST-INGEST bronze state and write DISJOINT tables, so they run
+    * concurrently too. Each stage's computation, commit protocol and
+    * cycle-id idempotence are untouched. The background branches run
+    * through [[graft.Branches]]: a failed cycle returns or throws only
+    * after every branch has ended, so no in-flight commit races its
+    * retry. */
   private[graft] def runCycle(s: SparkSession, d: String, w: Warehouse,
-      cycleId: Int): (Boolean, Boolean, Boolean) = {
+      cycleId: Int): (Boolean, Boolean, Boolean) = graft.Branches.run(s) { br =>
     val ST = SnapshotTable
     val (lo, hi) = Cuts(cycleId)
+    // 0. fit: memoized per session, so later cycles find it done
+    val fitted = br.fork("fit")(graft.ml.ChurnModel.fitOnTrainFold(s, d))
     // 1. ingest: the day-slice of the raw feed, exactly once
     val slice = feed(s, d).filter(col("ep_day") >= lo && col("ep_day") < hi)
     val ingested = SnapshotSink.appendBatch(w.bronze, slice, cycleId, keyCol = "ep_day")
-    // Stages 2 and 3 both read the POST-INGEST bronze state and write
-    // DISJOINT tables (rollup vs scores) — independent jobs, so they
-    // run CONCURRENTLY (guide §2.6: actions are only sequential because
-    // the driver calls them sequentially; the scheduler back-fills one
-    // stage's task tails with the other's). Each stage's computation,
-    // commit protocol and cycle-id idempotence are untouched — the
-    // commit machinery is proven under concurrent committers, and
-    // these two never share a table.
     // 2. rollup: day-grain metrics computed FROM THE WAREHOUSE (the
     //    orchestrator trusts its own tables, not the upstream feed),
     //    appended exactly once — day-keyed, so downstream day queries
     //    stats-prune to the new files
-    val rolledF = scala.concurrent.Future {
-      // blocking{}: this future runs Spark ACTIONS (blocking waits) on
-      // ExecutionContext.global — mark them so the fork-join pool can
-      // compensate instead of starving (ADVICE r21)
-      scala.concurrent.blocking {
-        val rows = ST.read(s, w.bronze)
-          .filter(col("ep_day") >= lo && col("ep_day") < hi)
-          .groupBy(col("ep_day"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            countDistinct(col("user_id")).as("n_users"),
-            sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
-        SnapshotSink.appendBatch(w.rollup, rows, cycleId, keyCol = "ep_day")
-      }
-    }(scala.concurrent.ExecutionContext.global)
-    // 3. score: every user ingested so far, features as of today,
-    //    memoized model; merged copy-on-write into the serving table
-    val scoredTry = scala.util.Try {
-      val soFar = ST.read(s, w.bronze)
-      val changes = graft.ml.ChurnModel.dailyScores(s, d, soFar)
-        .select(col("user_id"), col("churn_prob"), col("prediction"),
-          col("churned"), col("is_test"))
-        .withColumn("score_day", lit(cycleId.toLong))
-        .withColumn("op", lit("u"))
-      mergeOnce(s, w.scores, changes, cycleId)
+    val rolled = br.fork("rollup") {
+      val rows = ST.read(s, w.bronze)
+        .filter(col("ep_day") >= lo && col("ep_day") < hi)
+        .groupBy(col("ep_day"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          countDistinct(col("user_id")).as("n_users"),
+          sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
+      SnapshotSink.appendBatch(w.rollup, rows, cycleId, keyCol = "ep_day")
     }
-    // the rollup is awaited BEFORE a score failure propagates — a
-    // failed cycle must never leave an in-flight commit racing its own
-    // retry. BOUNDED await (a hung rollup job must fail the cycle, not
-    // wedge it forever), and a score failure is attached as suppressed
-    // so a rollup error can never permanently mask it (ADVICE r21).
-    val rolled =
-      try scala.concurrent.Await.result(rolledF,
-        scala.concurrent.duration.Duration(10, java.util.concurrent.TimeUnit.MINUTES))
-      catch {
-        case e: Throwable =>
-          scoredTry.failed.foreach(se => if (se ne e) e.addSuppressed(se))
-          throw e
-      }
-    (ingested, rolled, scoredTry.get)
+    // 3. score: every user ingested so far, features as of today,
+    //    the fitted model; merged copy-on-write into the serving table
+    br.await(fitted)
+    val soFar = ST.read(s, w.bronze)
+    val changes = graft.ml.ChurnModel.dailyScores(s, d, soFar)
+      .select(col("user_id"), col("churn_prob"), col("prediction"),
+        col("churned"), col("is_test"))
+      .withColumn("score_day", lit(cycleId.toLong))
+      .withColumn("op", lit("u"))
+    val scored = mergeOnce(s, w.scores, changes, cycleId)
+    (ingested, br.await(rolled), scored)
   }
 
   /** The session's completed daily cadence (built once per session+dir;

@@ -2,14 +2,10 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{ParquetFooters, Tables}
 
 /** A minimal manifest-committed snapshot table — the primitive set a
   * table format (Delta/Iceberg) is built from, answering what x6's
@@ -580,10 +576,6 @@ object SnapshotTable {
     * job. Row-group statistics min/max over an INT64 column; a file
     * whose footer carries no usable stats degrades to the never-pruned
     * sentinel entry rather than failing the commit. */
-  // one Configuration for every footer read: construction parses the
-  // Hadoop XML resource chain (~100ms), pure waste per-file
-  private lazy val hadoopConf = new Configuration()
-
   private[graft] def footerEntry(root: String, rel: String, keyCol: String): FileEntry =
     footerEntryMulti(root, rel, keyCol, Nil)
 
@@ -662,13 +654,8 @@ object SnapshotTable {
     import scala.jdk.CollectionConverters._
     dv.filterNot { case (r, _) => exclude.contains(r) }
       .toSeq.sortBy(_._1).map { case (r, d) =>
-        counts.getOrElse(r, {
-          val in = HadoopInputFile.fromPath(
-            new HadoopPath(Paths.get(root, d).toUri), hadoopConf)
-          val rd = ParquetFileReader.open(in)
-          try rd.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-          finally rd.close()
-        })
+        counts.getOrElse(r, ParquetFooters.withReader(ParquetFooters.inputFile(root, d))(
+          _.getFooter.getBlocks.asScala.map(_.getRowCount).sum))
       }.sum
   }
 
@@ -693,10 +680,8 @@ object SnapshotTable {
     * class the manifest-carried sizes exist to eliminate. */
   private def withFooterLen[T](root: String, rel: String)(
       f: (org.apache.parquet.hadoop.ParquetFileReader, Long) => T): T = {
-    val in = HadoopInputFile.fromPath(
-      new HadoopPath(Paths.get(root, rel).toUri), hadoopConf)
-    val reader = ParquetFileReader.open(in)
-    try f(reader, in.getLength) finally reader.close()
+    val in = ParquetFooters.inputFile(root, rel)
+    ParquetFooters.withReader(in)(f(_, in.getLength))
   }
 
   /** Per-file stats harvest from an OPEN footer. Beyond the declared
@@ -2478,13 +2463,9 @@ object SnapshotTable {
     * driver-side metadata read — used to split a row-tracked scan into
     * files with materialized ids and files on the base+position rule. */
   private[graft] def footerHasColumn(root: String, rel: String, name: String): Boolean = {
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(Paths.get(root, rel).toString), hadoopConf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      import scala.jdk.CollectionConverters._
-      reader.getFileMetaData.getSchema.getFields.asScala.exists(_.getName == name)
-    } finally reader.close()
+    import scala.jdk.CollectionConverters._
+    ParquetFooters.withReader(ParquetFooters.inputFile(root, rel))(
+      _.getFileMetaData.getSchema.getFields.asScala.exists(_.getName == name))
   }
 
   /** The row-tracked read: every logical column plus `_row_id` =
@@ -3853,17 +3834,46 @@ object SnapshotTable {
     * bounds that prune files, the keyed anti-join, the upserts, the
     * range sampler and the rewrite all read the same rows — never a
     * re-run of the caller's plan (an ANSI MERGE's discovery join, a
-    * day's feature aggregation and model scoring). An empty changeset
-    * commits nothing and returns the base version. */
+    * day's feature aggregation and model scoring). The cluster-key
+    * bounds and the row count are taken while the job that
+    * materializes it runs, not by an aggregate job of their own. An
+    * empty changeset commits nothing and returns the base version. */
   def merge(s: SparkSession, root: String, clusterCol: String, idCol: String,
       changes: DataFrame, shardSize: Int = 4,
-      extraMeta: Map[String, String] = Map.empty, baseVersion: Int = -1): Int =
-    mergeRows(s, root, clusterCol, idCol, changes.localCheckpoint(true), shardSize,
-      extraMeta, baseVersion)
+      extraMeta: Map[String, String] = Map.empty, baseVersion: Int = -1): Int = {
+    val bounds = new KeyBounds
+    s.sparkContext.register(bounds, "merge_bounds")
+    // a nondeterministic always-true filter: evaluated once per row, in
+    // the checkpoint job's result stage, whose task updates count once
+    val tap = udf { (k: java.lang.Long) => bounds.add(k); true }.asNondeterministic()
+    val rows = changes.filter(tap(col(clusterCol))).localCheckpoint(true)
+    mergeRows(s, root, clusterCol, idCol, rows, bounds, shardSize, extraMeta, baseVersion)
+  }
 
-  /** [[merge]] over a MATERIALIZED changeset. */
+  /** (min, max) of the non-null keys added, and the count of all. */
+  private final class KeyBounds
+      extends org.apache.spark.util.AccumulatorV2[java.lang.Long, (Long, Long, Long)] {
+    private var lo = Long.MaxValue
+    private var hi = Long.MinValue
+    private var n = 0L
+    def isZero: Boolean = n == 0L
+    def copy(): KeyBounds = { val c = new KeyBounds; c.merge(this); c }
+    def reset(): Unit = { lo = Long.MaxValue; hi = Long.MinValue; n = 0L }
+    def add(k: java.lang.Long): Unit = {
+      n += 1
+      if (k != null) { lo = math.min(lo, k); hi = math.max(hi, k) }
+    }
+    def merge(o: org.apache.spark.util.AccumulatorV2[java.lang.Long, (Long, Long, Long)]): Unit =
+      o match {
+        case b: KeyBounds => n += b.n; lo = math.min(lo, b.lo); hi = math.max(hi, b.hi)
+      }
+    def value: (Long, Long, Long) = (lo, hi, n)
+  }
+
+  /** [[merge]] over a MATERIALIZED changeset and the [[KeyBounds]] of
+    * its `clusterCol`. */
   private def mergeRows(s: SparkSession, root: String, clusterCol: String,
-      idCol: String, changes: DataFrame, shardSize: Int,
+      idCol: String, changes: DataFrame, bounds: KeyBounds, shardSize: Int,
       extraMeta: Map[String, String], baseVersion: Int): Int = {
     val v = if (baseVersion >= 0) baseVersion else currentVersion(root)
     val carried = carriedMeta(root, v)
@@ -3915,10 +3925,9 @@ object SnapshotTable {
     carried.get("statsCol").foreach(c => require(c == physicalName(map, clusterCol),
       s"merge on $root: clusterCol=$clusterCol but the table's statsCol=$c — " +
         "merge pruning runs on the manifest's primary stats column"))
-    val bounds = changes.agg(min(col(clusterCol)), max(col(clusterCol)), count(lit(1)))
-      .head()
-    if (bounds.getLong(2) == 0L) return v // nothing to apply: no commit
-    val (qlo, qhi) = (bounds.getLong(0), bounds.getLong(1))
+    val (qlo, qhi, n) = bounds.value
+    if (n == 0L) return v // nothing to apply: no commit
+    require(qlo <= qhi, s"merge on $root: $clusterCol is null on every changeset row")
     val affected = prunedEntries(root, v, qlo, qhi)
     val affectedSet = affected.map(_.rel).toSet
     val untouched = manifestEntries(root, v).filterNot(e => affectedSet(e.rel))
@@ -4591,13 +4600,10 @@ object SnapshotTable {
     * refuses a required column through an optional request). */
   private def fileNullability(root: String, rel: String): Map[String, Boolean] = {
     import scala.jdk.CollectionConverters._
-    val in = HadoopInputFile.fromPath(
-      new HadoopPath(Paths.get(root, rel).toUri), hadoopConf)
-    val r = ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema.getFields.asScala
-      .map(f => f.getName ->
-        !f.isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED)).toMap
-    finally r.close()
+    ParquetFooters.withReader(ParquetFooters.inputFile(root, rel))(
+      _.getFooter.getFileMetaData.getSchema.getFields.asScala
+        .map(f => f.getName ->
+          !f.isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED)).toMap)
   }
 
   /** Conform `df`'s per-column nullability to `nn` (physical names):
@@ -5503,10 +5509,7 @@ object SnapshotTable {
   private[graft] def bloomMayContain(root: String, rel: String, keyCol: String,
       values: Seq[Long]): Seq[Long] = {
     import scala.jdk.CollectionConverters._
-    val in = HadoopInputFile.fromPath(
-      new HadoopPath(Paths.get(root, rel).toUri), hadoopConf)
-    val reader = ParquetFileReader.open(in)
-    try {
+    ParquetFooters.withReader(ParquetFooters.inputFile(root, rel)) { reader =>
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       values.filter { v =>
         blocks.exists { b =>
@@ -5543,7 +5546,7 @@ object SnapshotTable {
           }
         }
       }
-    } finally reader.close()
+    }
   }
 
   /** Needle lookup: scan ONLY the files whose bloom filter may contain

@@ -7,8 +7,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
@@ -397,12 +395,9 @@ private[sources] object SnapshotSourceUtil {
     }
   }
 
-  private def footerSchema(root: String, rel: String): MessageType = {
-    val in = HadoopInputFile.fromPath(
-      new HadoopPath(Paths.get(root, rel).toUri), new Configuration())
-    val r = ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
+  private def footerSchema(root: String, rel: String): MessageType =
+    ParquetFooters.withReader(ParquetFooters.inputFile(root, rel))(
+      _.getFooter.getFileMetaData.getSchema)
 
   def tableMessageType(root: String): MessageType =
     tableMessageType(root, SnapshotTable.currentVersion(root))
@@ -2362,7 +2357,9 @@ private[sources] class PartitionFileWriter(root: String, rel: String,
     case other => sys.error(s"graft-snapshot write: unsupported nested type $other")
   }
   private val writer = {
-    val conf = new Configuration()
+    // a copy of the loaded conf (no XML parse per file): the builder
+    // sets the write schema on the conf it is given
+    val conf = new Configuration(ParquetFooters.hadoopConf)
     ExampleParquetWriter.builder(new HadoopPath(Paths.get(root, rel).toUri))
       .withConf(conf).withType(msg).build()
   }

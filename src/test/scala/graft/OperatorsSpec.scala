@@ -1291,6 +1291,8 @@ class MergeSpec extends AnyFunSuite {
   import TestSession._
   import org.apache.spark.sql.functions._
   val ST = graft.operators.SnapshotTable
+  /** Spark jobs of the non-empty merge below (Spark 4.1, local[8]). */
+  val MergeJobs = 5
 
   test("x17: merge rewrites only the files containing touched keys; old snapshot intact") {
     val root = ST.mergeTable(spark, sf)
@@ -1390,6 +1392,25 @@ class MergeSpec extends AnyFunSuite {
       s"10 changeset rows were evaluated ${evaluated.value} times")
     val got = ST.read(spark, root).orderBy("id").as[(Long, Double)].collect().toSeq
     assert(got == (1L to 40L).map(k => (k, if (k >= 5 && k <= 14) 2.0 * k else 1.0 * k)))
+  }
+
+  test("a non-empty merge runs a pinned number of Spark jobs; an empty one commits nothing") {
+    import spark.implicits._
+    val root = freshRoot("graft_merge_jobs")
+    val base = (1L to 40L).map(k => (k, 1.0 * k)).toDF("id", "v")
+      .repartitionByRange(4, col("id"))
+    assert(graft.streaming.SnapshotSink.appendBatch(root, base, 0L, keyCol = "id"))
+    val changes = (5L to 14L).map(k => (k, 2.0 * k, "u")).toDF("id", "v", "op")
+    // the changeset's bounds and row count ride its checkpoint job: no
+    // aggregate of their own (an AQE shuffle job plus a result job)
+    val jobs = JobCounter.jobsStartedBy(ST.merge(spark, root, "id", "id", changes))
+    assert(jobs == MergeJobs, s"a 10-row merge into 4 files started $jobs Spark jobs")
+    assert(ST.currentVersion(root) == 2)
+    val got = ST.read(spark, root).orderBy("id").as[(Long, Double)].collect().toSeq
+    assert(got == (1L to 40L).map(k => (k, if (k >= 5 && k <= 14) 2.0 * k else 1.0 * k)))
+    // an empty changeset: no bounds to prune by, no commit
+    assert(ST.merge(spark, root, "id", "id", changes.filter(lit(false))) == 2)
+    assert(ST.currentVersion(root) == 2)
   }
 
   test("widening merge refuses a changeset that retypes an existing column (ADVICE r11)") {

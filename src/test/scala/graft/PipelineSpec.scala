@@ -11,6 +11,7 @@ class PipelineSpec extends AnyFunSuite {
   import TestSession._
   val P = graft.operators.Pipeline
   val ST = graft.operators.SnapshotTable
+  val Engine = graft.operators.Engine
 
   test("daily cadence: scores converge to one-shot c9; replays are stage-level no-ops") {
     val w = P.freshWarehouse("c21spec")
@@ -71,6 +72,53 @@ class PipelineSpec extends AnyFunSuite {
     val served = ST.read(spark, w.scores).select("user_id", "churn_prob")
     assert(served.except(oneShot).isEmpty && oneShot.except(served).isEmpty,
       "crash-resumed cadence diverged from the one-shot scoring")
+  }
+
+  /** After a failed cycle has returned: no Spark job still runs, and
+    * no table of `w` moves afterwards. Returns the table versions. */
+  private def settled(w: P.Warehouse): Seq[Int] = {
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a Spark job outlived the failed cycle")
+    val versions = Seq(w.bronze, w.rollup, w.scores).map(ST.currentVersion)
+    Thread.sleep(1000)
+    assert(Seq(w.bronze, w.rollup, w.scores).map(ST.currentVersion) == versions,
+      "a table committed after the failed cycle returned")
+    versions
+  }
+
+  test("a failed fit is rethrown only after the cycle's ingest and rollup have ended") {
+    import java.nio.file.{Files, Paths}
+    // a corpus copy without the customer table: the fit sizes its matrix
+    // from that table's footers, so it fails; ingest and rollup read
+    // only the events
+    val corpus = Files.createTempDirectory("graft_no_customer")
+    try {
+      Engine.listDir(Paths.get(sf))
+        .filterNot(_.getFileName.toString == "customer.parquet")
+        .foreach(f => Files.copy(f, corpus.resolve(f.getFileName)))
+      val w = P.freshWarehouse("c21fitfail")
+      val e = intercept[java.io.FileNotFoundException](P.runCycle(spark, corpus.toString, w, 0))
+      assert(e.getMessage.contains("customer"), e.getMessage)
+      // ingest and rollup committed before the error surfaced; score never ran
+      assert(settled(w) == Seq(1, 1, 0))
+    } finally Engine.deleteRecursively(corpus)
+  }
+
+  test("a failed rollup is rethrown only after the cycle's fit, ingest and score have ended") {
+    import java.nio.file.{Files, Paths}
+    // a plain file where the rollup table's directory belongs
+    val w0 = P.freshWarehouse("c21rollupfail")
+    val blocker = Paths.get(w0.rollup + "_file")
+    Files.deleteIfExists(blocker)
+    Files.write(blocker, "not a table".getBytes)
+    val w = w0.copy(rollup = blocker.toString)
+    try {
+      val e = intercept[Exception](P.runCycle(spark, sf, w, 0))
+      assert(e.getStackTrace.exists(_.getClassName.startsWith("graft.streaming.SnapshotSink")),
+        s"not the rollup's append: $e")
+      // ingest and score committed before the error surfaced
+      assert(settled(w) == Seq(1, 0, 1))
+    } finally Files.deleteIfExists(blocker)
   }
 
   test("c22 serving: looked-up churn_prob ≡ one-shot c9 for the sampled users") {

@@ -1089,35 +1089,6 @@ class SnapshotRobustnessSpec extends AnyFunSuite {
     rels
   }
 
-  /** Spark jobs started by this thread while `f` runs. A fence job
-    * ends the window: listener events arrive in order, so once the
-    * fence's start is seen every earlier job's start has been too. */
-  private def jobsStartedBy(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"probe-${java.util.UUID.randomUUID}"
-    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.probe")))
-          .filter(_.startsWith(tag)).foreach(starts.put)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.probe", tag)
-      try f finally sc.setLocalProperty("graft.test.probe", null)
-      sc.setLocalProperty("graft.test.probe", s"$tag-fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.probe", null)
-      var n = 0
-      var seen = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      while (seen != null && seen == tag) {
-        n += 1
-        seen = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      assert(seen == s"$tag-fence", "the fence job's start never arrived")
-      n
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("footer schemas equal Spark's inferred schemas, and reads plan without a job") {
     import graft.sources.{ParquetFooters, Tables}
     val root = freshRoot("graft_footer_schema")
@@ -1145,7 +1116,7 @@ class SnapshotRobustnessSpec extends AnyFunSuite {
     rels.foreach(r => Files.copy(Paths.get(root, r), dirTable.resolve(r)))
     assert(ParquetFooters.schema(spark, dirTable.toString) ==
       spark.read.parquet(dirTable.toString).schema)
-    val jobs = jobsStartedBy {
+    val jobs = JobCounter.jobsStartedBy {
       ParquetFooters.read(spark, Seq(dirTable.toString))
       ST.read(spark, root)
       ST.readPointLookup(spark, root, "k", Seq(3L, 30L))
