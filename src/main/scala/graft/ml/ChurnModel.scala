@@ -148,6 +148,9 @@ object ChurnModel {
       model.stages.collectFirst {
         case lr: org.apache.spark.ml.classification.LogisticRegressionModel =>
           lastIters = lr.summary.totalIterations
+          // every scoring closure ships the model: without its summary,
+          // not the training frame and session too
+          org.apache.spark.ml.GraftMlShim.dropSummary(lr)
       }
       (data, model)
     }

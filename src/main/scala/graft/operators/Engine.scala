@@ -350,21 +350,12 @@ object Engine {
     // because the driver calls them sequentially; the second write's
     // tasks back-fill the first's tail). Each table's content, bucket
     // spec and sort are untouched.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val w1 = scala.concurrent.Future(scala.concurrent.blocking {
-        li.write.mode("overwrite").bucketBy(8, "l_orderkey")
-          .sortBy("l_orderkey").saveAsTable("graft_li_bucketed")
-      })
-      val w2 = scala.concurrent.Future(scala.concurrent.blocking {
-        o.write.mode("overwrite").bucketBy(8, "o_orderkey")
-          .sortBy("o_orderkey").saveAsTable("graft_o_bucketed")
-      })
-      Seq(w1, w2).foreach(f => scala.concurrent.Await.result(
-        f, scala.concurrent.duration.Duration(10, java.util.concurrent.TimeUnit.MINUTES)))
-    } finally pool.shutdown()
+    graft.Branches.run(s) { b =>
+      b.fork("li-bucketed")(li.write.mode("overwrite").bucketBy(8, "l_orderkey")
+        .sortBy("l_orderkey").saveAsTable("graft_li_bucketed"))
+      b.fork("o-bucketed")(o.write.mode("overwrite").bucketBy(8, "o_orderkey")
+        .sortBy("o_orderkey").saveAsTable("graft_o_bucketed"))
+    }
     s.table("graft_li_bucketed")
       .join(s.table("graft_o_bucketed"), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))

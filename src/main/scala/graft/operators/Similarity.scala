@@ -698,19 +698,16 @@ object Similarity {
     import org.apache.spark.ml.functions.array_to_vector
     // The PqM fits are INDEPENDENT jobs over disjoint subvector slices;
     // actions are only sequential because the driver calls them
-    // sequentially (guide §2.6), so the fits run concurrently from a
-    // small thread pool — each fit's input, seed, partitioning and math
+    // sequentially (guide §2.6), so the fits run concurrently, one
+    // branch each — each fit's input, seed, partitioning and math
     // are untouched, so the codebooks are bit-identical to the
     // sequential run, and FIFO scheduling back-fills one fit's
     // iteration-job tails with the next fit's tasks. An iterative
     // KMeans fit is dozens of small jobs; serializing PqM of them was
     // pure driver-side wait.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(PqM)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
+    graft.Branches.run(df.sparkSession) { b =>
       val fits = (0 until PqM).map { j =>
-        scala.concurrent.Future {
+        b.fork(s"pq-fit-$j") {
           val sub = df.select(array_to_vector(
             slice(col(vecCol), j * subLen + 1, subLen)).as("sv"))
           new KMeans().setK(PqK).setSeed(seedBase + j).setMaxIter(10)
@@ -718,9 +715,8 @@ object Similarity {
             .fit(sub).clusterCenters.toSeq.map(_.toArray.toSeq)
         }
       }
-      fits.map(f => scala.concurrent.Await.result(
-        f, scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+      fits.map(b.await)
+    }
   }
 
   /** s11_knn_pq — PRODUCT-QUANTIZATION ANN (the remaining classic in

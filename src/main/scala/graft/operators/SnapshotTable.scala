@@ -4180,11 +4180,12 @@ object SnapshotTable {
     * op-labeled changeset, and hands it to [[merge]] — so the rewrite
     * stays stats-pruned to touched files and the commit CASes the
     * version the discovery read (a racing APPEND triggers a re-discover
-    * retry, never a lost update; a racing rewrite aborts loudly inside
-    * merge's conflict check). The discovery join is the price of
-    * match-finding (Delta's phase 1 pays the same scan); at 100 TB it
-    * broadcasts the source when small, and the REWRITE — the expensive
-    * half — still touches only files whose stats admit a changed key.
+    * retry under [[casCommit]]'s policy, never a lost update; a racing
+    * rewrite aborts loudly inside merge's conflict check). The
+    * discovery join is the price of match-finding (Delta's phase 1
+    * pays the same scan); at 100 TB it broadcasts the source when
+    * small, and the REWRITE — the expensive half — still touches only
+    * files whose stats admit a changed key.
     *
     * Envelope (refused loudly outside it): ON is one equi-condition
     * `t.<col> = s.<col>`; a target row matched by multiple source rows
@@ -4212,10 +4213,10 @@ object SnapshotTable {
       clauses.count(_.isInstanceOf[WhenNotMatchedBySourceUpdate]) <= 1 &&
       clauses.count(_.isInstanceOf[WhenNotMatchedBySourceDelete]) <= 1,
       s"ansi merge on $root: at most one clause of each kind")
-    var attempts = 0
-    var result = -1
-    while (result < 0) {
-      val v = currentVersion(root)
+    // each attempt is the whole discovery against the version it is
+    // handed plus the merge pinned to it: a racer that commits after
+    // discovery loses this attempt its CAS, and the next re-discovers
+    casCommit(root) { v =>
       require(v > 0, s"ansi merge on $root: table has no committed version")
       val tgtPlain0 = readAt(s, root, v)
       // an IDENTITY column is engine-owned and OUTSIDE the merge
@@ -4446,15 +4447,8 @@ object SnapshotTable {
       }
       // merge evaluates the compiled changeset (and so the O(table)
       // discovery join) once, and no-ops when no clause matched a row
-      try result = merge(s, root, clusterCol, onTgtCol,
-        parts.reduce(_ unionByName _), baseVersion = v)
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          attempts += 1 // a racer committed after discovery: re-discover
-          if (attempts >= 8) throw e
-      }
+      merge(s, root, clusterCol, onTgtCol, parts.reduce(_ unionByName _), baseVersion = v)
     }
-    result
   }
 
   /** Commit a copy-on-write rewrite (UPDATE/DELETE shape: replace

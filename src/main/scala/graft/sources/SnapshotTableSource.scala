@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.schema.{MessageType, MessageTypeParser}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.hadoop.mapreduce.{JobID, TaskAttemptContext, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.schema.MessageType
 
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
@@ -22,13 +23,14 @@ import org.apache.spark.sql.connector.distributions.{Distribution, Distributions
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsOverwrite, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile, SchemaColumnConvertNotSupportedException}
+import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriter, OutputWriterFactory, PartitionedFile, SchemaColumnConvertNotSupportedException}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{AlwaysTrue, And, DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.SnapshotTable
 
@@ -71,15 +73,15 @@ import graft.operators.SnapshotTable
   *     the first commit at-or-after it via the same commit-time source
   *     time travel uses (in-commit timestamps when present).
   *
-  * Data files decode through Spark's own parquet reader
-  * (`ParquetFileFormat`, the reader the path API scans with), so both
-  * routes share one type mapping. Projection pushdown is real:
-  * `pruneColumns` narrows the schema that reader is asked for, so a
-  * 2-column aggregate over a wide table decodes 2 columns
-  * (SnapshotSourceSpec pins the scan's readSchema). Each data file is
-  * one InputPartition — at 100 TB planning ships paths, never data,
-  * and task parallelism is file-granular, the same unit the manifest
-  * commits in. */
+  * Data files decode through Spark's own parquet reader and encode
+  * through its writer (`ParquetFileFormat`, the format the path API
+  * scans and writes with), so both routes share one type mapping.
+  * Projection pushdown is real: `pruneColumns` narrows the schema that
+  * reader is asked for, so a 2-column aggregate over a wide table
+  * decodes 2 columns (SnapshotSourceSpec pins the scan's readSchema).
+  * Each data file is one InputPartition — at 100 TB planning ships
+  * paths, never data, and task parallelism is file-granular, the same
+  * unit the manifest commits in. */
 class SnapshotTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-snapshot"
 
@@ -296,23 +298,6 @@ private[sources] object SnapshotSourceUtil {
     }
   }
 
-  /** The nested field mapping TREES by PHYSICAL parent column name, for
-    * the task WRITER: `pa -> ColNode` — NESTED column mappings (dotted
-    * colmap entries, x44; ARBITRARY depth since r19) translate incoming
-    * LOGICAL struct field names so landed files carry physical names
-    * beside residents (the writer's top level is physical already —
-    * [[physStruct]] renamed it). Empty when the table has no dotted
-    * colmap entries (the common case — zero cost). */
-  def nestedFieldMaps(map: Option[Seq[(String, String)]])
-      : Map[String, SnapshotTable.ColNode] = map match {
-    case None => Map.empty
-    case Some(m0) =>
-      val t = SnapshotTable.parseColTree(m0)
-      t.children.map { case (parentLogical, node) =>
-        (SnapshotTable.physicalName(Some(t.fields), parentLogical), node)
-      }
-  }
-
   /** Re-attach column-DEFAULT metadata (the analyzer's
     * CURRENT_DEFAULT/EXISTS_DEFAULT fill keys) from the manifest's
     * `default.<col>` state — the footer-derived schema carries none. */
@@ -345,79 +330,16 @@ private[sources] object SnapshotSourceUtil {
         nullable = false)
   }
 
-  /** StructType → parquet record schema, for the WRITE side (the
-    * reverse of [[sparkSchema]] over the writer's types, so a written
-    * table reads back with the same StructType). */
-  def messageType(schema: StructType): MessageType = {
-    import org.apache.parquet.schema.Types
-    val b = Types.buildMessage()
-    schema.fields.foreach(f => b.addField(parquetType(f.name, f.dataType, f.nullable)))
-    b.named("spark_schema")
-  }
-
-  /** Spark type → parquet type for the WRITE side — six primitives plus
-    * (r16) nested STRUCTS as groups and (r17) standard 3-level
-    * LIST/MAP groups. */
-  private def parquetType(name: String,
-      dt: org.apache.spark.sql.types.DataType,
-      nullable: Boolean): org.apache.parquet.schema.Type = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    val rep = if (nullable) org.apache.parquet.schema.Type.Repetition.OPTIONAL
-      else org.apache.parquet.schema.Type.Repetition.REQUIRED
-    dt match {
-      case LongType => Types.primitive(PrimitiveTypeName.INT64, rep).named(name)
-      case IntegerType => Types.primitive(PrimitiveTypeName.INT32, rep).named(name)
-      case DoubleType => Types.primitive(PrimitiveTypeName.DOUBLE, rep).named(name)
-      case FloatType => Types.primitive(PrimitiveTypeName.FLOAT, rep).named(name)
-      case BooleanType => Types.primitive(PrimitiveTypeName.BOOLEAN, rep).named(name)
-      case StringType => Types.primitive(PrimitiveTypeName.BINARY, rep)
-        .as(LogicalTypeAnnotation.stringType()).named(name)
-      case st: StructType =>
-        val g = Types.buildGroup(rep)
-        st.fields.foreach(f => g.addField(parquetType(f.name, f.dataType, f.nullable)))
-        g.named(name)
-      case ArrayType(et, containsNull) =>
-        // the standard 3-level LIST encoding — byte-identical shape to
-        // what Spark's own parquet writer emits, so a CTAS'd array
-        // table reads back through ANY parquet reader
-        Types.buildGroup(rep).as(LogicalTypeAnnotation.listType())
-          .addField(Types.repeatedGroup()
-            .addField(parquetType("element", et, containsNull)).named("list"))
-          .named(name)
-      case MapType(kt, vt, valueContainsNull) =>
-        Types.buildGroup(rep).as(LogicalTypeAnnotation.mapType())
-          .addField(Types.repeatedGroup()
-            .addField(parquetType("key", kt, nullable = false))
-            .addField(parquetType("value", vt, valueContainsNull))
-            .named("key_value"))
-          .named(name)
-      case other => sys.error(s"graft-snapshot write: unsupported type $other ($name)")
-    }
-  }
-
   private def footerSchema(root: String, rel: String): MessageType =
     ParquetFooters.withReader(ParquetFooters.inputFile(root, rel))(
       _.getFooter.getFileMetaData.getSchema)
 
-  def tableMessageType(root: String): MessageType =
-    tableMessageType(root, SnapshotTable.currentVersion(root))
-
-  /** Version-pinned variant — time travel (`VERSION AS OF`) plans with
-    * the schema AS OF that snapshot, so a later widening never leaks
-    * phantom columns into a historical read. */
-  def tableMessageType(root: String, v: Int): MessageType = {
-    require(v > 0, s"graft-snapshot: $root has no committed version")
+  /** The footer schema of version `v` of a table without a schema
+    * capture (see [[physicalSchema]]) — as of that snapshot, so a later
+    * widening never leaks phantom columns into a historical read. */
+  private def tableMessageType(root: String, v: Int): MessageType = {
     val entries = SnapshotTable.manifestEntries(root, v)
     val meta = SnapshotTable.manifestMeta(root, v)
-    // a widening commit that CAPTURED the union (#schemaJson) makes
-    // evolved planning zero-footer here too: the capture is
-    // all-nullable, so the write-side converter emits the same
-    // OPTIONAL-field union the footer sweep would. Captures with types
-    // outside the converter's set fall through to the footer union.
-    val captured = meta.get("schemaJson").flatMap { js =>
-      scala.util.Try(messageType(
-        DataType.fromJson(js).asInstanceOf[StructType])).toOption
-    }
     // EVOLVED (mixed-width) versions read each file by NAME through
     // Spark's parquet reader, which null-fills the columns a file
     // lacks — also NESTED ones, so add-column evolution over a
@@ -425,19 +347,12 @@ private[sources] object SnapshotSourceUtil {
     // enforces that the nested columns THEMSELVES never change shape
     // across files (add-column evolution only, same rule as
     // primitives).
-    if (captured.isDefined) captured.get
-    else if (entries.isEmpty)
+    if (entries.isEmpty)
       // a zero-entry version (delete-all) is plannable only through
       // its schema capture — refuse with an accurate diagnosis instead
-      // of crashing on entries.head: either no capture exists (a
-      // legacy empty commit) or its types exceed the connector's
-      // envelope (the Try above swallowed the conversion)
+      // of crashing on entries.head (a legacy empty commit)
       throw new IllegalStateException(s"graft-snapshot: version $v of $root has no " +
-        "file entries and " +
-        (if (meta.contains("schemaJson"))
-          "its schema capture uses types outside the connector's envelope"
-        else "no schema capture") +
-        " — read it through SnapshotTable.readAt")
+        "file entries and no schema capture — read it through SnapshotTable.readAt")
     else if (!meta.contains("schema"))
       // the overwhelmingly common case: uniform-width files — ONE
       // footer read prices the whole planning step
@@ -565,16 +480,6 @@ private[sources] object SnapshotSourceUtil {
         }
       }
     })
-
-  /** Logical-named struct → physical TOP-LEVEL names, for the task
-    * writer (it translates struct fields itself, through
-    * [[nestedFieldMaps]]); anything unmapped passes through. */
-  def physStruct(logical: StructType,
-      map: Option[Seq[(String, String)]]): StructType = map match {
-    case None => logical
-    case Some(_) => StructType(logical.fields.map(f =>
-      f.copy(name = SnapshotTable.physicalName(map, f.name))))
-  }
 
   /** Logical-named struct → the reader's PHYSICAL request: names
     * translate through the column mapping tree at every depth, mapped
@@ -1801,18 +1706,10 @@ private[sources] class SnapshotWriteBuilder(root: String, info: LogicalWriteInfo
           org.apache.spark.sql.catalyst.expressions.BindReferences
             .bindReference(resolved, analyzed.child.output))
       }
-      // the fill column's parquet repetition must CONFORM to what the
-      // resident files declare (a REQUIRED column written OPTIONAL
-      // would make the uniform-table read request refuse the mix —
-      // the same rule conformNullability enforces on MoR postimages)
-      val cmap = SnapshotTable.colMap(root, v)
-      val physMsg = scala.util.Try(SnapshotSourceUtil.tableMessageType(root, v)).toOption
+      // a fill column's nullability is conformed to the resident files
+      // with every other column's, in the factory
       val widened = info.schema().fields.toSeq ++ bound.map { case (c, dt, _) =>
-        val pn = SnapshotTable.physicalName(cmap, c)
-        val nullable = !physMsg.exists(m => m.containsField(pn) &&
-          m.getType(m.getFieldIndex(pn)).isRepetition(
-            org.apache.parquet.schema.Type.Repetition.REQUIRED))
-        StructField(c, dt, nullable)
+        StructField(c, dt, nullable = true)
       }
       val order = declared.fieldNames.filter(c =>
           widened.exists(_.name.equalsIgnoreCase(c))) ++
@@ -1865,16 +1762,6 @@ private[sources] class SnapshotWriteBuilder(root: String, info: LogicalWriteInfo
         s"graft-snapshot write to $root: column $ic is GENERATED ALWAYS AS " +
           "IDENTITY — omit it (path-route append or the streaming sink); " +
           "the engine assigns dense ids at commit"))
-    // NESTED-mapped tables (r17): incoming struct FIELD names are
-    // LOGICAL; the task writer translates them to physical through the
-    // same nestedFieldMaps decode point the reader uses, so the
-    // written file carries physical names beside residents. Dropped
-    // OPTIONAL fields simply stay unset (new rows have no values for
-    // dropped columns); a dropped REQUIRED field has no value to
-    // write and refuses at plan time (checkNestedCompat).
-    val nestedWriteMap: Map[String, SnapshotTable.ColNode] =
-      if (cur == 0) Map.empty
-      else SnapshotSourceUtil.nestedFieldMaps(SnapshotTable.colMap(root, cur))
     // `_row_id`/`__row_id` are reserved spellings (the row-id read keys
     // on the OUTPUT name — a committed data column would shadow engine
     // ids on tracked tables and brick plain DSv2 reads on untracked
@@ -1894,133 +1781,96 @@ private[sources] class SnapshotWriteBuilder(root: String, info: LogicalWriteInfo
         s"graft-snapshot write to $root: $n is a reserved name (manifest " +
           "entries carry file sizes under it) — rename the column"))
     // the incoming query's schema is LOGICAL (the table exposes the
-    // mapping); data files always carry PHYSICAL names — translate.
-    // Row decode is positional, so renaming fields is free. The write
-    // schema is the gen-widened one (omitted generated columns derive
-    // in-task — see genPlan).
-    val phys0 = SnapshotSourceUtil.physStruct(genPlan._1,
-      SnapshotTable.colMap(root, cur))
-    // CONFORM each column's parquet repetition to what the resident
-    // files declare (the conformNullability rule, applied to the
-    // append route): two INSERTs whose analyzer-derived nullability
-    // differs (a column-list insert filling non-null DEFAULTs beside
-    // a positional one, say) would otherwise write REQUIRED beside
-    // OPTIONAL, and the NOT NULL the table exposes from its files'
-    // REQUIRED declarations would hold for some files only. REQUIRED
-    // slots get a loud per-row null guard in the writer — parquet
-    // REQUIRED is the table's NOT NULL constraint.
-    val physMsg = if (cur == 0) None
-      else scala.util.Try(SnapshotSourceUtil.tableMessageType(root, cur)).toOption
-    val phys = physMsg.fold(phys0)(m => StructType(phys0.fields.map { f =>
-      if (m.containsField(f.name))
-        f.copy(nullable = !m.getType(m.getFieldIndex(f.name)).isRepetition(
-          org.apache.parquet.schema.Type.Repetition.REQUIRED))
-      else f
-    }))
-    // NESTED columns (structs r16, lists/maps r17) write under the
-    // RESIDENT footer's group type verbatim (inner field order AND
-    // repetition match the files this one sits beside, so nested NOT
-    // NULL fields stay NOT NULL in every file); compatibility is
-    // checked here at plan time: an incoming field the resident group
-    // lacks is struct-field evolution (needs a rewrite), an omitted
-    // REQUIRED field has no value to write. RECURSIVE compatibility:
-    // names, REQUIRED presence, group SHAPE (list/map/struct) AND
-    // primitive kinds must match the resident declaration at every
-    // depth — a mismatch refuses at planning with the field's path,
-    // never a per-row parquet error mid-task (r16 review)
-    def checkNestedCompat(path: String, dt0: DataType,
-        ft0: org.apache.parquet.schema.Type,
-        node: Option[SnapshotTable.ColNode] = None): Unit = dt0 match {
-      case st: StructType =>
-        require(!ft0.isPrimitive &&
-            ft0.asGroupType().getLogicalTypeAnnotation == null,
-          s"graft-snapshot write to $root: $path is a struct but the " +
-            s"resident files declare $ft0 — needs a rewrite")
-        val gt = ft0.asGroupType()
-        import scala.jdk.CollectionConverters._
-        // a nested column mapping translates incoming LOGICAL field
-        // names to the residents' physical ones (at any depth — the
-        // mapping tree descends with the recursion) — dropped OPTIONAL
-        // physical fields are simply not named by any incoming field
-        // and stay unset
+    // mapping), conformed to the resident files; data files always
+    // carry PHYSICAL names, at every depth. Rows are positional, so
+    // renaming fields is free. The write schema is the gen-widened one
+    // (omitted generated columns derive in-task — see genPlan).
+    val map = SnapshotTable.colMap(root, cur)
+    val logical = (if (cur == 0) None
+      else scala.util.Try(SnapshotSourceUtil.physicalSchema(root, cur)).toOption)
+      .fold(genPlan._1)(conformed(genPlan._1, _, map))
+    val phys = SnapshotSourceUtil.physicalRequest(logical, map)
+    // Spark's own parquet writer, the one the path API and the sink
+    // write through: prepared once here, instantiated per task file
+    val spark = org.apache.spark.sql.SparkSession.active
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      new Configuration(spark.sparkContext.hadoopConfiguration))
+    val files = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, phys)
+    SnapshotWriterFactory(root, files, new SerializableConfiguration(job.getConfiguration),
+      logical, phys, boundChecks, genPlan._2, genPlan._3)
+  }
+
+  /** `incoming` (logical names) with each column's nullability, at
+    * every depth, conformed to what the `resident` files (physical
+    * names) declare — the conformNullability rule of the path API's
+    * rewrites. Two INSERTs whose analyzer-derived nullability differs
+    * (a column-list insert filling non-null DEFAULTs beside a
+    * positional one, say) would otherwise write REQUIRED beside
+    * OPTIONAL, and the NOT NULL the table exposes from its files'
+    * REQUIRED declarations would hold for some files only; the
+    * writer's [[NotNullGuard]] refuses a null into a REQUIRED slot.
+    * Nested columns are checked against the residents here, at plan
+    * time, never by a per-row error mid-task: names, REQUIRED
+    * presence, shape (struct/list/map) and leaf types must match at
+    * every depth. An incoming struct field the residents lack is
+    * struct-field evolution (needs a rewrite); an omitted OPTIONAL
+    * field, a dropped one included, null-fills on read; an omitted
+    * REQUIRED field has no value to write. */
+  private def conformed(incoming: StructType, resident: StructType,
+      map: Option[Seq[(String, String)]]): StructType = {
+    def refuse(msg: String): Nothing =
+      throw new IllegalArgumentException(s"graft-snapshot write to $root: $msg")
+    // a nested column mapping translates incoming LOGICAL field names
+    // to the residents' physical ones; its tree descends with the walk
+    def nested(path: String, dt: DataType, res: DataType,
+        node: Option[SnapshotTable.ColNode]): DataType = (dt, res) match {
+      case (st: StructType, rs: StructType) =>
         def pn(f: String): String = node.fold(f)(_.physicalOf(f))
-        val extra = st.fieldNames.filterNot(f => gt.containsField(pn(f)))
-        require(extra.isEmpty,
-          s"graft-snapshot write to $root: struct $path carries " +
-            s"field(s) ${extra.mkString(",")} the resident files lack — " +
-            "struct-field evolution needs a rewrite (Scala route)")
+        val extra = st.fieldNames.filterNot(f => rs.fieldNames.contains(pn(f)))
+        if (extra.nonEmpty) refuse(s"struct $path carries field(s) " +
+          s"${extra.mkString(",")} the resident files lack — struct-field " +
+          "evolution needs a rewrite (Scala route)")
         val covered = st.fieldNames.map(pn).toSet
-        val missingReq = gt.getFields.asScala.filter(x =>
-          x.isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED) &&
-            !covered.contains(x.getName))
-        require(missingReq.isEmpty,
-          s"graft-snapshot write to $root: struct $path omits " +
-            s"REQUIRED field(s) ${missingReq.map(_.getName).mkString(",")}" +
-            (if (node.nonEmpty) " (a DROPPED field the residents declare " +
-              "NOT NULL has no value to write — OPTIMIZE to materialize " +
-              "the mapping first)" else ""))
-        st.fields.foreach { f =>
-          checkNestedCompat(s"$path.${f.name}", f.dataType,
-            gt.getType(gt.getFieldIndex(pn(f.name))),
-            node.flatMap(_.children.get(f.name)))
+        val missingReq = rs.fields.filter(r => !r.nullable && !covered(r.name))
+        if (missingReq.nonEmpty) refuse(s"struct $path omits REQUIRED field(s) " +
+          missingReq.map(_.name).mkString(",") +
+          (if (node.nonEmpty) " (a DROPPED field the residents declare " +
+            "NOT NULL has no value to write — OPTIMIZE to materialize " +
+            "the mapping first)" else ""))
+        StructType(st.fields.map { f =>
+          val r = rs(pn(f.name))
+          f.copy(dataType = nested(s"$path.${f.name}", f.dataType, r.dataType,
+            node.flatMap(_.children.get(f.name))), nullable = r.nullable)
+        })
+      case (ArrayType(et, _), ArrayType(ret, rcn)) =>
+        ArrayType(nested(s"$path.element", et, ret, None), rcn)
+      case (MapType(kt, vt, _), MapType(rkt, rvt, rvcn)) =>
+        MapType(nested(s"$path.key", kt, rkt, None),
+          nested(s"$path.value", vt, rvt, None), rvcn)
+      case (_: StructType | _: ArrayType | _: MapType, _) =>
+        val shape = dt match {
+          case _: StructType => "a struct"
+          case _: ArrayType => "an array"
+          case _ => "a map"
         }
-      case ArrayType(et, _) =>
-        require(!ft0.isPrimitive && ft0.asGroupType().getLogicalTypeAnnotation
-            .isInstanceOf[org.apache.parquet.schema.LogicalTypeAnnotation
-              .ListLogicalTypeAnnotation],
-          s"graft-snapshot write to $root: $path is an array but the " +
-            s"resident files declare $ft0 — needs a rewrite")
-        checkNestedCompat(s"$path.element", et,
-          ft0.asGroupType().getType(0).asGroupType().getType(0))
-      case MapType(kt, vt, _) =>
-        require(!ft0.isPrimitive && ft0.asGroupType().getLogicalTypeAnnotation
-            .isInstanceOf[org.apache.parquet.schema.LogicalTypeAnnotation
-              .MapLogicalTypeAnnotation],
-          s"graft-snapshot write to $root: $path is a map but the " +
-            s"resident files declare $ft0 — needs a rewrite")
-        val kv = ft0.asGroupType().getType(0).asGroupType()
-        checkNestedCompat(s"$path.key", kt, kv.getType(0))
-        checkNestedCompat(s"$path.value", vt, kv.getType(1))
-      case dt =>
-        val expected = dt match {
-          case LongType => PrimitiveTypeName.INT64
-          case IntegerType => PrimitiveTypeName.INT32
-          case DoubleType => PrimitiveTypeName.DOUBLE
-          case FloatType => PrimitiveTypeName.FLOAT
-          case BooleanType => PrimitiveTypeName.BOOLEAN
-          case StringType => PrimitiveTypeName.BINARY
-          case other => sys.error(
-            s"graft-snapshot write: unsupported nested type $other")
-        }
-        require(ft0.isPrimitive &&
-            ft0.asPrimitiveType().getPrimitiveTypeName == expected,
-          s"graft-snapshot write to $root: $path is " +
-            s"${dt.simpleString} but the resident files declare $ft0 — " +
-            "type changes inside a nested column need a rewrite")
+        refuse(s"$path is $shape but the resident files declare " +
+          s"${res.simpleString} — needs a rewrite")
+      case _ if dt == res => dt
+      case _ => refuse(s"$path is ${dt.simpleString} but the resident files declare " +
+        s"${res.simpleString} — type changes inside a nested column need a rewrite")
     }
-    val msg = physMsg match {
-      case None => SnapshotSourceUtil.messageType(phys)
-      case Some(m) =>
-        import scala.jdk.CollectionConverters._
-        val fields: Seq[org.apache.parquet.schema.Type] = phys.fields.toSeq.map { f =>
-          if (!m.containsField(f.name))
-            SnapshotSourceUtil.messageType(StructType(Seq(f))).getType(0)
-          else {
-            val ft = m.getType(m.getFieldIndex(f.name))
-            f.dataType match {
-              case _: StructType | _: ArrayType | _: MapType =>
-                checkNestedCompat(f.name, f.dataType, ft,
-                  nestedWriteMap.get(f.name))
-                ft
-              case _ => ft
-            }
-          }
+    val tree = map.map(SnapshotTable.parseColTree)
+    StructType(incoming.fields.map { f =>
+      resident.find(_.name == tree.fold(f.name)(_.physicalOf(f.name))) match {
+        case None => f
+        case Some(r) => f.dataType match {
+          case _: StructType | _: ArrayType | _: MapType => f.copy(nullable = r.nullable,
+            dataType = nested(f.name, f.dataType, r.dataType,
+              tree.flatMap(_.children.get(f.name))))
+          case _ => f.copy(nullable = r.nullable)
         }
-        new MessageType("spark_schema",
-          fields.asJava: java.util.List[org.apache.parquet.schema.Type])
-    }
-    SnapshotWriterFactory(root, msg.toString, phys, boundChecks,
-      genPlan._2, genPlan._3, nestedWriteMap)
+      }
+    })
   }
   // `.option("statsCol", c)` on the writer declares the pruning column
   // for a table this write CREATES (an existing table's statsCol is
@@ -2200,16 +2050,16 @@ private[graft] object SnapshotCommit {
 }
 
 /** Executor-side writer: each task streams its rows into one immutable
-  * uniquely-named parquet file under the table root via parquet-mr's
-  * example Group API, whose NOT NULL guards at every nested depth
-  * Spark's own writer lacks. */
+  * uniquely-named parquet file under the table root through Spark's
+  * own parquet writer (`files`, prepared on the driver over the
+  * physical `fileSchema`). `schema` is the same row layout under the
+  * logical names, which CHECK failures and the [[NotNullGuard]] ahead
+  * of the writer report. */
 private[sources] case class SnapshotWriterFactory(root: String,
-    parquetSchema: String, schema: StructType,
-    checks: Seq[(String, String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
-    srcIdx: Array[Int] = Array.empty,
-    fills: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil,
-    nestedMap: Map[String, SnapshotTable.ColNode] = Map.empty)
+    files: OutputWriterFactory, conf: SerializableConfiguration,
+    schema: StructType, fileSchema: StructType,
+    checks: Seq[(String, String, org.apache.spark.sql.catalyst.expressions.Expression)],
+    srcIdx: Array[Int], fills: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
     extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -2220,149 +2070,19 @@ private[sources] case class SnapshotWriterFactory(root: String,
   private def writer(partitionId: Int, epochId: Long): DataWriter[InternalRow] = {
     val rel = s"data_w_e${epochId}_p${partitionId}_" +
       s"${SnapshotTable.uniqueTag()}.parquet"
-    new PartitionFileWriter(root, rel, parquetSchema, schema, checks,
-      srcIdx, fills, nestedMap)
+    new PartitionFileWriter(this, rel,
+      new TaskAttemptContextImpl(conf.value, new TaskAttemptID(
+        new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId), 0)))
   }
 }
 
-private[sources] class PartitionFileWriter(root: String, rel: String,
-    parquetSchema: String, schema: StructType,
-    checks: Seq[(String, String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
-    srcIdx: Array[Int] = Array.empty,
-    fills: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil,
-    nestedMap: Map[String, SnapshotTable.ColNode] = Map.empty)
-    extends DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
+private[sources] class PartitionFileWriter(f: SnapshotWriterFactory, rel: String,
+    task: TaskAttemptContext) extends DataWriter[InternalRow] {
+  import f.{checks, fills, root, schema, srcIdx}
 
-  private val msg = MessageTypeParser.parseMessageType(parquetSchema)
-  private val groups = new SimpleGroupFactory(msg)
-  private var rows = 0L
-  // NESTED write plans (r16 structs, r17 lists/maps): per incoming
-  // struct field, the message group's field index (matched by NAME
-  // once here), its REQUIRED flag, type, and sub-plan — the per-row
-  // loop stays lookup-free
-  private def writePlan(st: StructType,
-      gt: org.apache.parquet.schema.GroupType,
-      node: Option[SnapshotTable.ColNode] = None): Array[(Int, Boolean, DataType, AnyRef)] =
-    st.fields.map { f =>
-      // a NESTED column mapping (any depth — the tree descends with
-      // the plan) translates the incoming LOGICAL field name to the
-      // residents' physical one
-      val pn = node.fold(f.name)(_.physicalOf(f.name))
-      val j = gt.getFieldIndex(pn)
-      val req = gt.getType(j).isRepetition(
-        org.apache.parquet.schema.Type.Repetition.REQUIRED)
-      val sub: AnyRef = f.dataType match {
-        case s: StructType =>
-          writePlan(s, gt.getType(j).asGroupType(), node.flatMap(_.children.get(f.name)))
-        case dt => writeSub(dt, gt.getType(j))
-      }
-      (j, req, f.dataType, sub)
-    }
-  // sub-plan per DataType: struct → field plan; array → (element
-  // REQUIRED flag, element sub-plan); map → [key sub-plan, value
-  // REQUIRED flag, value sub-plan]; primitive → null
-  private def writeSub(dt: DataType,
-      pt: org.apache.parquet.schema.Type): AnyRef = dt match {
-    case s: StructType => writePlan(s, pt.asGroupType())
-    case ArrayType(et, _) =>
-      val el = pt.asGroupType().getType(0).asGroupType().getType(0)
-      (el.isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED),
-        writeSub(et, el))
-    case MapType(kt, vt, _) =>
-      val kv = pt.asGroupType().getType(0).asGroupType()
-      Array[AnyRef](writeSub(kt, kv.getType(0)),
-        java.lang.Boolean.valueOf(kv.getType(1).isRepetition(
-          org.apache.parquet.schema.Type.Repetition.REQUIRED)),
-        writeSub(vt, kv.getType(1)))
-    case _ => null
-  }
-  private val nestedWritePlans: Array[AnyRef] =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      f.dataType match {
-        case s: StructType if nestedMap.contains(f.name) =>
-          writePlan(s, msg.getType(i).asGroupType(), nestedMap.get(f.name))
-        case _: StructType | _: ArrayType | _: MapType =>
-          writeSub(f.dataType, msg.getType(i))
-        case _ => null
-      }
-    }
-  private def writeStruct(g: org.apache.parquet.example.data.Group,
-      row: InternalRow, plan: Array[(Int, Boolean, DataType, AnyRef)]): Unit = {
-    var i = 0
-    while (i < plan.length) {
-      val (j, req, dt, sub) = plan(i)
-      if (row.isNullAt(i)) {
-        if (req) throw new IllegalArgumentException(
-          s"graft-snapshot write to $root: NULL into a struct field the " +
-            "resident files declare REQUIRED (NOT NULL)")
-      } else writeValue(g, j, dt, row, i, sub)
-      i += 1
-    }
-  }
-  /** One non-null value from `src` at ordinal `ord` into field `j` of
-    * `g` — the shared kernel for top-level slots, struct fields, list
-    * elements and map entries (InternalRow and ArrayData both read
-    * through SpecializedGetters). */
-  private def writeValue(g: org.apache.parquet.example.data.Group, j: Int,
-      dt: DataType,
-      src: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      ord: Int, sub: AnyRef): Unit = dt match {
-    case LongType => g.add(j, src.getLong(ord))
-    case IntegerType => g.add(j, src.getInt(ord))
-    case DoubleType => g.add(j, src.getDouble(ord))
-    case FloatType => g.add(j, src.getFloat(ord))
-    case BooleanType => g.add(j, src.getBoolean(ord))
-    case StringType => g.add(j, src.getUTF8String(ord).toString)
-    case s: StructType => writeStruct(g.addGroup(j),
-      src.getStruct(ord, s.length),
-      sub.asInstanceOf[Array[(Int, Boolean, DataType, AnyRef)]])
-    case ArrayType(et, _) =>
-      // 3-level LIST: one inner repeated group per element; a NULL
-      // element is an inner group with the slot unset, an empty array
-      // is the outer group with zero inner groups
-      val (elReq, elSub) = sub.asInstanceOf[(Boolean, AnyRef)]
-      val lg = g.addGroup(j)
-      val arr = src.getArray(ord)
-      var k = 0
-      while (k < arr.numElements()) {
-        val eg = lg.addGroup(0)
-        if (arr.isNullAt(k)) {
-          if (elReq) throw new IllegalArgumentException(
-            s"graft-snapshot write to $root: NULL array element into a " +
-              "list whose resident files declare REQUIRED elements")
-        } else writeValue(eg, 0, et, arr, k, elSub)
-        k += 1
-      }
-    case MapType(kt, vt, _) =>
-      val subs = sub.asInstanceOf[Array[AnyRef]]
-      val vReq = subs(1).asInstanceOf[java.lang.Boolean].booleanValue()
-      val mg = g.addGroup(j)
-      val m = src.getMap(ord)
-      val keys = m.keyArray()
-      val mvals = m.valueArray()
-      var k = 0
-      while (k < m.numElements()) {
-        val kvg = mg.addGroup(0)
-        writeValue(kvg, 0, kt, keys, k, subs(0)) // map keys are never null
-        if (mvals.isNullAt(k)) {
-          if (vReq) throw new IllegalArgumentException(
-            s"graft-snapshot write to $root: NULL map value into a map " +
-              "whose resident files declare REQUIRED values")
-        } else writeValue(kvg, 1, vt, mvals, k, subs(2))
-        k += 1
-      }
-    case other => sys.error(s"graft-snapshot write: unsupported nested type $other")
-  }
-  private val writer = {
-    // a copy of the loaded conf (no XML parse per file): the builder
-    // sets the write schema on the conf it is given
-    val conf = new Configuration(ParquetFooters.hadoopConf)
-    ExampleParquetWriter.builder(new HadoopPath(Paths.get(root, rel).toUri))
-      .withConf(conf).withType(msg).build()
-  }
+  private val guard = new NotNullGuard(root, schema)
+  // opened with the first row: an empty task writes no file
+  private var out: OutputWriter = _
 
   // whether this write derives omitted GENERATED columns (or reorders
   // to the table's declared layout): srcIdx then rebuilds each row —
@@ -2403,45 +2123,85 @@ private[sources] class PartitionFileWriter(root: String, rel: String,
       }
       c += 1
     }
-    val g = groups.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (row.isNullAt(i) && !schema.fields(i).nullable)
-        // the resident files declare this column REQUIRED — parquet's
-        // NOT NULL constraint; fail the task loudly instead of letting
-        // the writer die on a "not enough values" at close
-        throw new IllegalArgumentException(
-          s"graft-snapshot write to $root: NULL into column " +
-            s"${schema.fields(i).name}, which the resident files declare " +
-            "REQUIRED (NOT NULL)")
-      if (!row.isNullAt(i)) schema.fields(i).dataType match {
-        case LongType => g.add(i, row.getLong(i))
-        case IntegerType => g.add(i, row.getInt(i))
-        case DoubleType => g.add(i, row.getDouble(i))
-        case FloatType => g.add(i, row.getFloat(i))
-        case BooleanType => g.add(i, row.getBoolean(i))
-        case StringType => g.add(i, row.getUTF8String(i).toString)
-        case dt @ (_: StructType | _: ArrayType | _: MapType) =>
-          writeValue(g, i, dt, row, i, nestedWritePlans(i))
-        case other => sys.error(s"graft-snapshot write: unsupported type $other")
-      }
-      i += 1
-    }
-    writer.write(g)
-    rows += 1
+    guard(row)
+    if (out == null)
+      out = f.files.newInstance(Paths.get(root, rel).toUri.toString, f.fileSchema, task)
+    out.write(row)
   }
 
-  override def commit(): WriterCommitMessage = {
-    writer.close()
-    // an empty task file would be a useless manifest entry — drop it
-    if (rows == 0L) { java.nio.file.Files.deleteIfExists(Paths.get(root, rel)); SnapshotFileCommit("") }
-    else SnapshotFileCommit(rel)
-  }
-  override def abort(): Unit = {
-    writer.close()
-    java.nio.file.Files.deleteIfExists(Paths.get(root, rel))
-  }
+  override def commit(): WriterCommitMessage =
+    if (out == null) SnapshotFileCommit("")
+    else { out.close(); SnapshotFileCommit(rel) }
+  override def abort(): Unit =
+    try if (out != null) out.close()
+    finally java.nio.file.Files.deleteIfExists(Paths.get(root, rel))
   override def close(): Unit = ()
+}
+
+/** The table's NOT NULL constraint, checked per row ahead of the
+  * parquet writer: parquet REQUIRED slots of `schema` — top-level
+  * columns, struct fields, list elements and map values — refuse a
+  * NULL loudly, naming the slot, instead of letting the writer fail
+  * obscurely or write a file the table's readers refuse. Only the
+  * non-nullable paths are walked, so a schema with none costs
+  * nothing. */
+private[sources] final class NotNullGuard(root: String, schema: StructType)
+    extends (InternalRow => Unit) {
+  import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+  private type Check = (SpecializedGetters, Int) => Unit
+
+  /** The checks inside one non-null value of type `dt` at `path`. */
+  private def within(dt: DataType, path: String): Option[Check] = dt match {
+    case st: StructType =>
+      val fs = st.fields.zipWithIndex.flatMap { case (f, j) =>
+        slot(f.dataType, f.nullable, s"$path.${f.name}").map(j -> _) }
+      if (fs.isEmpty) None
+      else Some { (src, i) =>
+        val r = src.getStruct(i, st.length)
+        fs.foreach { case (j, check) => check(r, j) }
+      }
+    case ArrayType(et, containsNull) =>
+      slot(et, containsNull, s"$path.element").map(check => { (src, i) =>
+        val a = src.getArray(i)
+        var k = 0
+        while (k < a.numElements()) { check(a, k); k += 1 }
+      })
+    case MapType(kt, vt, valueContainsNull) =>
+      val keys = within(kt, s"$path.key")
+      val values = slot(vt, valueContainsNull, s"$path.value")
+      if (keys.isEmpty && values.isEmpty) None
+      else Some { (src, i) =>
+        val m = src.getMap(i)
+        var k = 0
+        while (k < m.numElements()) {
+          keys.foreach(_(m.keyArray(), k))
+          values.foreach(_(m.valueArray(), k))
+          k += 1
+        }
+      }
+    case _ => None
+  }
+
+  /** The checks of one slot: itself when REQUIRED, then its value. */
+  private def slot(dt: DataType, nullable: Boolean, path: String): Option[Check] = {
+    val inner = within(dt, path)
+    if (nullable) inner.map(check => (src, i) => if (!src.isNullAt(i)) check(src, i))
+    else Some { (src, i) =>
+      if (src.isNullAt(i)) throw new IllegalArgumentException(
+        s"graft-snapshot write to $root: NULL into $path, which the resident " +
+          "files declare REQUIRED (NOT NULL)")
+      inner.foreach(_(src, i))
+    }
+  }
+
+  private val columns: Array[(Int, Check)] = schema.fields.zipWithIndex.flatMap {
+    case (f, i) => slot(f.dataType, f.nullable, f.name).map(i -> _)
+  }
+
+  def apply(row: InternalRow): Unit = {
+    var i = 0
+    while (i < columns.length) { columns(i)._2(row, columns(i)._1); i += 1 }
+  }
 }
 
 private[sources] object SnapshotAggReaderFactory extends PartitionReaderFactory {

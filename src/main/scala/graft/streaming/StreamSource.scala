@@ -44,33 +44,35 @@ object FileStreamSource extends StreamSource {
       .foreach(graft.operators.Engine.deleteRecursively)
     val t0 = 1700000000000L // fixed mtimes: listing order is deterministic
     // the per-batch staging writes are INDEPENDENT jobs over disjoint
-    // slices into disjoint scratch dirs — run them concurrently from a
-    // small pool (guide §2.6: actions are only sequential because the
-    // caller invokes them sequentially; FIFO scheduling back-fills one
+    // slices into disjoint scratch dirs — run them concurrently, at
+    // most 4 at a time, each branch taking the next batch as it ends
+    // one (guide §2.6: actions are only sequential because the caller
+    // invokes them sequentially; FIFO scheduling back-fills one
     // write's task tail with the next's tasks). Each batch's content,
     // file name and fixed mtime are untouched, so the staged layout —
     // and therefore every micro-batch boundary downstream — is
     // byte-identical to the sequential run.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(batches.size, 4).max(1))
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val staged = batches.zipWithIndex.map { case ((target, df), i) =>
-        scala.concurrent.Future(scala.concurrent.blocking {
-          val scratch = graft.operators.Engine.tmpDir(s"graft_${op}_scratch_$target")
-          df.coalesce(1).write.mode("overwrite").parquet(scratch)
-          val part = graft.operators.Engine.listDir(Paths.get(scratch))
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          val dst = stage.resolve(s"$target.parquet")
-          Files.move(part, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(t0 + i * 60000L))
-        })
+    val byIndex = batches.toIndexedSeq
+    def stageOne(i: Int): Unit = {
+      val (target, df) = byIndex(i)
+      val scratch = graft.operators.Engine.tmpDir(s"graft_${op}_scratch_$target")
+      df.coalesce(1).write.mode("overwrite").parquet(scratch)
+      val part = graft.operators.Engine.listDir(Paths.get(scratch))
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val dst = stage.resolve(s"$target.parquet")
+      Files.move(part, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(t0 + i * 60000L))
+    }
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    graft.Branches.run(SparkSession.active) { b =>
+      (0 until math.min(batches.size, 4)).foreach { lane =>
+        b.fork(s"$op-stage-$lane") {
+          var i = next.getAndIncrement()
+          while (i < batches.size) { stageOne(i); i = next.getAndIncrement() }
+        }
       }
-      staged.foreach(f => scala.concurrent.Await.result(
-        f, scala.concurrent.duration.Duration(10, java.util.concurrent.TimeUnit.MINUTES)))
-    } finally pool.shutdown()
+    }
     stage.toString
   }
 

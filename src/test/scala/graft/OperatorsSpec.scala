@@ -1413,6 +1413,28 @@ class MergeSpec extends AnyFunSuite {
     assert(ST.currentVersion(root) == 2)
   }
 
+  test("a SQL MERGE commits past a dead committer's zero-byte claim") {
+    import spark.implicits._
+    val root = freshRoot("graft_merge_stale_claim")
+    val base = (1L to 40L).map(k => (k, 1.0 * k)).toDF("id", "v")
+      .repartitionByRange(4, col("id"))
+    assert(graft.streaming.SnapshotSink.appendBatch(root, base, 0L, keyCol = "id"))
+    val v = ST.currentVersion(root)
+    // a crashed committer's corpse: version v+1 claimed, never filled, old
+    val corpse = ST.manifestPath(root, v + 1)
+    java.nio.file.Files.createFile(corpse)
+    java.nio.file.Files.setLastModifiedTime(corpse,
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis - ST.StaleClaimMinAgeMs - 1000))
+    (5L to 14L).map(k => (k, 2.0 * k)).toDF("id", "v")
+      .createOrReplaceTempView("merge_claim_src")
+    spark.sql(s"""MERGE INTO '$root' AS t USING merge_claim_src AS s ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET v = s.v""").collect()
+    assert(ST.currentVersion(root) == v + 1)
+    val got = ST.read(spark, root).orderBy("id").as[(Long, Double)].collect().toSeq
+    assert(got == (1L to 40L).map(k => (k, if (k >= 5 && k <= 14) 2.0 * k else 1.0 * k)))
+  }
+
   test("widening merge refuses a changeset that retypes an existing column (ADVICE r11)") {
     import spark.implicits._
     val root = freshRoot("graft_merge_retype")

@@ -121,6 +121,21 @@ class PipelineSpec extends AnyFunSuite {
     } finally Files.deleteIfExists(blocker)
   }
 
+  test("a session that has used Observation still scores a cycle") {
+    // an Observation leaves its session holding a field that does not
+    // serialize; a scoring closure that reached the session through the
+    // fitted model's training summary failed with Task not serializable.
+    // A session of its own, so its fit is not the shared session's memo.
+    val s2 = spark.newSession()
+    val obs = org.apache.spark.sql.Observation("rows")
+    s2.range(3).observe(obs, count(lit(1)).as("n")).collect()
+    assert(obs.get("n") == 3L)
+    val w = P.freshWarehouse("c21observed")
+    assert(P.runCycle(s2, sf, w, 0) == ((true, true, true)))
+    assert(ST.read(s2, w.scores).count() ==
+      ST.read(s2, w.bronze).select("user_id").distinct().count())
+  }
+
   test("c22 serving: looked-up churn_prob ≡ one-shot c9 for the sampled users") {
     val served = P.c22ScoreServing(spark, sf).select("user_id").collect()
       .map(_.getLong(0)).toSet

@@ -1068,9 +1068,9 @@ class SnapshotRobustnessSpec extends AnyFunSuite {
       "arrays must keep decoding on the evolved table")
   }
 
-  /** The type-parity fixture's columns over `id` 1..40: types beyond
-    * the connector writer's envelope (date, decimals, binary, Spark's
-    * default INT96 timestamp, smallint) plus a key `k`. */
+  /** The type-parity fixture's columns over `id` 1..40: date,
+    * decimals, binary, Spark's default INT96 timestamp and smallint,
+    * plus a key `k`. */
   private val typedColumns = Seq(col("id").as("k"),
     expr("date_add(DATE'2024-01-01', CAST(id AS INT))").as("d"),
     expr("CAST(id * 1.5 AS DECIMAL(18,6))").as("amt"),
@@ -1089,13 +1089,26 @@ class SnapshotRobustnessSpec extends AnyFunSuite {
     rels
   }
 
+  /** `d`'s rows, binary as a comparable Seq, ordered by the leading
+    * long key. */
+  private def rows(d: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    d.collect().toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case x => x
+    }).sortBy(_.head.asInstanceOf[Long])
+
+  /** Nested columns over `id`, beside [[typedColumns]]: REQUIRED at
+    * every depth when written from these expressions (the struct field
+    * `a`, the list elements, the map values). */
+  private val nestedColumns = Seq(
+    struct(col("id").as("a"), expr("CAST(id AS STRING)").as("b")).as("st"),
+    expr("array(id, id + 1)").as("arr"),
+    expr("map(CAST(id AS STRING), CAST(id AS DOUBLE))").as("mp"))
+
   test("footer schemas equal Spark's inferred schemas, and reads plan without a job") {
     import graft.sources.{ParquetFooters, Tables}
     val root = freshRoot("graft_footer_schema")
-    val rels = typedTable(root, typedColumns ++ Seq(
-      struct(col("id").as("a"), expr("CAST(id AS STRING)").as("b")).as("st"),
-      expr("array(id, id + 1)").as("arr"),
-      expr("map(CAST(id AS STRING), CAST(id AS DOUBLE))").as("mp")))
+    val rels = typedTable(root, typedColumns ++ nestedColumns)
     // the helper's schema is the inferred one exactly, nullability and
     // nested shapes included — per file and for the table directory
     (rels.map(r => Paths.get(root, r).toString) :+ root).foreach { p =>
@@ -1127,18 +1140,13 @@ class SnapshotRobustnessSpec extends AnyFunSuite {
   }
 
   test("DSv2 type parity: date/decimal/binary/INT96 timestamp/smallint read as the path API does") {
-    // a Spark-written table whose column types go beyond the connector
-    // writer's envelope: every DSv2 read route must serve the same
+    // a Spark-written table of date/decimal/binary/timestamp/smallint
+    // columns: every DSv2 read route must serve the same
     // schema and values as SnapshotTable.read — never a physical
     // reinterpretation (date as int, decimal as its unscaled long)
     // and never a refusal (INT96 timestamps are Spark's default)
     val root = freshRoot("graft_dsv2_types")
     typedTable(root, typedColumns)
-    def rows(d: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
-      d.collect().toSeq.map(_.toSeq.map {
-        case b: Array[Byte] => b.toSeq
-        case x => x
-      }).sortBy(_.head.asInstanceOf[Long])
     def parity(what: String, got: org.apache.spark.sql.DataFrame): Unit = {
       val want = ST.read(spark, root)
       // names and types; nullability differs by design (the connector
@@ -1170,5 +1178,76 @@ class SnapshotRobustnessSpec extends AnyFunSuite {
     assert(rows(ids.select(withIds: _*)) ==
       rows(ST.readWithRowIds(spark, root).select(withIds: _*)),
       "rowIds read diverges from SnapshotTable.readWithRowIds")
+  }
+
+  test("DSv2 writes of date/decimal/binary/INT96 timestamp/smallint/nested columns read as the path API does") {
+    // a Spark-written table of every fixture column, copied through
+    // each DSv2 write route: the copy reads back equal to
+    // SnapshotTable.read of the source on both read routes, and its
+    // files declare exactly the residents' parquet schema
+    val src = freshRoot("graft_dsv2_wtypes_src")
+    val srcRels = typedTable(src, typedColumns ++ nestedColumns)
+    val want = ST.read(spark, src)
+    def footer(root: String, rel: String) =
+      graft.sources.ParquetFooters.withReader(graft.sources.ParquetFooters.inputFile(root, rel))(
+        _.getFooter.getFileMetaData.getSchema)
+    def parity(what: String, root: String, times: Int = 1): Unit = {
+      val expected = Seq.fill(times)(rows(want)).flatten.sortBy(_.head.asInstanceOf[Long])
+      Seq("path API" -> ST.read(spark, root),
+          "DSv2 load" -> spark.read.format("graft-snapshot").load(root)).foreach {
+        case (route, got) =>
+          // names and types; the connector exposes REQUIRED as NOT NULL
+          val nullable = org.apache.spark.sql.GraftShim.asNullable _
+          assert(nullable(got.schema) == nullable(want.schema),
+            s"$what via $route: ${got.schema.simpleString} vs ${want.schema.simpleString}")
+          assert(rows(got) == expected, s"$what via $route: rows diverge")
+      }
+    }
+    // path route into a fresh table
+    val fresh = freshRoot("graft_dsv2_wtypes_path")
+    want.write.format("graft-snapshot").mode("append").save(fresh)
+    parity("path-route write", fresh)
+    // path route beside Spark-written residents: the appended file is
+    // encoded exactly as they are, nullability included
+    val beside = freshRoot("graft_dsv2_wtypes_beside")
+    typedTable(beside, typedColumns ++ nestedColumns)
+    want.write.format("graft-snapshot").mode("append").save(beside)
+    parity("append beside residents", beside, times = 2)
+    val resident = footer(src, srcRels.head)
+    ST.manifestEntries(beside, ST.currentVersion(beside)).foreach(e =>
+      assert(footer(beside, e.rel) == resident, s"${e.rel} declares ${footer(beside, e.rel)}"))
+    // catalog CTAS, then INSERT INTO
+    val w = Files.createTempDirectory("graft_wtypes_cat").toString
+    spark.conf.set("spark.sql.catalog.gwty", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gwty.root", w)
+    want.createOrReplaceTempView("wtypes_src")
+    spark.sql("CREATE TABLE gwty.t AS SELECT * FROM wtypes_src")
+    parity("catalog CTAS", Paths.get(w, "t").toString)
+    spark.sql("INSERT INTO gwty.t SELECT * FROM wtypes_src")
+    parity("catalog INSERT", Paths.get(w, "t").toString, times = 2)
+  }
+
+  test("DSv2 writes refuse a NULL into a REQUIRED slot at every depth, naming it") {
+    def chain(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    val root = freshRoot("graft_dsv2_notnull")
+    typedTable(root, typedColumns ++ nestedColumns)
+    val v = ST.currentVersion(root)
+    val one = ST.read(spark, root).filter(col("k") === 1)
+    Seq(
+      "k" -> one.withColumn("k", lit(null).cast("long")),
+      "st.a" -> one.withColumn("st", struct(lit(null).cast("long").as("a"), col("st.b").as("b"))),
+      "arr.element" -> one.withColumn("arr", array(lit(null).cast("long"), lit(2L))),
+      "mp.value" -> one.withColumn("mp", map(lit("x"), lit(null).cast("double")))
+    ).foreach { case (slot, bad) =>
+      val e = intercept[Exception](bad.write.format("graft-snapshot").mode("append").save(root))
+      assert(chain(e).contains(s"NULL into $slot, which the resident files declare REQUIRED"),
+        chain(e))
+      assert(ST.currentVersion(root) == v, s"a refused NULL into $slot committed")
+    }
+    // the same row with its values intact lands
+    one.write.format("graft-snapshot").mode("append").save(root)
+    assert(ST.read(spark, root).count() == 41)
   }
 }
