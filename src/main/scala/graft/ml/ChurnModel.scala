@@ -102,13 +102,10 @@ object ChurnModel {
     * not fixed: one partition per `MatrixRowsPerPartition` users (~128MB
     * of features), floor 1. At test SF that resolves to 1 (collapsing
     * per-iteration task overhead, see fitOnTrainFold's doc); at 10⁹
-    * users it resolves to ~250 — same pipeline, no single-task stage.
-    * `graft.ml.matrixPartitions` overrides for deployments that know
-    * better. */
+    * users it resolves to ~250 — same pipeline, no single-task stage. */
   private[graft] val MatrixRowsPerPartition = 4L << 20
-  private def matrixPartitions(s: SparkSession, users: Long): Int =
-    s.conf.getOption("graft.ml.matrixPartitions").map(_.toInt).getOrElse(
-      math.max(1L, (users + MatrixRowsPerPartition - 1) / MatrixRowsPerPartition).toInt)
+  private def matrixPartitions(users: Long): Int =
+    math.max(1L, (users + MatrixRowsPerPartition - 1) / MatrixRowsPerPartition).toInt
 
   private val fitMemo = new graft.SessionMemo[(DataFrame, PipelineModel)]
 
@@ -141,7 +138,7 @@ object ChurnModel {
       val users = ParquetFooters.rowCount(s, Tables.path(d, "customer"))
       val data = featureMatrix(s, d)
         .withColumn("label", col("churned").cast("double"))
-        .coalesce(matrixPartitions(s, users))
+        .coalesce(matrixPartitions(users))
         .cache()
       val train = data.filter(pmod(col("user_id"), lit(5)) =!= 0)
       val model = pipeline.fit(train)

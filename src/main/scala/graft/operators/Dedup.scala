@@ -292,12 +292,11 @@ object Dedup {
     * length-d chain plain one-hop propagation needs d rounds (each an
     * action + 2 Spark jobs); doubling needs ~log₂(d).
     * `localCheckpoint` truncates the growing lineage each round.
-    * Returns (labels, rounds) — rounds surfaces in ScaleProbe.
+    * Returns (labels, rounds).
     * THROWS if the cap is hit unconverged: returning (or memoizing)
     * partial labels would silently corrupt every downstream keeper
-    * verdict. With doubling the cap covers diameter 2^20. */
-  private[graft] def propagateLabels(pairs: DataFrame,
-      doubling: Boolean = true): (DataFrame, Int) = {
+    * verdict. The 20-round cap covers diameter 2^20. */
+  private[graft] def propagateLabels(pairs: DataFrame): (DataFrame, Int) = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .cache()
@@ -332,9 +331,7 @@ object Dedup {
     var mass = lblMass(labels)
     var converged = false
     var iter = 0
-    // one-hop mode (doubling=false) exists only so ScaleProbe can
-    // measure the round-count drop; it needs a diameter-sized cap
-    val maxRounds = if (doubling) 20 else 200
+    val maxRounds = 20
     try {
       while (!converged && iter < maxRounds) {
         val prop = edges.join(labels, col("doc_id") === col("src"))
@@ -342,7 +339,7 @@ object Dedup {
         val grown =
           // round 1's jump is the identity (every label is its own doc_id),
           // so the label-through-label join only joins from round 2 on
-          if (!doubling || iter == 0) labels.union(prop)
+          if (iter == 0) labels.union(prop)
           else {
             val jump = labels.as("x").join(labels.as("p"), col("x.lbl") === col("p.doc_id"))
               .select(col("x.doc_id").as("doc_id"), col("p.lbl").as("lbl"))
@@ -402,9 +399,9 @@ object Dedup {
 
   /** The 100 TB form: the SAME propagation loop over d3's LSH-bucketed
     * pairs — pair generation cost tracks duplicate density instead of
-    * going quadratic under replication (ScaleProbe: d3 sublinear, d2
-    * quadratic-ish at 8×/16×). DedupSpec pins its clustering against
-    * the d2-sourced labels at test SF. */
+    * going quadratic under replication (measured on 8×/16× replicas:
+    * d3 sublinear, d2 quadratic-ish; SURVEY §5). DedupSpec pins its
+    * clustering against the d2-sourced labels at test SF. */
   def d6DedupClustersLsh(s: SparkSession, d: String): DataFrame =
     clustersOver(s, d, "d3")
 

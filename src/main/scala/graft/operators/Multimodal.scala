@@ -578,9 +578,10 @@ object Multimodal {
 
   /** m8_image_dedup_clusters — m5's duplicate pairs routed into
     * connected-component clustering, one row per image: the 100 TB
-    * answer to the 32× ScaleProbe finding that pair MATERIALIZATION is
-    * quadratic in duplicate multiplicity (60.3M pair rows at 32×, with
-    * per-pair cost rising under the memory pressure of holding them).
+    * answer to the 32×-replica finding (SURVEY §5) that pair
+    * MATERIALIZATION is quadratic in duplicate multiplicity (60.3M pair
+    * rows at 32×, with per-pair cost rising under the memory pressure
+    * of holding them).
     * A k-duplicate cluster costs k label rows here instead of k(k-1)/2
     * pair rows — the same d6→d7 discipline the text family uses:
     * pointer-doubling min-label propagation over the banded pairs,

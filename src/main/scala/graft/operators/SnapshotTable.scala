@@ -789,7 +789,10 @@ object SnapshotTable {
     }
     Files.move(tmp, manifestPath(root, v), StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
-    val ptmp = Paths.get(root, "._latest.tmp")
+    // unique like the manifest's: committers of consecutive versions
+    // refresh the pointer at once, and with one shared name the second
+    // move finds the file already moved and fails a landed commit
+    val ptmp = Paths.get(root, s"._latest.${uniqueTag()}.tmp")
     Files.write(ptmp, v.toString.getBytes)
     Files.move(ptmp, Paths.get(root, "_latest"), StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)

@@ -2046,7 +2046,16 @@ private[graft] object SnapshotCommit {
     * was empty. */
   def discard(root: String, messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case SnapshotFileCommit(rel) if rel.nonEmpty =>
-      java.nio.file.Files.deleteIfExists(Paths.get(root, rel)) }
+      deleteDataFile(root, rel) }
+
+  /** Delete a task's data file together with the `.<name>.crc` sidecar
+    * Hadoop's checksummed local file system wrote beside it. */
+  def deleteDataFile(root: String, rel: String): Unit = {
+    val file = Paths.get(root, rel)
+    java.nio.file.Files.deleteIfExists(file)
+    java.nio.file.Files.deleteIfExists(
+      file.resolveSibling(s".${file.getFileName}.crc"))
+  }
 }
 
 /** Executor-side writer: each task streams its rows into one immutable
@@ -2134,7 +2143,7 @@ private[sources] class PartitionFileWriter(f: SnapshotWriterFactory, rel: String
     else { out.close(); SnapshotFileCommit(rel) }
   override def abort(): Unit =
     try if (out != null) out.close()
-    finally java.nio.file.Files.deleteIfExists(Paths.get(root, rel))
+    finally SnapshotCommit.deleteDataFile(root, rel)
   override def close(): Unit = ()
 }
 

@@ -63,9 +63,15 @@ def main():
         oracles = json.load(fh)
 
     results = {}
-    names = [n for n in os.listdir(out_dir)
-             if os.path.isdir(os.path.join(out_dir, n))]
+    # an oracle row with no dump (Verify printed "failed" for it) fails
+    # here too, instead of silently dropping out of the count
+    names = set(oracles) | {n for n in os.listdir(out_dir)
+                            if os.path.isdir(os.path.join(out_dir, n))}
     for name in sorted(names):
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            results[name] = {"check": "oracle", "ok": False,
+                             "error": "no output dumped"}
+            continue
         spark_df = con.sql(
             f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')").df()
         if name not in oracles:
